@@ -49,47 +49,26 @@ from cupertino_nvr_spark.plans import tpch_extra  # noqa: F401,E402
 # follows in priority order — nothing is ever stranded at its raw
 # registration-order position (the r12 review finding).
 _WINDOW_PRIORITY = [  # r15 snapshot
-    'asof_ttl_overlay', 'docs_tokenizer_fertility', 'docs_train_shards',
-    'docs_unigram_lm_score', 'docs_vocab_topk',
-    'docs_wordpiece_tokenized_len', 'docs_zipf_slope',
-    'dominant_promo_suppliers', 'embedding_cosine_neardup',
-    'embedding_dim_stats', 'embedding_int8_ann', 'embedding_int8_ivf_ann',
-    'embedding_ivf_ann', 'embedding_kmeans', 'embedding_lsh_ann',
-    'embedding_lsh_ann_multiprobe', 'events_cusum_changepoints',
-    'events_cusum_segments', 'important_parts',
-    'media_doc_dedup_survivors', 'media_phash_tau_profile',
-    'min_cost_supplier', 'nation_yearly_growth', 'orders_part_pairs',
-    'parts_copurchase_pagerank', 'product_profit',
-    'supplier_concentration_hhi', 'supplier_part_variety',
-    'command_target_filter', 'command_validation',
-    'conditional_bucketing', 'confidence_array_filter',
-    'customers_fuzzy_match', 'daily_revenue_gapfill',
-    'datetime_functions', 'detection_projection',
-    'docs_curation_inc_report', 'docs_exact_dedup',
-    'docs_fingerprint_dedup', 'docs_minhash_lsh_candidates',
-    'docs_ngram_jaccard_pairs', 'docs_quality_lang', 'docs_readability',
-    'docs_simhash', 'docs_simhash_neardup', 'docs_source_quality_report',
-    'docs_token_stats', 'embedding_cosine_topk', 'embedding_ivf_pq_ann',
-    'embedding_ivf_probe_profile', 'embedding_pq_ann',
-    'embedding_pq_quant', 'embedding_prefix_rerank_ann',
-    'embedding_semdedup', 'event_type_user_overlap',
-    'event_value_median_udaf', 'events_activity_streaks',
-    'events_anomaly_zscore', 'events_cdc_apply',
-    'events_conversion_latency', 'events_funnel', 'events_heavy_hitters',
-    'events_hourly_profile', 'events_last_touch_attribution',
-    'events_markov_transitions', 'events_path_signatures',
-    'events_retention_cohorts', 'events_rfm_segments',
-    'events_sliding_throughput', 'events_state_intervals',
-    'events_stratified_sample', 'media_exact_dedup', 'media_features',
-    'media_frame_plan', 'media_patch_plan', 'docs_bpe_compression',
-    'docs_bpe_pair_stats', 'docs_bpe_tokenized_len',
-    'docs_bpe_train_merges', 'docs_c4_filters', 'docs_char_ngram_langid',
-    'docs_chunked_udtf', 'docs_classifier_score',
-    'docs_dedup_rate_by_lang', 'docs_filter_attribution',
-    'docs_gopher_quality', 'docs_hybrid_rrf_search',
-    'docs_kneser_ney_score', 'docs_langid_confusion',
-    'docs_lsh_quality_eval', 'docs_neardup_method_agreement',
-    'docs_oov_rate', 'docs_packing_efficiency', 'docs_pmi_collocations',
+    'asof_ttl_overlay', 'embedding_pq_ann', 'embedding_pq_quant',
+    'embedding_prefix_rerank_ann', 'embedding_semdedup',
+    'event_type_user_overlap', 'event_value_median_udaf',
+    'events_activity_streaks', 'events_anomaly_zscore',
+    'events_cdc_apply', 'events_conversion_latency', 'events_funnel',
+    'events_heavy_hitters', 'events_hourly_profile',
+    'events_last_touch_attribution', 'events_markov_transitions',
+    'events_path_signatures', 'events_retention_cohorts',
+    'events_rfm_segments', 'events_sliding_throughput',
+    'events_state_intervals', 'events_stratified_sample',
+    'media_exact_dedup', 'media_features', 'media_frame_plan',
+    'media_patch_plan', 'docs_bpe_compression', 'docs_bpe_pair_stats',
+    'docs_bpe_tokenized_len', 'docs_bpe_train_merges', 'docs_c4_filters',
+    'docs_char_ngram_langid', 'docs_chunked_udtf',
+    'docs_classifier_score', 'docs_dedup_rate_by_lang',
+    'docs_filter_attribution', 'docs_gopher_quality',
+    'docs_hybrid_rrf_search', 'docs_kneser_ney_score',
+    'docs_langid_confusion', 'docs_lsh_quality_eval',
+    'docs_neardup_method_agreement', 'docs_oov_rate',
+    'docs_packing_efficiency', 'docs_pmi_collocations',
     'docs_retrieval_rbo', 'docs_sequence_packing',
     'docs_softdedup_weights', 'docs_substring_dup_spans',
     'docs_token_budget_sample', 'docs_token_entropy',
@@ -142,7 +121,29 @@ _WINDOW_PRIORITY = [  # r15 snapshot
     'revenue_by_nation', 'shipping_priority', 'small_quantity_revenue',
     'top20_lineitems', 'top_orders_per_customer', 'top_supplier_revenue',
     'trailing_user_activity', 'user_event_pivot', 'user_event_unpivot',
-    'user_running_value', 'user_value_exact_stats', 'waiting_suppliers'
+    'user_running_value', 'user_value_exact_stats', 'waiting_suppliers',
+    'command_target_filter', 'command_validation',
+    'conditional_bucketing', 'confidence_array_filter',
+    'customers_fuzzy_match', 'daily_revenue_gapfill',
+    'datetime_functions', 'detection_projection',
+    'docs_curation_inc_report', 'docs_exact_dedup',
+    'docs_fingerprint_dedup', 'docs_minhash_lsh_candidates',
+    'docs_ngram_jaccard_pairs', 'docs_quality_lang', 'docs_readability',
+    'docs_simhash', 'docs_simhash_neardup', 'docs_source_quality_report',
+    'docs_token_stats', 'docs_tokenizer_fertility', 'docs_train_shards',
+    'docs_unigram_lm_score', 'docs_vocab_topk',
+    'docs_wordpiece_tokenized_len', 'docs_zipf_slope',
+    'dominant_promo_suppliers', 'embedding_cosine_neardup',
+    'embedding_cosine_topk', 'embedding_dim_stats', 'embedding_int8_ann',
+    'embedding_int8_ivf_ann', 'embedding_ivf_ann', 'embedding_ivf_pq_ann',
+    'embedding_ivf_probe_profile', 'embedding_kmeans',
+    'embedding_lsh_ann', 'embedding_lsh_ann_multiprobe',
+    'events_cusum_changepoints', 'events_cusum_segments',
+    'important_parts', 'media_doc_dedup_survivors',
+    'media_phash_tau_profile', 'min_cost_supplier',
+    'nation_yearly_growth', 'orders_part_pairs',
+    'parts_copurchase_pagerank', 'product_profit',
+    'supplier_concentration_hhi', 'supplier_part_variety'
 ]
 
 _registry.WINDOW_PRIORITY[:] = _WINDOW_PRIORITY

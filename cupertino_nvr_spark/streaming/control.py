@@ -367,7 +367,8 @@ def full_metrics_report(
     reference's ``MetricsReporter.get_full_report``
     (``metrics_reporter.py:111-156``): timestamp, instance id, current
     throughput, per-source latency reports, per-source metadata
-    (fps/resolution), and recent status updates.
+    (fps/resolution), and recent status updates; plus the latest
+    trigger's duration, watermark and per-operator state size.
 
     Pure shaping — the inputs are the ProgressListener (U4 hook), the
     collected rows of the ``per_source_latest_metrics`` plan (P8/A3:
@@ -391,6 +392,19 @@ def full_metrics_report(
         "instance_id": instance_id,
         "inference_throughput": (
             latest.get("processed_rows_per_second") if latest else None
+        ),
+        # the watchdog half of the report: how long the last trigger took,
+        # where the watermark stands and how much state each stateful
+        # operator holds
+        "stream_progress": (
+            {
+                "batch_id": latest.get("batch_id"),
+                "trigger_execution_ms": latest.get("trigger_execution_ms"),
+                "watermark": latest.get("watermark"),
+                "state_operators": latest.get("state_operators", []),
+            }
+            if latest
+            else None
         ),
         "latency_reports": [
             {
@@ -423,8 +437,8 @@ def full_metrics_report(
 
 def attach_metrics_listener(spark) -> "ProgressListener":
     """Register a StreamingQueryListener capturing per-batch progress
-    (rows/sec, batch duration, state rows) — the watchdog/metrics hook
-    (U4, reference ``interfaces.py:155-228``)."""
+    (rows/sec, trigger duration, watermark, per-operator state size) —
+    the watchdog/metrics hook (U4, reference ``interfaces.py:155-228``)."""
     listener = ProgressListener()
     spark.streams.addListener(listener)
     return listener
@@ -451,6 +465,19 @@ try:  # StreamingQueryListener import path (PySpark >= 3.4)
                     "num_input_rows": p.numInputRows,
                     "input_rows_per_second": p.inputRowsPerSecond,
                     "processed_rows_per_second": p.processedRowsPerSecond,
+                    "trigger_execution_ms": p.durationMs.get("triggerExecution"),
+                    # absent until the query has a watermark
+                    "watermark": p.eventTime.get("watermark"),
+                    "state_operators": [
+                        {
+                            "operator": op.operatorName,
+                            "num_shuffle_partitions": op.numShufflePartitions,
+                            "num_state_store_instances": op.numStateStoreInstances,
+                            "num_rows_total": op.numRowsTotal,
+                            "memory_used_bytes": op.memoryUsedBytes,
+                        }
+                        for op in p.stateOperators
+                    ],
                 }
             )
 

@@ -74,6 +74,14 @@ def synthetic_detect(source_id: pd.Series, frame_id: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+# The model is deterministic per (source_id, frame_id), but a deterministic
+# UDF may be inlined wherever its column is referenced: a filter on the
+# decoded event (parse_event_wire's validity check) is pushed below the
+# projection that calls it, and the plan then runs the model twice per
+# frame. Marking it nondeterministic keeps it in one ArrowEvalPython node.
+synthetic_detect = synthetic_detect.asNondeterministic()
+
+
 def with_synthetic_detections(frames: DataFrame, model_id: str = "synthetic-detector-v1") -> DataFrame:
     """Attach the enrichment stage to a frame(-metadata) stream; works
     identically on batch and streaming DataFrames."""

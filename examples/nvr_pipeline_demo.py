@@ -38,8 +38,6 @@ from cupertino_nvr_spark.streaming.windows import tumbling_metrics_stream
 def run_demo(duration_s: float = 12.0, n_sources: int = 4) -> dict:
     spark = get_spark("nvr-pipeline-demo")
     spark.sparkContext.setLogLevel("ERROR")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     listener = attach_metrics_listener(spark)
 
     def query_factory(config: EngineConfig):
@@ -94,7 +92,6 @@ def run_demo(duration_s: float = 12.0, n_sources: int = 4) -> dict:
         wait_for_rows(n0 + 1, duration_s + 120)
     finally:
         plane.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
     metrics_rows = spark.table("demo_metrics").collect()
     return {

@@ -1,0 +1,144 @@
+"""Session defaults sized to the machine, and the overlay stream's plan
+shape: state partitions follow the cores, the model runs once per frame,
+and the progress listener reports trigger time, watermark and state size.
+"""
+
+from __future__ import annotations
+
+import uuid
+
+from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import QueryProgressEvent
+
+from cupertino_nvr_spark.schemas import FRAME_SCHEMA
+from cupertino_nvr_spark.session import default_driver_memory, get_spark
+from cupertino_nvr_spark.streaming.asof import asof_overlay_stream
+from cupertino_nvr_spark.streaming.codec import encode_event_wire, parse_event_wire
+from cupertino_nvr_spark.streaming.control import ProgressListener, full_metrics_report
+from cupertino_nvr_spark.streaming.inference import with_synthetic_detections
+
+from tests.test_streaming import make_frames, write_batches
+
+
+def detection_events(frames):
+    """Frames -> model -> wire encode -> wire parse, as the wall receives
+    what the processor publishes."""
+    events = with_synthetic_detections(frames).select(
+        F.lit("inst-0").alias("instance_id"),
+        "source_id",
+        "frame_id",
+        F.col("frame_ts").alias("timestamp"),
+        "model_id",
+        F.lit(10.0).alias("inference_time_ms"),
+        "detections",
+        F.lit(25.0).alias("fps"),
+        F.lit(50.0).alias("latency_ms"),
+    )
+    parsed, _quarantine = parse_event_wire(encode_event_wire(events))
+    return parsed
+
+
+def test_overlay_runs_model_once_on_cores_sized_state(tmp_path):
+    spark = get_spark()
+    frames = make_frames(spark, [(1, 1, 1.0), (2, 2, 1.5), (1, 3, 4.0)])
+    events = detection_events(frames)
+    events.collect()
+    physical = events._jdf.queryExecution().executedPlan().toString()
+    # a deterministic model UDF is inlined into the wire parser's pushed
+    # validity filter, and every frame then goes through the model twice
+    assert physical.count("ArrowEvalPython") == 1, physical
+
+    write_batches([frames], f"{tmp_path}/fr")
+    stream = spark.readStream.schema(FRAME_SCHEMA).parquet(f"{tmp_path}/fr/*")
+    overlay = asof_overlay_stream(stream, detection_events(stream), ttl_seconds=2.0)
+    name = f"mem_{uuid.uuid4().hex[:8]}"
+    q = (
+        overlay.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", f"{tmp_path}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120)
+        state_ops = q.lastProgress["stateOperators"]
+    finally:
+        q.stop()
+        spark.catalog.dropTempView(name)
+    cores = spark.sparkContext.defaultParallelism
+    assert sorted(op["operatorName"] for op in state_ops) == ["stateStoreSave", "symmetricHashJoin"]
+    assert {op["numShufflePartitions"] for op in state_ops} == {2 * cores}
+
+
+def test_default_driver_memory_is_half_of_physical(tmp_path):
+    with open("/proc/meminfo") as fh:
+        total_kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    derived = default_driver_memory()
+    assert derived.endswith("m")
+    assert 0 < int(derived[:-1]) * 1024 <= total_kib
+    fake = tmp_path / "meminfo"
+    fake.write_text("MemFree:  1000 kB\nMemTotal:   16777216 kB\n")
+    assert default_driver_memory(str(fake)) == "8192m"
+
+
+PROGRESS = {
+    "id": "7f0a8a0e-6c1f-4a8f-9d0c-000000000001",
+    "runId": "7f0a8a0e-6c1f-4a8f-9d0c-000000000002",
+    "name": "overlay",
+    "timestamp": "2024-01-01T00:00:10.000Z",
+    "batchId": 3,
+    "batchDuration": 3454,
+    "durationMs": {"addBatch": 3100, "triggerExecution": 3454},
+    "eventTime": {"watermark": "2024-01-01T00:00:00.000Z"},
+    "stateOperators": [
+        {
+            "operatorName": "symmetricHashJoin",
+            "numRowsTotal": 1200,
+            "numRowsUpdated": 1000,
+            "allUpdatesTimeMs": 10,
+            "numRowsRemoved": 0,
+            "allRemovalsTimeMs": 0,
+            "commitTimeMs": 40,
+            "memoryUsedBytes": 65536,
+            "numRowsDroppedByWatermark": 0,
+            "numShufflePartitions": 8,
+            "numStateStoreInstances": 32,
+            "customMetrics": {},
+        }
+    ],
+    "sources": [],
+    "sink": {"description": "MemorySink", "numOutputRows": 1000},
+    "numInputRows": 1000,
+    "inputRowsPerSecond": 100.0,
+    "processedRowsPerSecond": 289.5,
+}
+
+
+def test_progress_listener_keeps_trigger_watermark_and_state():
+    listener = ProgressListener()
+    listener.onQueryProgress(QueryProgressEvent.fromJson({"progress": PROGRESS}))
+    state = [
+        {
+            "operator": "symmetricHashJoin",
+            "num_shuffle_partitions": 8,
+            "num_state_store_instances": 32,
+            "num_rows_total": 1200,
+            "memory_used_bytes": 65536,
+        }
+    ]
+    snap = listener.progress[-1]
+    assert snap["batch_id"] == 3
+    assert snap["trigger_execution_ms"] == 3454
+    assert snap["watermark"] == "2024-01-01T00:00:00.000Z"
+    assert snap["state_operators"] == state
+
+    rep = full_metrics_report("i1", listener, clock=lambda: 0.0)
+    assert rep["inference_throughput"] == 289.5
+    assert rep["stream_progress"] == {
+        "batch_id": 3,
+        "trigger_execution_ms": 3454,
+        "watermark": "2024-01-01T00:00:00.000Z",
+        "state_operators": state,
+    }
+    assert full_metrics_report("i1", None, clock=lambda: 0.0)["stream_progress"] is None

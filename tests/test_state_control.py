@@ -21,14 +21,6 @@ from tests.test_streaming import make_events, ts, write_batches
 pytestmark = pytest.mark.slow  # rehearsal suite: excluded from the default (gate) run, see pytest.ini
 
 
-@pytest.fixture(autouse=True, scope="module")
-def few_shuffle_partitions(spark):
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    yield
-    spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 # ---------------------------------------------------------------------------
 # T5: TTL latest-per-key keyed state
 # ---------------------------------------------------------------------------

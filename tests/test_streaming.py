@@ -96,16 +96,6 @@ def stream_dir(tmp_path):
     return str(tmp_path)
 
 
-@pytest.fixture(autouse=True, scope="module")
-def few_shuffle_partitions(spark):
-    """Stateful streaming spins one state store per shuffle partition per
-    micro-batch; 32 of them dominate wall time on row-count-3 batches."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    yield
-    spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 # ---------------------------------------------------------------------------
 # codec (P6/P9/P10 streaming form)
 # ---------------------------------------------------------------------------
