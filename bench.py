@@ -1,6 +1,13 @@
 """Benchmark harness: runs the headline query set at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line {"metric", "value", "unit", "queries", "sf"}.
+(default: the sf0.1 test tables) on local[$SPARK_GRAFT_CPUS], all in
+one session, and prints two JSON lines. The first is the full record: the
+headline timings in "queries", their sum in "value" (null with "partial"
+when any headline query failed), then "variants" and "extras" (the
+alternative kernels, the later queries and the table-maintenance OPS).
+The second, printed last, is a compact copy: the headline timings plus
+the 25 costliest variants/extras. SPARK_GRAFT_HEADLINE_ONLY=1 times the
+headline set alone. Nothing is written to disk except the OPS working
+directory (.bench_tmp/), which is removed again.
 
 Each query is forced end-to-end with a noop sink (computes every output
 column, no driver collect). The headline set covers scan+agg, multi-join,
@@ -297,262 +304,6 @@ OPS = {
 }
 
 
-def min_merge_record(
-    new: dict,
-    old: dict | None,
-    changed_def_rounds: dict[str, int] | None = None,
-    valid_keys: set[str] | None = None,
-) -> dict:
-    """Fold a fresh sweep into the existing record by per-query MINIMUM.
-
-    The file's contract is "the cheapest demonstrated cost per query" —
-    it is the prior the reprobe trigger reads — but the old write path
-    dumped the CURRENT sweep verbatim, so one drifted window silently
-    replaced the floor until someone hand-merged (r12: the driver's own
-    drifted sweep left exactly such an overwrite; the judge restored the
-    committed floor). A timing is an upper bound on a query's true cost,
-    so min over records is the only merge that never loses information.
-
-    Sections merged per-key (variants/extras/reprobe); keys only in the
-    old record are KEPT there (still valid floors). The `queries`
-    section is the exception: its keys are restricted to the CURRENT
-    headline set, because its sum IS the recorded headline value — a
-    renamed or retired headline entry left in the floor would inflate
-    every future value and could never be lowered (min only goes down
-    per key). The headline value and the `partial` flag are recomputed
-    from the MERGED headline timings, preserving main()'s
-    value-null-iff-partial invariant on the written record; other
-    run-specific annotations (suspect flags, errors) stay those of the
-    CURRENT run. An old record at a different scale factor is ignored
-    wholesale — timings are only comparable at the same sf.
-
-    ``changed_def_rounds`` (r13 ADVICE item 2): the CUMULATIVE
-    query -> definition-change-round map
-    (plans/rotation.py::CHANGED_DEF_ROUND). A floor recorded under a
-    query's OLD definition is an unreachable prior that would trip the
-    reprobe/suspect path on every future run of a changed, legitimately
-    different-cost definition — so old-record entries for a changed key
-    are DROPPED, not min-merged across definitions, and the new sweep's
-    own timing becomes the first floor of the new definition. Drops are
-    IDEMPOTENT via the record's ``def_rounds`` stamps (per changed key,
-    the definition round this file's floors were recorded under): an
-    old entry is dropped only when its stamp predates the key's change
-    round, so the SECOND sweep of a changed round min-merges against
-    the first sweep's new-definition floor instead of re-dropping it
-    (the r14 review finding: the last run's timing, not the min, used
-    to end the round as the floor whenever ambient drift hit run 2).
-    A record written before stamping existed has stamp 0 for every key
-    — conservatively old-definition (the committed records were seeded
-    with their true stamps when this mechanism shipped).
-
-    ``valid_keys`` (same ADVICE item): when given, old-record keys not
-    in it are pruned from every section — retired/renamed entries must
-    not persist as floors forever (the queries section was already
-    restricted to the current headline set because its sum IS the
-    value; this extends the hygiene to variants/extras/reprobe).
-    """
-    cdr = {
-        k: r
-        for k, r in (changed_def_rounds or {}).items()
-        if valid_keys is None or k in valid_keys
-    }
-
-    def _stamped(rec: dict) -> dict:
-        if not cdr:
-            return rec
-        out = dict(rec)
-        out["def_rounds"] = {
-            k: max(r, (rec.get("def_rounds") or {}).get(k, 0))
-            for k, r in cdr.items()
-        }
-        return out
-
-    if not old:
-        return _stamped(new)
-    try:
-        if abs(float(old.get("sf", -1)) - float(new.get("sf", -2))) > 1e-9:
-            return _stamped(new)
-    except (TypeError, ValueError):
-        return _stamped(new)
-
-    old_stamps = old.get("def_rounds") or {}
-
-    def _keep_old(k: str) -> bool:
-        return cdr.get(k, 0) <= old_stamps.get(k, 0) and (
-            valid_keys is None or k in valid_keys
-        )
-
-    out = dict(new)
-    for section in ("queries", "variants", "extras", "reprobe"):
-        merged = {
-            k: v for k, v in (old.get(section) or {}).items() if _keep_old(k)
-        }
-        for k, v in (new.get(section) or {}).items():
-            ov = merged.get(k)
-            if v is None:
-                merged.setdefault(k, None)
-            elif ov is None:
-                merged[k] = v
-            else:
-                merged[k] = min(ov, v)
-        if section == "queries":
-            merged = {k: merged[k] for k in (new.get(section) or {})}
-        out[section] = merged
-    stamps = {
-        k: v
-        for k, v in old_stamps.items()
-        if valid_keys is None or k in valid_keys
-    }
-    for k, r in cdr.items():
-        stamps[k] = max(stamps.get(k, 0), r)
-    if stamps:
-        out["def_rounds"] = stamps
-    q = out.get("queries") or {}
-    partial = not q or any(v is None for v in q.values())
-    out["value"] = None if partial else round(sum(q.values()), 3)
-    if partial:
-        out["partial"] = True
-    else:
-        out.pop("partial", None)
-    return out
-
-
-# Durable per-scale floor records (each holds ONE min-merged record).
-# sf0.1 is the round-record scale the driver sweeps; sf1 is the scale
-# that keeps DECIDING plan shapes (the r13 A/B proved an sf0.1 win can
-# invert 4.2x at sf1) — r13 VERDICT item 4: those deciding numbers get
-# the same min-merge floor record and reprobe-prior treatment as the
-# bench scale, instead of living in round-notes prose where no floor or
-# reprobe prior can challenge them. Timings are only comparable at the
-# same sf, so one file per scale.
-RECORD_FILES = {0.1: "BENCH_LOCAL.json", 1.0: "BENCH_SF1.json"}
-
-
-def record_file_for(sf: float) -> Path | None:
-    for rec_sf, name in RECORD_FILES.items():
-        if abs(rec_sf - sf) < 1e-9:
-            return Path(__file__).resolve().parent / name
-    return None
-
-
-def _write_min_merged(path: Path, new: dict) -> None:
-    # changed-definition floors are dropped at merge time; the FULL
-    # cumulative map goes in (not just this round's changes) — the
-    # record's per-key def_rounds stamps make the drop idempotent, and
-    # a change round with no bench write still invalidates at the NEXT
-    # write, whichever round that lands in. Deriving the map from
-    # rotation keeps bench.py round-agnostic (the per-round pin lives
-    # in plans/rotation.py only).
-    from cupertino_nvr_spark.plans.rotation import CHANGED_DEF_ROUND
-
-    old = None
-    if path.exists():
-        try:
-            old = json.loads(path.read_text())
-        except ValueError:
-            old = None
-    path.write_text(
-        json.dumps(
-            min_merge_record(
-                new,
-                old,
-                changed_def_rounds=dict(CHANGED_DEF_ROUND),
-                valid_keys=set(REGISTRY) | set(OPS),
-            )
-        )
-    )
-
-
-def harvest_priors(sf: float, here: Path | None = None) -> dict[str, float]:
-    """Best-known prior cost per query at this scale: min over (a) every
-    driver BENCH_r*.json stdout tail (the driver keeps only a 2000-char
-    fragment of the full per-query line — regex the "name": sec pairs
-    out of it; the filename round covers every entry) and (b) the local
-    floor records this harness writes (RECORD_FILES — full JSON, read
-    section-by-section: regexing the dump would harvest the def_rounds
-    stamps themselves as fake priors). min = the cheapest a correct plan
-    has ever demonstrably run, the right baseline for "is today's number
-    machine noise".
-
-    Definition hygiene (r13 ADVICE item 2): a floor recorded under a
-    query's OLD definition is unreachable by the new one, so an entry
-    counts only when its record's round (driver: filename; local: the
-    per-key def_rounds stamp, 0 when unstamped) is >= the key's
-    definition-change round — a changed key of unknown provenance gets
-    one-time debut treatment, self-healing at the record's next stamped
-    write.
-    """
-    import re
-
-    from cupertino_nvr_spark.plans.rotation import CHANGED_DEF_ROUND
-
-    prior: dict[str, float] = {}
-    here = here or Path(__file__).resolve().parent
-    # tails are JSON-escaped inside the driver record: \"name\": 1.2
-    pair_re = re.compile(r'\\?"([a-z0-9_]+)\\?":\s*([0-9]+(?:\.[0-9]+)?)')
-    for rec_path in sorted(here.glob("BENCH_r*.json")) + [
-        here / name for name in RECORD_FILES.values()
-    ]:
-        try:
-            rec = json.loads(rec_path.read_text())
-        except (OSError, ValueError):
-            continue
-        # timings are only comparable at the SAME scale factor: a
-        # record's sf lives top-level in both the driver wrapper and
-        # the local full line
-        if abs(float(rec.get("sf", -1)) - float(sf)) > 1e-9:
-            continue
-        m = re.match(r"BENCH_r(\d+)\.json", rec_path.name)
-        if m:
-            rec_round = int(m.group(1))
-            pairs = [(k, float(v)) for k, v in pair_re.findall(json.dumps(rec))]
-            key_rounds = dict.fromkeys((k for k, _ in pairs), rec_round)
-        else:
-            key_rounds = dict(rec.get("def_rounds") or {})
-            pairs = [
-                (k, float(v))
-                for section in ("queries", "variants", "extras", "reprobe")
-                for k, v in (rec.get(section) or {}).items()
-                if isinstance(v, (int, float)) and not isinstance(v, bool)
-            ]
-        for k, val in pairs:
-            if (k in REGISTRY or k in OPS) and CHANGED_DEF_ROUND.get(
-                k, 0
-            ) <= key_rounds.get(k, 0):
-                if val > 0 and (k not in prior or val < prior[k]):
-                    prior[k] = val
-    return prior
-
-
-def record_extra_floors(entries: dict[str, float | None], sf: float) -> Path | None:
-    """Min-merge tool-measured floors (e.g. the sf1 A/B arms) into the
-    scale's durable record, under ``extras``.
-
-    Keys must be REGISTRY/OPS names (``valid_keys`` prunes anything
-    else at the next merge). The synthetic record carries
-    ``queries: {headline: None}`` so the merge KEEPS every existing
-    headline floor (a None timing never erases a floor) and the
-    value-null-iff-partial invariant is recomputed from the merged
-    state, not clobbered by the tool write.
-    """
-    path = record_file_for(float(sf))
-    if path is None:
-        return None
-    new = {
-        "metric": "headline_queries_total_sec",
-        "value": None,
-        "unit": "sec",
-        "queries": {name: None for name in HEADLINE},
-        "variants": {},
-        "extras": dict(entries),
-        "reprobe": {},
-        "sf": float(sf),
-        "partial": True,
-    }
-    _write_min_merged(path, new)
-    return path
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -632,119 +383,6 @@ def main() -> None:
                 extras[name] = None
         shutil.rmtree(scratch, ignore_errors=True)
 
-    # Outlier isolation (VERDICT r6 #6): on this single-JVM box an extra
-    # can sporadically read 3-15x its true cost when GC/memory pressure
-    # lands mid-query (docs_ngram_novelty: 20.7 s in bench context,
-    # 1.9-2.5 s warm isolated). Any extra above the threshold is re-timed
-    # in its OWN fresh session (stop + new JVM — round 7 showed one
-    # shared reprobe session inherits a bad machine/JVM state and
-    # "confirms" every phantom at once: pagerank 55.5 s sweep / 57.4 s
-    # shared-session reprobe vs 9.7-10.0 s truly isolated), with EVERY
-    # base table plus the UDF workers warmed first (cold probes overstate
-    # ~4x, and the outlier-prone extras read documents/embeddings, not
-    # just events). Both numbers go on the record: the sweep number stays
-    # in `extras` (comparable with past rounds), the isolated number
-    # lands in `reprobe`. A reprobe far below the sweep number marks the
-    # sweep number as scheduling noise, not a plan regression. The prior
-    # round's recorded number (latest BENCH_r*.json) is the third vote:
-    # when sweep AND reprobe BOTH exceed it by >2x with no plan change
-    # the machine itself is suspect, so the name is listed under
-    # `suspect_machine_state` instead of entering the record unchallenged.
-    # Disable with SPARK_GRAFT_NO_REPROBE=1.
-    #
-    # Trigger (r8 judge note): the old absolute threshold re-timed the
-    # PERMANENT top decile every run — nine reprobes in r8, all in-band,
-    # minutes of bench time for no information. Now the prior record is
-    # consulted FIRST: a query with a prior number reprobes only when the
-    # sweep exceeds 2x its best recorded cost (a genuine anomaly vs its
-    # own history); only queries with NO prior record (new debuts) use
-    # the absolute threshold for their one-time isolation check.
-    reprobe: dict[str, float | None] = {}
-    suspect: list[str] = []
-    reprobe_threshold = float(os.environ.get("SPARK_GRAFT_REPROBE_SEC", "3.0"))
-
-    prior = harvest_priors(float(sf))
-
-    # absolute floor on prior-relative anomalies: 2x a 0.3 s prior is
-    # scheduling noise, not a regression worth a fresh-JVM probe.
-    # VARIANTS are in the sweep too (r11 VERDICT item 3: the r11 driver
-    # sweep carried an unexplained 11.2 s embedding_cosine_neardup_lsh_fast
-    # — 2.9-4.2 s clean — that nothing challenged because only extras
-    # were reprobe-eligible); kernel twins get the same prior-relative
-    # anomaly treatment as every other recorded entry.
-    reprobe_floor = float(os.environ.get("SPARK_GRAFT_REPROBE_FLOOR", "1.5"))
-    # The op_* maintenance entries are challenge-eligible too (r12 VERDICT
-    # item 3: the r12 artifact carried op_zorder_events at 11.9 s vs its
-    # 2.93 s record, unchallenged, because ops were exempt from the
-    # sweep). Trigger rule: ops re-probe at >3x their best recorded cost
-    # instead of the queries' 2x — their wall-clock includes parquet
-    # WRITES (file commit + fsync on a shared disk), which on this box
-    # swings wider than pure-compute queries even in quiet windows; 3x
-    # still catches the r12-class 4x outlier while not re-timing a
-    # write-noisy op every run.
-    OPS_REPROBE_MULT = 3.0
-    sweep = dict(extras)
-    sweep.update(variants)
-
-    def _trigger(name: str) -> float:
-        mult = OPS_REPROBE_MULT if name in OPS else 2.0
-        return max(reprobe_floor, mult * prior[name])
-
-    outliers = [
-        n
-        for n, t in sweep.items()
-        if t is not None
-        and (t > _trigger(n) if n in prior else t > reprobe_threshold)
-    ]
-    if outliers and not headline_only and os.environ.get("SPARK_GRAFT_NO_REPROBE") != "1":
-        for name in outliers:
-            spark.stop()
-            spark = get_spark(f"cupertino_nvr_spark-bench-reprobe-{name}")
-            try:
-                for table in ("events", "documents", "embeddings", "orders",
-                              "lineitem", "customer", "part"):
-                    load_table(spark, table, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                warm = spark.range(64).selectExpr("id", "cast(id as string) s")
-                warm.mapInPandas(lambda it: it, warm.schema).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-            except Exception as exc:
-                errors[f"warm:reprobe:{name}"] = repr(exc)[:200]
-            try:
-                t0 = time.perf_counter()
-                if name in OPS:
-                    # time the op call ONLY — the scratch rmtree stays
-                    # outside the timed window, matching the main sweep's
-                    # measurement (which cleans up after the loop), so the
-                    # reprobe number is comparable to the 3x trigger it is
-                    # judged against (r13 ADVICE item 1)
-                    op_scratch = str(
-                        Path(__file__).resolve().parent / ".bench_tmp_reprobe"
-                    )
-                    try:
-                        OPS[name](spark, sf_dir, op_scratch)
-                        elapsed = time.perf_counter() - t0
-                    finally:
-                        shutil.rmtree(op_scratch, ignore_errors=True)
-                else:
-                    REGISTRY[name].spark(spark, sf_dir).write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    elapsed = time.perf_counter() - t0
-                reprobe[name] = round(elapsed, 3)
-            except Exception as exc:
-                errors[f"reprobe:{name}"] = repr(exc)[:200]
-                reprobe[name] = None
-            if (
-                name in prior
-                and reprobe[name] is not None
-                and sweep[name] > _trigger(name)
-                and reprobe[name] > _trigger(name)
-            ):
-                suspect.append(name)
-
     # a degraded total (some headline query errored) must not be mistaken
     # for an improvement in round-over-round comparisons: emit null + an
     # explicit partial flag instead of a silently-shrunken sum
@@ -759,53 +397,17 @@ def main() -> None:
         "queries": timings,
         "variants": variants,
         "extras": extras,
-        "reprobe": reprobe,
         "sf": float(sf),
     }
-    if suspect:
-        # sweep AND fresh-session reprobe both >2x the prior round's
-        # recorded number: a true regression would require a plan change,
-        # so flag loudly for a human/judge to re-measure on a quiet box
-        result["suspect_machine_state"] = sorted(suspect)
-    # wall-to-wall suspect flags (r14 carried 17, spanning touched AND
-    # untouched queries) mean the WINDOW was degraded, not the plans —
-    # one top-level flag so round-over-round PERF comparisons self-label
-    # instead of reading ambient drift as N simultaneous regressions.
-    # Threshold 5: quiet-window sweeps on this box carry 0-2 flags.
-    if len(suspect) >= 5:
-        result["ambient_degraded"] = True
     if partial:
         result["partial"] = True
     if errors:
         result["errors"] = errors
     print(json.dumps(result))
-    # full per-query record for the NEXT run's prior-cost baseline (the
-    # driver's own record keeps only a stdout tail fragment). Only the
-    # recorded scales persist (RECORD_FILES: sf0.1 -> BENCH_LOCAL.json,
-    # sf1 -> BENCH_SF1.json — r13 VERDICT item 4) — a sf0.001 smoke run
-    # must not clobber the round-record priors (each file holds ONE
-    # record). Min-merge, never overwrite: the file is the cheapest
-    # demonstrated cost per query (the reprobe trigger's prior), and a
-    # drifted sweep must not clobber the floor. Headline-only sweeps
-    # record too (safe under min-merge: their empty sections keep every
-    # existing floor — sf1 runs are usually headline-only because the
-    # deliberately-quadratic extras have no business at sf1).
-    record_path = record_file_for(float(sf))
-    if record_path is not None:
-        try:
-            _write_min_merged(record_path, result)
-        except OSError:
-            pass
-    # BENCH_r05 was parsed:null because the driver's stdout capture kept
-    # only a TAIL of the output and the full per-query line (~6 KB) lost
-    # its opening brace. Print a second, compact record LAST so any
-    # tail-capture window still contains one complete, parseable JSON
-    # line — and (r10 judge item 7) make that line carry the per-query
-    # detail a reader of the round artifact actually needs: every
-    # headline timing plus the TOP-COST extras/variants (the entries the
-    # design-for-scale audit reads), trimmed to fit a 2000-char tail.
-    # The full line above stays for humans and complete per-query diffs
-    # (also persisted to BENCH_LOCAL.json at the record scale).
+    # A second, compact record goes LAST, so a reader that keeps only the
+    # tail of stdout (the full line above runs to ~6 KB) still gets one
+    # complete JSON line: every headline timing plus the 25 costliest
+    # extras/variants, small enough for a 2000-char tail.
     compact = {
         "metric": "headline_queries_total_sec",
         "value": total,
@@ -822,20 +424,12 @@ def main() -> None:
                 key=lambda kv: -kv[1],
             )[:25]
         ),
-        "full_record": "BENCH_LOCAL.json",
     }
-    if suspect:
-        compact["suspect_machine_state"] = sorted(suspect)
-    if len(suspect) >= 5:
-        compact["ambient_degraded"] = True
-    if reprobe:
-        compact["reprobe"] = reprobe
     if partial:
         compact["partial"] = True
         compact["error_queries"] = sorted(errors)
     sys.stdout.flush()
     print(json.dumps(compact))
-
 
 if __name__ == "__main__":
     main()

@@ -5,17 +5,12 @@ from cupertino_nvr_spark.plans.registry import (  # noqa: F401
     all_queries,
     all_oracles,
 )
-from cupertino_nvr_spark.plans import registry as _registry
 
-# Importing the plan modules populates REGISTRY. The driver's correctness
-# gate samples the FIRST 50 entries of all_queries() (verified r5-r13: the
-# CORRECTNESS key set equals list(all_queries())[:50]), so all_queries()
-# orders its output by an explicit coverage-rotation priority list
-# (registry.WINDOW_PRIORITY — an ordered VIEW; REGISTRY itself keeps
-# registration order, per the r8 advisor note). Every declared query,
-# sampled or not, is verified against its DuckDB oracle each round by
-# tests/test_registry_oracle.py at sf0.001 (CI) and sf0.01 (round-end
-# rehearsal, the driver's scale).
+# Importing the plan modules populates REGISTRY in registration order,
+# which is the order all_queries() and all_oracles() return; flagship
+# goes first so asof_ttl_overlay, the entry() query, leads both. Every
+# declared query is checked against its DuckDB oracle by
+# tests/test_registry_oracle.py.
 from cupertino_nvr_spark.plans import flagship  # noqa: F401,E402
 from cupertino_nvr_spark.plans import temporal  # noqa: F401,E402
 from cupertino_nvr_spark.plans import event_domain  # noqa: F401,E402
@@ -24,126 +19,3 @@ from cupertino_nvr_spark.plans import commands  # noqa: F401,E402
 from cupertino_nvr_spark.plans import llm  # noqa: F401,E402
 from cupertino_nvr_spark.plans import relational  # noqa: F401,E402
 from cupertino_nvr_spark.plans import tpch_extra  # noqa: F401,E402
-
-# r15 sampled-window priority — GENERATED, not hand-typed (r13 VERDICT
-# item 2): `python tools/gen_window.py` derives it from the committed
-# CORRECTNESS_r* history (via `git show HEAD:` — a driver artifact
-# landing in the working tree mid-round cannot change it) plus the
-# per-round debut/changed-definition pins in plans/rotation.py, and
-# tests/test_registry_order.py asserts this literal equals the
-# generator's output, so a hand-edit that drifts from the policy is a
-# red test. Policy (plans/rotation.py::generate_window_priority):
-#   1  flagship (always in-window, green every round)
-#   2  debuts + never-driver-green queries (debut-in-window policy) —
-#      r14: docs_simhash_neardup_uncapped, the streaming-parity ANCHOR
-#      (r13 VERDICT item 3): the exact batch form the simhash stream
-#      twin is pinned equal to, now externally hash-confirmed
-#   3  changed-definition rows (r13 policy) — r14:
-#      docs_classifier_calibration (bins now computed on the fixed-point
-#      kp6 integer, r13 ADVICE item 3)
-#   4  staleness fill, stalest last-green round first, alphabetical
-#      within a class — r14: the 25 remaining r9-stale rows, then the
-#      first 22 of the 49 r10-stale rows; the other 27 r10 rows directly
-#      follow the window (first in line for r15).
-# The literal covers EVERY declared query, so overflow (entries 51+)
-# follows in priority order — nothing is ever stranded at its raw
-# registration-order position (the r12 review finding).
-_WINDOW_PRIORITY = [  # r15 snapshot
-    'asof_ttl_overlay', 'embedding_pq_ann', 'embedding_pq_quant',
-    'embedding_prefix_rerank_ann', 'embedding_semdedup',
-    'event_type_user_overlap', 'event_value_median_udaf',
-    'events_activity_streaks', 'events_anomaly_zscore',
-    'events_cdc_apply', 'events_conversion_latency', 'events_funnel',
-    'events_heavy_hitters', 'events_hourly_profile',
-    'events_last_touch_attribution', 'events_markov_transitions',
-    'events_path_signatures', 'events_retention_cohorts',
-    'events_rfm_segments', 'events_sliding_throughput',
-    'events_state_intervals', 'events_stratified_sample',
-    'media_exact_dedup', 'media_features', 'media_frame_plan',
-    'media_patch_plan', 'docs_bpe_compression', 'docs_bpe_pair_stats',
-    'docs_bpe_tokenized_len', 'docs_bpe_train_merges', 'docs_c4_filters',
-    'docs_char_ngram_langid', 'docs_chunked_udtf',
-    'docs_classifier_score', 'docs_dedup_rate_by_lang',
-    'docs_filter_attribution', 'docs_gopher_quality',
-    'docs_hybrid_rrf_search', 'docs_kneser_ney_score',
-    'docs_langid_confusion', 'docs_lsh_quality_eval',
-    'docs_neardup_method_agreement', 'docs_oov_rate',
-    'docs_packing_efficiency', 'docs_pmi_collocations',
-    'docs_retrieval_rbo', 'docs_sequence_packing',
-    'docs_softdedup_weights', 'docs_substring_dup_spans',
-    'docs_token_budget_sample', 'docs_token_entropy',
-    'docs_vocab_coverage', 'docs_winnowing_fingerprints',
-    'embedding_ann_recall_eval', 'embedding_eval_decontam',
-    'embedding_ivf_pq_recall_eval', 'embedding_margin_cap_profile',
-    'events_stickiness_weekly', 'events_type_hour_chisq',
-    'events_user_lifecycle', 'events_value_mad', 'json_props_extract',
-    'math_functions', 'orders_seasonality', 'per_source_latest_metrics',
-    'rate_limited_events', 'sessionize_events', 'source_id_remap',
-    'string_functions', 'topic_codec', 'tumbling_daily_metrics',
-    'uptime_and_latency_metrics', 'validation_dead_letter',
-    'wall_grid_plan', 'customer_order_bracket',
-    'customer_order_distribution', 'customers_with_orders',
-    'customers_without_orders', 'disjunctive_part_revenue',
-    'docs_cluster_bcubed', 'docs_substring_excise_plan',
-    'docs_unigram_lm_train', 'docs_unigram_segment',
-    'docs_wordpiece_train_merges', 'embedding_cosine_neardup_lsh',
-    'embedding_hard_negatives', 'embedding_int8_quant',
-    'embedding_ivf_cell_budget_profile', 'embedding_knn_label_eval',
-    'embedding_margin_pairs', 'embedding_mmr_rerank',
-    'embedding_pc1_outliers', 'embedding_power_iteration_pc1',
-    'embedding_semdedup_lsh', 'embedding_silhouette', 'event_gaps',
-    'event_type_distinct_users', 'events_ab_test', 'events_cuped',
-    'events_daily_acf', 'events_ewma_anomaly', 'events_holt_winters',
-    'events_k_anonymity', 'events_ks_test',
-    'events_markov_removal_effect', 'events_psi_drift',
-    'events_session_survival', 'forecast_revenue', 'idle_rich_customers',
-    'large_volume_orders', 'latest_event_per_user', 'lineitem_cube',
-    'market_share', 'media_doc_dup_clusters', 'media_phash_neardup',
-    'media_phash_pixels', 'media_resize_plan', 'media_text_pairs',
-    'nation_presence_set_ops', 'nation_region_broadcast',
-    'orders_open_backlog', 'parts_copurchase_lift',
-    'customer_value_distribution', 'docs_bigram_lm_score',
-    'docs_bm25_search', 'docs_cdc_chunk_dedup', 'docs_chunked',
-    'docs_classifier_calibration', 'docs_contamination',
-    'docs_curation_report', 'docs_dedup_survivors', 'docs_dsir_weights',
-    'docs_dup_clusters', 'docs_hot_ngram_coverage',
-    'docs_lang_balanced_sample', 'docs_length_band_filter',
-    'docs_lsh_tuning_profile', 'docs_minhash_jaccard_estimate',
-    'docs_mixture_weights', 'docs_ngram_novelty',
-    'docs_perplexity_buckets', 'docs_pii_scrub',
-    'docs_repetition_quality', 'docs_simhash_neardup_uncapped',
-    'docs_substring_excised_stats', 'docs_tfidf_topterms',
-    'nation_volume_shipping', 'order_price_stats', 'order_priority_check',
-    'orders_above_avg', 'orders_benford', 'orders_grouping_sets',
-    'orders_rollup', 'premium_lineitems_theta', 'pricing_summary',
-    'promo_revenue_ratio', 'quantity_price_correlation',
-    'returned_item_revenue', 'returnflag_priority_counts',
-    'revenue_by_nation', 'shipping_priority', 'small_quantity_revenue',
-    'top20_lineitems', 'top_orders_per_customer', 'top_supplier_revenue',
-    'trailing_user_activity', 'user_event_pivot', 'user_event_unpivot',
-    'user_running_value', 'user_value_exact_stats', 'waiting_suppliers',
-    'command_target_filter', 'command_validation',
-    'conditional_bucketing', 'confidence_array_filter',
-    'customers_fuzzy_match', 'daily_revenue_gapfill',
-    'datetime_functions', 'detection_projection',
-    'docs_curation_inc_report', 'docs_exact_dedup',
-    'docs_fingerprint_dedup', 'docs_minhash_lsh_candidates',
-    'docs_ngram_jaccard_pairs', 'docs_quality_lang', 'docs_readability',
-    'docs_simhash', 'docs_simhash_neardup', 'docs_source_quality_report',
-    'docs_token_stats', 'docs_tokenizer_fertility', 'docs_train_shards',
-    'docs_unigram_lm_score', 'docs_vocab_topk',
-    'docs_wordpiece_tokenized_len', 'docs_zipf_slope',
-    'dominant_promo_suppliers', 'embedding_cosine_neardup',
-    'embedding_cosine_topk', 'embedding_dim_stats', 'embedding_int8_ann',
-    'embedding_int8_ivf_ann', 'embedding_ivf_ann', 'embedding_ivf_pq_ann',
-    'embedding_ivf_probe_profile', 'embedding_kmeans',
-    'embedding_lsh_ann', 'embedding_lsh_ann_multiprobe',
-    'events_cusum_changepoints', 'events_cusum_segments',
-    'important_parts', 'media_doc_dedup_survivors',
-    'media_phash_tau_profile', 'min_cost_supplier',
-    'nation_yearly_growth', 'orders_part_pairs',
-    'parts_copurchase_pagerank', 'product_profit',
-    'supplier_concentration_hhi', 'supplier_part_variety'
-]
-
-_registry.WINDOW_PRIORITY[:] = _WINDOW_PRIORITY

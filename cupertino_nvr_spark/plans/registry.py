@@ -2,7 +2,8 @@
 query with (a) a Spark DataFrame program and (b) an equivalent ANSI-SQL
 oracle string for DuckDB, so the driver can hash-compare results at
 sf0.01. Column names are the contract: alias every computed column
-identically in both forms.
+identically in both forms. REGISTRY, all_queries() and all_oracles() all
+keep registration order (plans/__init__.py imports the flagship first).
 """
 
 from __future__ import annotations
@@ -33,22 +34,6 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-# Coverage-rotation priority for the driver's sampled window: the driver's
-# correctness gate samples list(all_queries())[:50], so all_queries() /
-# all_oracles() order their output by this list (names first, in order;
-# everything else in registration order). plans/__init__.py fills it
-# in-place after the plan modules register. REGISTRY itself stays in
-# registration order — the rotation is an ordered VIEW, not an in-place
-# mutation of the shared dict (r8 advisor note).
-WINDOW_PRIORITY: list[str] = []
-
-
-def ordered_names() -> list[str]:
-    """Registry names with the window-priority rotation applied."""
-    prioritized = [n for n in WINDOW_PRIORITY if n in REGISTRY]
-    pset = set(prioritized)
-    return prioritized + [n for n in REGISTRY if n not in pset]
-
 
 def register(
     name: str, oracle: str | None, doc: str = "", bench_only: bool = False
@@ -69,19 +54,14 @@ def register(
 
 
 def all_queries() -> dict[str, SparkQuery]:
-    """Driver-declared queries: every entry has an oracle_sql() twin.
-
-    Ordered by the sampled-window rotation (WINDOW_PRIORITY first)."""
-    return {
-        name: REGISTRY[name].spark
-        for name in ordered_names()
-        if not REGISTRY[name].bench_only
-    }
+    """Declared queries (what __spark_entry__.queries() exposes), in
+    registration order: every entry has an oracle_sql() twin."""
+    return {name: spec.spark for name, spec in REGISTRY.items() if not spec.bench_only}
 
 
 def all_oracles() -> dict[str, str]:
     return {
-        name: REGISTRY[name].oracle
-        for name in ordered_names()
-        if REGISTRY[name].oracle is not None and not REGISTRY[name].bench_only
+        name: spec.oracle
+        for name, spec in REGISTRY.items()
+        if spec.oracle is not None and not spec.bench_only
     }

@@ -1,6 +1,7 @@
 """Session defaults sized to the machine, and the overlay stream's plan
 shape: state partitions follow the cores, the model runs once per frame,
-and the progress listener reports trigger time, watermark and state size.
+the state stays bounded as the watermark advances, and the progress
+listener reports trigger time, watermark and state size.
 """
 
 from __future__ import annotations
@@ -38,6 +39,27 @@ def detection_events(frames):
     return parsed
 
 
+def run_overlay(frames, checkpoint):
+    """Run the overlay over a frame stream to the end of its input; return
+    the progress report of every micro-batch."""
+    overlay = asof_overlay_stream(frames, detection_events(frames), ttl_seconds=2.0)
+    name = f"mem_{uuid.uuid4().hex[:8]}"
+    q = (
+        overlay.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(180)
+        return q.recentProgress
+    finally:
+        q.stop()
+        frames.sparkSession.catalog.dropTempView(name)
+
+
 def test_overlay_runs_model_once_on_cores_sized_state(tmp_path):
     spark = get_spark()
     frames = make_frames(spark, [(1, 1, 1.0), (2, 2, 1.5), (1, 3, 4.0)])
@@ -50,25 +72,37 @@ def test_overlay_runs_model_once_on_cores_sized_state(tmp_path):
 
     write_batches([frames], f"{tmp_path}/fr")
     stream = spark.readStream.schema(FRAME_SCHEMA).parquet(f"{tmp_path}/fr/*")
-    overlay = asof_overlay_stream(stream, detection_events(stream), ttl_seconds=2.0)
-    name = f"mem_{uuid.uuid4().hex[:8]}"
-    q = (
-        overlay.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", f"{tmp_path}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        assert q.awaitTermination(120)
-        state_ops = q.lastProgress["stateOperators"]
-    finally:
-        q.stop()
-        spark.catalog.dropTempView(name)
+    state_ops = run_overlay(stream, f"{tmp_path}/ckpt")[-1]["stateOperators"]
     cores = spark.sparkContext.defaultParallelism
     assert sorted(op["operatorName"] for op in state_ops) == ["stateStoreSave", "symmetricHashJoin"]
     assert {op["numShufflePartitions"] for op in state_ops} == {2 * cores}
+
+
+def test_overlay_state_stays_bounded_across_batches(tmp_path):
+    """Frame time jumps 100 s per micro-batch, far past the 10 s watermark.
+    Batch N's watermark comes from batch N-1's frames, so the state holds
+    at most two batches of rows: its size at batch 1 caps every batch."""
+    spark = get_spark()
+    n_batches = 5
+    batches = [
+        make_frames(spark, [(cam, k, 100.0 * b + 0.5 * k) for cam in (1, 2) for k in range(5)])
+        for b in range(n_batches)
+    ]
+    write_batches(batches, f"{tmp_path}/fr")
+    stream = (
+        spark.readStream.schema(FRAME_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{tmp_path}/fr/*")
+    )
+    progress = run_overlay(stream, f"{tmp_path}/ckpt")
+    assert sum(p["numInputRows"] > 0 for p in progress) == n_batches
+    rows = {}
+    for p in progress:
+        for op in p["stateOperators"]:
+            rows.setdefault(op["operatorName"], {})[p["batchId"]] = op["numRowsTotal"]
+    assert sorted(rows) == ["stateStoreSave", "symmetricHashJoin"]
+    for op_rows in rows.values():
+        assert max(op_rows.values()) <= op_rows[1], rows
 
 
 def test_default_driver_memory_is_half_of_physical(tmp_path):
