@@ -50,10 +50,11 @@ HEADLINE = [
 ]
 
 # timed and reported, but NOT in the headline total: alternative physical
-# kernels for the same logical results, so the headline stays comparable
-# across rounds while the kernel deltas are on record. embedding_cosine_topk
-# (the quadratic exact baseline) appears here with its blocked kernel so
-# the HOF-vs-block-matmul delta is measured on the heaviest scoring load.
+# forms of headline results (the block-matmul `_fast` kernels, multi-probe
+# LSH, int8 and sketch forms) and the LSH-blocked near-dup chain.
+# embedding_cosine_topk (the quadratic exact baseline) appears here with
+# its blocked kernel so the HOF-vs-block-matmul delta is measured on the
+# heaviest scoring load.
 VARIANTS = [
     "embedding_lsh_ann_fast",
     "embedding_lsh_ann_multiprobe",
@@ -63,16 +64,12 @@ VARIANTS = [
     "embedding_int8_ann",
     "docs_chunked_udtf",
     "event_type_user_overlap_sketch",
-    "embedding_semdedup_fast",
     "embedding_cosine_neardup_lsh",
     "embedding_semdedup_lsh",
-    "embedding_cosine_neardup_lsh_fast",
-    "embedding_semdedup_lsh_fast",
-    "embedding_margin_pairs_fast",
 ]
 
-# also timed outside the headline total: queries added after round 1
-# (keeping the headline set fixed keeps round-over-round totals comparable)
+# also timed outside the headline total: every other timed query, in the
+# order the queries were added to the engine
 EXTRAS = [
     "docs_pii_scrub",
     "docs_dup_clusters",
@@ -201,7 +198,6 @@ EXTRAS = [
     "events_holt_winters",
     "docs_substring_excise_plan",
     "docs_cluster_bcubed",
-    # r10 debuts
     "docs_substring_excised_stats",
     "docs_wordpiece_tokenized_len",
     "events_cusum_changepoints",
@@ -209,7 +205,6 @@ EXTRAS = [
     "docs_lsh_tuning_profile",
     "media_doc_dedup_survivors",
     "media_phash_tau_profile",
-    # r11 debuts
     "docs_curation_inc_report",
     "embedding_margin_pairs",
     "embedding_ivf_pq_ann",
@@ -218,23 +213,20 @@ EXTRAS = [
     "parts_copurchase_lift",
     "docs_source_quality_report",
     "docs_simhash_neardup",
-    # r12 debuts
     "embedding_ivf_pq_recall_eval",
     "embedding_margin_cap_profile",
     "docs_neardup_method_agreement",
     "embedding_eval_decontam",
     "docs_classifier_calibration",
-    # r13 debuts
     "embedding_ivf_cell_budget_profile",
-    # r14 debuts
     "docs_simhash_neardup_uncapped",
 ]
 
 
 # table-maintenance operators (operators/layout.py, incremental.py,
 # compaction.py): not registry queries — they write files / maintain a
-# materialization — but their constants belong on the round-over-round
-# record just like the queries (VERDICT r5 #6). Each returns None and is
+# materialization — but their constants are timed alongside the queries.
+# Each returns None and is
 # timed end-to-end, scratch space under .bench_tmp/ (gitignored).
 def _op_zorder_events(spark, sf_dir: str, scratch: str) -> None:
     """Z-order a day-partitioned events copy on (user_id, value): the
@@ -340,9 +332,10 @@ def main() -> None:
 
     def timed(name: str, include_build: bool = False) -> float:
         # headline/variants time execution only (py4j plan construction is
-        # ~0.5 s of driver-side RPC noise per query, not cluster work, and
-        # round-1 headline numbers were recorded exec-only — keep them
-        # comparable). extras are timed build-INCLUSIVE because iterative
+        # ~0.5 s of driver-side RPC noise per query, not cluster work; a
+        # query that collects a bounded side at build — IVF centroids,
+        # blocked-kernel probes — keeps that job out of its number).
+        # extras are timed build-INCLUSIVE because iterative
         # operators (docs_dup_clusters' label-propagation loop) do their
         # convergence work while building the final DataFrame.
         t0 = time.perf_counter()
@@ -384,7 +377,7 @@ def main() -> None:
         shutil.rmtree(scratch, ignore_errors=True)
 
     # a degraded total (some headline query errored) must not be mistaken
-    # for an improvement in round-over-round comparisons: emit null + an
+    # for an improvement: emit null + an
     # explicit partial flag instead of a silently-shrunken sum
     partial = any(t is None for t in timings.values())
     total = (

@@ -515,7 +515,6 @@ def embedding_cell_members(
     max_cells: int | None = None,
     n_assign: int = 2,
     sim_decimals: int = 6,
-    kernel: str = "hof",
     n_rows: int | None = None,
 ) -> DataFrame:
     """Multi-probe IVF cell membership: (member_id, mvec, cell_id), one
@@ -526,16 +525,16 @@ def embedding_cell_members(
     membership the registered near-dup family pays for — candidate volume
     and base-pair co-location can be measured per ``max_cells`` setting
     without scoring the candidate stream (the profile's whole point: the
-    Σ|cell|² term is a function of membership alone)."""
+    Σ|cell|² term is a function of membership alone). Assignment is one
+    ``similarity.assign_cells_arrow`` pass (centroid matrix in the task
+    closure): no n x |C| row materialization and no member-keyed
+    exchange carrying the vector."""
     from cupertino_nvr_spark.llm.similarity import (
         IVF_MAX_CELLS,
-        _rounded_negsim,
         as_double,
         assign_cells_arrow,
-        centroid_struct_array,
         ensure_min_parallelism,
         ivf_centroids,
-        norm,
     )
 
     centroids = ivf_centroids(
@@ -552,49 +551,8 @@ def embedding_cell_members(
             F.col(id_col).alias("member_id"), as_double(F.col(vec_col)).alias("mvec")
         )
     )
-    if kernel != "hof":
-        # Arrow kernel: a pandas UDF cannot run inside a HOF lambda, but
-        # one mapInPandas pass with the centroid matrix in the closure
-        # CAN own the whole top-n assignment — same decision order as
-        # the window it replaces, no n x |C| cross join, no member-keyed
-        # exchange carrying the vector (similarity.assign_cells_arrow)
-        return assign_cells_arrow(
-            vecs,
-            cent,
-            n_top=n_assign,
-            sim_decimals=sim_decimals,
-            keep_vec=True,
-        )
-    # per-row multi-probe assignment (guide §2.4/§8): the centroids ride
-    # as ONE broadcast row and every vector picks its top-n_assign cells
-    # inside its own projection — array_sort over (negated rounded sim,
-    # cell_id) structs is the legacy window's exact total order, with no
-    # n x |C| row materialization and no member_id exchange (which used
-    # to carry the full member VECTOR per scored row — the dominant
-    # shuffle of every blocking consumer at scale)
-    mnorm = norm(F.col("mvec"))
-    top = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("_cents"),
-                lambda c: F.struct(
-                    _rounded_negsim(F.col("mvec"), mnorm, c, sim_decimals).alias(
-                        "negsim"
-                    ),
-                    c["cell_id"].alias("cell_id"),
-                ),
-            )
-        ),
-        1,
-        n_assign,
-    )
-    return (
-        vecs.join(F.broadcast(centroid_struct_array(cent)))
-        .select(
-            "member_id",
-            "mvec",
-            F.explode(F.transform(top, lambda s: s["cell_id"])).alias("cell_id"),
-        )
+    return assign_cells_arrow(
+        vecs, cent, n_top=n_assign, sim_decimals=sim_decimals, keep_vec=True
     )
 
 
@@ -605,7 +563,6 @@ def embedding_candidate_ids(
     max_cells: int | None = None,
     n_assign: int = 2,
     sim_decimals: int = 6,
-    kernel: str = "hof",
     n_rows: int | None = None,
     members: DataFrame | None = None,
 ) -> DataFrame:
@@ -628,8 +585,7 @@ def embedding_candidate_ids(
         members
         if members is not None
         else embedding_cell_members(
-            vectors, id_col, vec_col, max_cells, n_assign, sim_decimals,
-            kernel, n_rows,
+            vectors, id_col, vec_col, max_cells, n_assign, sim_decimals, n_rows
         )
     ).select("member_id", "cell_id")
     return (
@@ -649,7 +605,6 @@ def embedding_neardup_pairs(
     max_cells: int | None = None,
     n_assign: int = 2,
     sim_decimals: int = 6,
-    kernel: str = "hof",
     per_cell_cap: int | None = None,
     n_rows: int | None = None,
     members: DataFrame | None = None,
@@ -701,55 +656,41 @@ def embedding_neardup_pairs(
     """
     from pyspark.sql import Window
 
-    from cupertino_nvr_spark.llm.similarity import dot, make_cosine, norm
+    from cupertino_nvr_spark.llm.similarity import dot, norm
 
     if members is None:
         members = embedding_cell_members(
-            vectors, id_col, vec_col, max_cells, n_assign, sim_decimals,
-            kernel, n_rows,
+            vectors, id_col, vec_col, max_cells, n_assign, sim_decimals, n_rows
         )
-    if kernel == "hof":
-        # norm hoisting (r14): cosine pays dot + BOTH norms per candidate
-        # pair — 3 x dim flops on the chain's dominant Σ|cell|² stream.
-        # A member's norm is pair-invariant, so compute it once per
-        # membership row and divide by the product: try_divide(dot(a,b),
-        # norm(a) * norm(b)) with the two factors hoisted is the same
-        # IEEE expression (hoisting never changes a double), now ~dim
-        # flops per pair instead of 3 x dim.
-        members = members.withColumn("_mn", norm(F.col("mvec")))
-        score = lambda: F.round(  # noqa: E731
-            F.try_divide(
-                dot(F.col("avec"), F.col("bvec")), F.col("_na") * F.col("_nb")
-            ),
-            sim_decimals,
-        )
-        extra_a = [F.col("_mn").alias("_na")]
-        extra_b = [F.col("_mn").alias("_nb")]
-    else:
-        cosine = make_cosine(kernel)
-        score = lambda: F.round(  # noqa: E731
-            cosine(F.col("avec"), F.col("bvec")), sim_decimals
-        )
-        extra_a = []
-        extra_b = []
+    # norm hoisting (r14): cosine pays dot + BOTH norms per candidate
+    # pair — 3 x dim flops on the chain's dominant Σ|cell|² stream.
+    # A member's norm is pair-invariant, so compute it once per
+    # membership row and divide by the product: try_divide(dot(a,b),
+    # norm(a) * norm(b)) with the two factors hoisted is the same
+    # IEEE expression (hoisting never changes a double), now ~dim
+    # flops per pair instead of 3 x dim.
+    members = members.withColumn("_mn", norm(F.col("mvec")))
     a = members.select(
         F.col("cell_id"),
         F.col("member_id").alias("id_a"),
         F.col("mvec").alias("avec"),
-        *extra_a,
+        F.col("_mn").alias("_na"),
     )
     b = members.select(
         F.col("cell_id"),
         F.col("member_id").alias("id_b"),
         F.col("mvec").alias("bvec"),
-        *extra_b,
+        F.col("_mn").alias("_nb"),
     )
     pairs = a.join(b, "cell_id").filter(F.col("id_a") < F.col("id_b"))
+    sim = F.try_divide(
+        dot(F.col("avec"), F.col("bvec")), F.col("_na") * F.col("_nb")
+    )
     scored = pairs.select(
         "cell_id",
         "id_a",
         "id_b",
-        score().alias("sim"),
+        F.round(sim, sim_decimals).alias("sim"),
     )
     if per_cell_cap is not None:
         # cosine paid once per cell-pair, THEN fanned to both directions;
@@ -918,7 +859,6 @@ def embedding_neardup_pairs_lsh(
     n_flip: int = 2,
     bucket_cap: int = 256,
     sim_decimals: int = 6,
-    kernel: str = "pandas",
     n_rows: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs via CENTERED sign-bit LSH blocking — the
@@ -961,7 +901,6 @@ def embedding_neardup_pairs_lsh(
         dot,
         ensure_min_parallelism,
         lsh_projections,
-        make_cosine,
         norm,
     )
 
@@ -985,17 +924,15 @@ def embedding_neardup_pairs_lsh(
     centered = projected.crossJoin(F.broadcast(offsets)).withColumn(
         "cprojs", F.zip_with("projs", "offs", lambda pr, o: pr - o)
     )
-    hoist = kernel == "hof"
-    # norm hoisting (r14, HOF kernel): a member's norm is pair-invariant
-    # — compute it once per member row (BEFORE the bucket explode, so
-    # the value just rides the fan-out) and score pairs as
-    # try_divide(dot, norm_a * norm_b): the identical IEEE expression
-    # cosine builds, at ~1/3 of its per-pair flops.
-    norm_cols = [norm(F.col("mvec")).alias("_mn")] if hoist else []
+    # norm hoisting (r14): a member's norm is pair-invariant — compute
+    # it once per member row (BEFORE the bucket explode, so the value
+    # just rides the fan-out) and score pairs as try_divide(dot,
+    # norm_a * norm_b): the identical IEEE expression cosine builds, at
+    # ~1/3 of its per-pair flops.
     exploded = centered.select(
         "member_id",
         "mvec",
-        *norm_cols,
+        norm(F.col("mvec")).alias("_mn"),
         F.explode(
             lsh_probe_buckets(F.col("cprojs"), n_planes, n_flip, sim_decimals)
         ).alias("bucket"),
@@ -1011,34 +948,26 @@ def embedding_neardup_pairs_lsh(
         "bucket",
         F.col("member_id").alias("id_a"),
         F.col("mvec").alias("avec"),
-        *([F.col("_mn").alias("_na")] if hoist else []),
+        F.col("_mn").alias("_na"),
     )
     b = exploded.select(
         "bucket",
         F.col("member_id").alias("id_b"),
         F.col("mvec").alias("bvec"),
-        *([F.col("_mn").alias("_nb")] if hoist else []),
+        F.col("_mn").alias("_nb"),
     )
     cand = (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", "avec", "bvec",
-            *(["_na", "_nb"] if hoist else []),
-        )
+        .select("id_a", "id_b", "avec", "bvec", "_na", "_nb")
         .dropDuplicates(["id_a", "id_b"])
     )
-    if hoist:
-        sim = F.round(
-            F.try_divide(
-                dot(F.col("avec"), F.col("bvec")), F.col("_na") * F.col("_nb")
-            ),
-            sim_decimals,
-        )
-    else:
-        sim = F.round(
-            make_cosine(kernel)(F.col("avec"), F.col("bvec")), sim_decimals
-        )
+    sim = F.round(
+        F.try_divide(
+            dot(F.col("avec"), F.col("bvec")), F.col("_na") * F.col("_nb")
+        ),
+        sim_decimals,
+    )
     return cand.select("id_a", "id_b", sim.alias("sim")).filter(
         F.col("sim") >= threshold
     )

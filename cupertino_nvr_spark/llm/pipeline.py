@@ -56,8 +56,8 @@ _REDACTIONS = [  # applied in order; email first so its domain dots never
 ]
 
 # Diagnostics from the most recent components_over_keys call on this
-# driver (round counts + which deep path engaged) — what the round-notes
-# measurement tables and the path-engagement regression tests read.
+# driver (round counts + whether star contraction engaged) — what the
+# path-engagement regression tests read.
 # Driver-local bookkeeping only; never consulted by the plans.
 LAST_RUN_STATS: dict = {}
 
@@ -102,9 +102,7 @@ def components_over_keys(
     id_col: str = "doc_id",
     key_col: str = "band_key",
     max_iter: int = 25,
-    hops_per_round: int = 3,
     ramp_rounds: int = 6,
-    deep_path: str = "contract",
 ) -> DataFrame:
     """Connected components of the bipartite (node, key) graph: two nodes
     are connected iff they transitively share keys. Returns
@@ -123,40 +121,26 @@ def components_over_keys(
     traveling exactly one key-graph EDGE per node→key→node pass
     (jumped=0 while changed>0 in tail rounds: label-tree compression
     cannot shortcut distance that lives in the KEY graph) on >40-hop
-    key chains — so the loop switches to the ``deep_path``:
+    key chains — so the loop hands the rest to alternating
+    large-star/small-star edge contraction (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond") over the
+    LABEL-contracted graph: nodes collapse to their current labels
+    (same-component invariant), each key star-ifies to (member-label →
+    key-min-label) edges, and the alternating rounds converge in
+    O(log^2 n) rounds INDEPENDENT of graph diameter, vs rounds ≈
+    diameter for propagation (r10 measured 19 rounds on the sf1
+    cross-modal graph). Same fixpoint: the component min node's label
+    is itself, so the star roots ARE the component minima.
 
-    - ``"contract"`` (default): alternating large-star/small-star edge
-      contraction (Kiveris et al. 2014, "Connected Components in
-      MapReduce and Beyond") over the LABEL-contracted graph — nodes
-      collapse to their current labels (same-component invariant), each
-      key star-ifies to (member-label → key-min-label) edges, and the
-      alternating rounds converge in O(log^2 n) rounds INDEPENDENT of
-      graph diameter, vs rounds ≈ diameter for propagation (r10
-      measured 19 rounds on the sf1 cross-modal graph). Same fixpoint:
-      the component min node's label is itself, so the star roots ARE
-      the component minima.
-    - ``"multihop"``: the r10 ramped multi-hop loop — each round takes
-      ``hops_per_round`` key hops, amortizing the FIXED per-round
-      overhead (scheduling + checkpoint + the convergence collect; at
-      ~1M-row frames that overhead, not data volume, dominates — a
-      frontier/broadcast variant was measured 2.4x SLOWER because it
-      tripled materializations per round). Measured sf1 cross-modal
-      106 s -> 78 s; kept as the measurable alternative the contraction
-      path is A/B'd against.
-
-    Round semantics (r10 advisor note): ``max_iter`` counts ROUNDS, not
-    key hops — after the ramp a multihop round advances up to
-    ``hops_per_round`` key hops and a contract round is one large-star +
-    small-star pass; callers with ``max_iter <= ramp_rounds`` run pure
-    single-hop propagation and never engage the deep path. Work per
-    round stays O(|membership| + |nodes|) (contraction: O(|edges|) with
-    |edges| <= |membership|): no pair join ever happens, which is what
-    makes clustering hot bands safe at scale. Raises if ``max_iter``
-    rounds don't reach the fixpoint — a loud failure beats a
-    silently-wrong clustering.
+    ``max_iter`` counts ROUNDS: a propagation round is one key hop, a
+    contraction round one large-star + small-star pass; callers with
+    ``max_iter <= ramp_rounds`` run pure single-hop propagation and
+    never engage contraction. Work per round stays O(|membership| +
+    |nodes|) (contraction: O(|edges|) with |edges| <= |membership|): no
+    pair join ever happens, which is what makes clustering hot bands
+    safe at scale. Raises if ``max_iter`` rounds don't reach the
+    fixpoint — a loud failure beats a silently-wrong clustering.
     """
-    if deep_path not in ("contract", "multihop"):
-        raise ValueError(f"deep_path must be 'contract' or 'multihop', got {deep_path!r}")
     LAST_RUN_STATS.clear()
     LAST_RUN_STATS.update(
         {"propagation_rounds": 0, "deep_path": None, "contract_rounds": 0}
@@ -169,7 +153,7 @@ def components_over_keys(
     )
 
     for rnd in range(max_iter):
-        if rnd >= ramp_rounds and deep_path == "contract":
+        if rnd >= ramp_rounds:
             # unconverged after the ramp: a deep chain — hand the
             # label-contracted graph to star contraction, which owns
             # the remaining round budget
@@ -178,39 +162,24 @@ def components_over_keys(
                 labels, memb, id_col, key_col, max_iter - rnd
             )
         LAST_RUN_STATS["propagation_rounds"] = rnd + 1
-        if rnd >= ramp_rounds:
-            LAST_RUN_STATS["deep_path"] = "multihop"
-        hops = 1 if rnd < ramp_rounds else hops_per_round
-        cur = labels.select(id_col, F.col("label").alias("_old"), "label")
-        hop_frames = []
-        for _hop in range(hops):
-            # every hop's frame is referenced TWICE (the key_min probe
-            # and the label merge): the first hop reads the checkpointed
-            # labels frame (already materialized), later hops' frames
-            # must persist or the hop chains re-execute 2^hops times
-            if _hop > 0:
-                cur = cur.persist()
-                hop_frames.append(cur)
-            key_min = (
-                memb.join(cur.select(id_col, "label"), id_col)
-                .groupBy(key_col)
-                .agg(F.min("label").alias("key_label"))
-            )
-            via = (
-                memb.join(key_min, key_col)
-                .groupBy(id_col)
-                .agg(F.min("key_label").alias("nbr_label"))
-            )
-            cur = cur.join(via, id_col, "left").select(
-                id_col,
-                "_old",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
+        key_min = (
+            memb.join(labels, id_col)
+            .groupBy(key_col)
+            .agg(F.min("label").alias("key_label"))
+        )
+        via = (
+            memb.join(key_min, key_col)
+            .groupBy(id_col)
+            .agg(F.min("key_label").alias("nbr_label"))
+        )
         # persisted: referenced twice below (self + pointer map)
-        stepped = cur.persist()
-        hop_frames.append(stepped)
+        stepped = labels.join(via, id_col, "left").select(
+            id_col,
+            F.col("label").alias("_old"),
+            F.least(
+                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+            ).alias("label"),
+        ).persist()
         # pointer jumping: follow the label one hop (label-of-label);
         # labels only decrease, so min(label, its label) keeps the
         # component-min invariant while halving chain distances
@@ -225,9 +194,8 @@ def components_over_keys(
         # of an eager checkpoint job + a second agg job over the
         # materialized blocks) halves the per-round fixed job overhead —
         # at ~1M-row frames scheduling, not data volume, is the per-round
-        # cost (the multihop docstring's measurement). The agg computes
-        # every partition (a global sum), so the frame is fully
-        # materialized when the collect returns, exactly as before.
+        # cost. The agg computes every partition (a global sum), so the
+        # frame is fully materialized when the collect returns.
         new_labels = reliable_checkpoint(
             stepped.join(ptr, stepped["label"] == F.col("_t"), "left")
             .select(
@@ -245,8 +213,7 @@ def components_over_keys(
             eager=False,
         )
         changed = new_labels.agg(F.sum("_changed")).collect()[0][0] or 0
-        for f in hop_frames:
-            f.unpersist()
+        stepped.unpersist()
         labels = new_labels.drop("_changed")
         if changed == 0:
             return labels.withColumnRenamed("label", "cluster_id")

@@ -24,9 +24,9 @@ from pyspark.sql import functions as F
 
 from cupertino_nvr_spark.operators.checkpoint import reliable_checkpoint
 
-# Ceiling on the IVF centroid count. The centroid table is BROADCAST to
-# every task during assignment/routing, so the one PHYSICAL bound on the
-# cell count is a broadcast byte budget — derive the cap from it instead
+# Ceiling on the IVF centroid count. The centroid matrix rides to every
+# task in the assignment/routing closure (``assign_cells_arrow``), so the
+# one PHYSICAL bound on the cell count is a broadcast-sized byte budget — derive the cap from it instead
 # of pinning a literal (r12 VERDICT item 2: the old fixed 4096 inflected
 # the sqrt(n) cell target into a linear per-cell-membership regime past
 # 4096² ≈ 16.7M vectors, and with it the blocking families' Σ|cell|²
@@ -100,46 +100,6 @@ def as_double(a: Column) -> Column:
     return a.cast("array<double>")
 
 
-def cosine_pandas(a: Column, b: Column) -> Column:
-    """Arrow-batched numpy cosine — the production scoring kernel.
-
-    The higher-order-function ``cosine`` runs interpreted expression trees
-    (one virtual call per element); this path ships whole Arrow batches to
-    a pandas UDF and scores them with two BLAS-backed numpy reductions.
-    Same contract, different float summation ORDER (pairwise vs
-    sequential), so results can differ in the last ulp — keep the HOF
-    kernel for oracle-hash-checked queries and use this one where
-    throughput matters (rows-only checked).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _cos(xs, ys):
-        if len(xs) == 0:
-            return pd.Series([], dtype="float64")
-        va = np.stack(xs.to_numpy())
-        vb = np.stack(ys.to_numpy())
-        num = np.einsum("ij,ij->i", va, vb)
-        den = np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1)
-        return pd.Series(num / den)
-
-    # Real class objects, not inline hints: `from __future__ import
-    # annotations` would stringify inline hints and the lazily-imported
-    # `pd` is not resolvable from module globals.
-    _cos.__annotations__ = {"xs": pd.Series, "ys": pd.Series, "return": pd.Series}
-    return pandas_udf(_cos, "double")(a, b)
-
-
-def make_cosine(kernel: str):
-    """'hof' (oracle-deterministic, interpreted) or 'pandas' (Arrow+numpy)."""
-    if kernel == "pandas":
-        return cosine_pandas
-    if kernel == "hof":
-        return cosine
-    raise ValueError(f"unknown cosine kernel: {kernel!r}")
-
-
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition IFF the input has fewer partitions than the
     cluster's default parallelism.
@@ -200,7 +160,6 @@ def brute_force_topk(
     vec_col: str = "embedding",
     k: int = 5,
     sim_decimals: int = 6,
-    kernel: str = "hof",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each probe (excluding itself).
 
@@ -221,7 +180,7 @@ def brute_force_topk(
         .select(
             "probe_id",
             "neighbor_id",
-            F.round(make_cosine(kernel)(F.col("pvec"), F.col("cvec")), sim_decimals).alias("sim"),
+            F.round(cosine(F.col("pvec"), F.col("cvec")), sim_decimals).alias("sim"),
         )
     )
     w = Window.partitionBy("probe_id").orderBy(
@@ -317,7 +276,6 @@ def lsh_ann_topk(
     dim: int = 64,
     k: int = 5,
     n_planes: int = 8,
-    kernel: str = "hof",
     n_flip: int = 0,
 ) -> DataFrame:
     """Approximate top-k: bucket both sides, equi-join on bucket, exact
@@ -353,7 +311,7 @@ def lsh_ann_topk(
     scored = cand.select(
         "probe_id",
         "neighbor_id",
-        F.round(make_cosine(kernel)(F.col("pvec"), F.col("cvec")), 6).alias("sim"),
+        F.round(cosine(F.col("pvec"), F.col("cvec")), 6).alias("sim"),
     )
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
@@ -406,8 +364,8 @@ def brute_force_topk_blocked(
 ) -> DataFrame:
     """Exact top-k by block matmul — the production brute-force kernel.
 
-    The scalar-pandas kernel (``cosine_pandas``) turned out SLOWER than the
-    interpreted HOF path at sf0.1 because every candidate PAIR ships both
+    A per-pair Arrow cosine UDF turned out SLOWER than the interpreted
+    HOF ``cosine`` at sf0.1 because every candidate PAIR ships both
     vectors through Arrow — serialization dwarfs the BLAS win. This kernel
     inverts the shape: the probe matrix rides to executors in the UDF
     closure (bounded query-side input, same rows a broadcast join ships),
@@ -555,8 +513,8 @@ def ivf_ann_topk_blocked(
     matmul against centroids (argmax = cell assignment; centroid ids sorted
     ascending so ties take the lowest id, matching ``ivf_assign``), one
     matmul against probes, and a routed-cell mask picks which (member,
-    probe) sims to emit. Each corpus vector crosses Arrow once; the HOF
-    path's three joins (assign, route, candidate) collapse into zero
+    probe) sims to emit. Each corpus vector crosses Arrow once;
+    ``ivf_ann_topk``'s route + candidate joins collapse into zero
     shuffles before the final k-row-per-probe ranking.
     """
     import numpy as np
@@ -573,7 +531,7 @@ def ivf_ann_topk_blocked(
     pnorm = np.linalg.norm(pmat, axis=1)
 
     # probe→cell routing, driver-side: same (rounded sim desc, cell_id asc)
-    # order as the HOF path's window over broadcast centroids
+    # order as assign_cells_arrow
     psim = np.round(
         (pmat @ cmat.T) / (pnorm[:, None] * cnorm[None, :]), sim_decimals
     )
@@ -612,46 +570,6 @@ def ivf_ann_topk_blocked(
     return _finish_topk(c.mapInPandas(score, _TOPK_LOCAL_SCHEMA), k)
 
 
-def centroid_struct_array(cent: DataFrame) -> DataFrame:
-    """Collapse a (cell_id, centvec) centroid frame into ONE row holding
-    every centroid as an array<struct<cell_id, centvec, cnorm>> — the
-    broadcast-friendly shape of the per-row assignment kernels.
-
-    Same bytes the old broadcast-hash side shipped (bounded by
-    ``IVF_MAX_CELLS`` x 512 B = the 32 MiB broadcast budget when the
-    centroids come from ``ivf_centroids``), but as a single-row
-    cross-join side: each corpus row scores every centroid INSIDE one
-    projection, so cell assignment needs no n x |C| row materialization,
-    no exchange, and no window/aggregate — the decision never leaves the
-    scan stage (guide §2.4/§8: decide with small rows, zero shuffles).
-    ``cnorm`` is hoisted once per centroid; the per-row kernels divide by
-    ``norm(mvec) * cnorm`` — the same doubles ``cosine`` computes, since
-    hoisting a subexpression does not change its IEEE value."""
-    return cent.agg(
-        F.collect_list(
-            F.struct(
-                F.col("cell_id"),
-                F.col("centvec"),
-                norm(F.col("centvec")).alias("cnorm"),
-            )
-        ).alias("_cents")
-    )
-
-
-def _rounded_negsim(mvec, mnorm, c, sim_decimals: int):
-    """-(rounded cosine) against centroid struct ``c``, NULL-safe.
-
-    The legacy window ranked by rounded cosine DESC NULLS LAST with
-    cell_id ASC ties; ascending (negsim, cell_id) struct order is the
-    identical total order once a NULL cosine (zero-norm vector — absent
-    from the shipped corpora, possible on a sparse real one) is mapped
-    below the cosine range: coalesce to -2.0 < -1 <= any real cosine."""
-    csim = F.round(
-        F.try_divide(dot(mvec, c["centvec"]), mnorm * c["cnorm"]), sim_decimals
-    )
-    return -F.coalesce(csim, F.lit(-2.0))
-
-
 def assign_cells_arrow(
     vecs: DataFrame,
     cent: DataFrame,
@@ -662,26 +580,25 @@ def assign_cells_arrow(
     id_name: str = "member_id",
     vec_name: str = "mvec",
 ) -> DataFrame:
-    """Arrow-kernel twin of the per-row HOF cell assignment: top-``n_top``
-    cells per vector by (rounded cosine desc, cell_id asc), computed as
-    ONE ``mapInPandas`` pass over the corpus with the centroid matrix in
-    the task closure (guide §4.2/§4.5 — heavy state built once per task,
-    whole batches scored by BLAS matmul).
+    """THE IVF cell assignment: top-``n_top`` cells per vector by
+    (rounded cosine desc, cell_id asc), computed as ONE ``mapInPandas``
+    pass over the corpus with the centroid matrix in the task closure
+    (guide §4.2/§4.5 — heavy state built once per task, whole batches
+    scored by BLAS matmul). No n x |C| row materialization, no exchange,
+    no window: the decision never leaves the scan stage. Every IVF
+    consumer assigns through here — ``ivf_assign`` (n_top=1), the probe
+    routing of ``ivf_route_candidates`` (n_top=n_probe, ``rank_col``)
+    and ``dedup.embedding_cell_members`` (multi-probe membership).
 
-    Replaces the legacy broadcast cross-join + window shape the pandas
-    kernels kept after the r14 HOF rewrite (a pandas UDF cannot run in a
-    HOF lambda, but it CAN own the whole assignment): that shape
-    materialized n x |C| scored rows and exchanged them (vector payload
-    included) back to one row per member — the same exchange the HOF
-    rewrite deleted. Here the decision never leaves the scan stage.
-
-    Centroids are driver-collected under the ``MAX_PROBES`` closure
-    budget (identical bytes to what the broadcast-hash side shipped; the
-    blocked kernels already use this pattern for probes AND centroids),
-    sorted by cell_id so numpy's first-max / stable-sort tie-breaks
-    reproduce the window's (sim desc, cell_id asc) total order; a
-    non-finite cosine (zero-norm vector) maps to -2.0, below the cosine
-    range — the HOF kernel's exact NULLS-LAST treatment.
+    Centroids are driver-collected at plan build under the
+    ``MAX_PROBES`` closure budget (the blocked kernels use the same
+    pattern for probes AND centroids), sorted by cell_id so numpy's
+    first-max / stable-sort tie-breaks reproduce the oracle's (sim
+    desc, cell_id asc) window order; a non-finite cosine (zero-norm
+    vector) maps to -2.0, below the cosine range, i.e. NULLS LAST.
+    Matmul sums in a different order from DuckDB's
+    ``list_cosine_similarity``; the ``sim_decimals`` rounding is what
+    makes the two engines pick the same cells.
     """
     import numpy as np
     import pandas as pd
@@ -739,25 +656,18 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     sim_decimals: int = 6,
-    kernel: str = "hof",
     keep_vec: bool = False,
 ) -> DataFrame:
-    """Assign every vector to its nearest centroid (IVF cell).
+    """Assign every vector to its nearest centroid (IVF cell):
+    (member_id[, mvec], cell_id).
 
-    Centroids ride as ONE broadcast row (``centroid_struct_array`` —
-    bounded by construction when they come from ``ivf_centroids``,
-    |C| ≈ min(sqrt(n), IVF_MAX_CELLS)); assignment is a linear scan —
-    each vector scores n_cells rounded cosines INSIDE its own row and
-    keeps the argmax via array_min over (negated sim, cell id) structs,
-    tie-broken by centroid id so Spark and the SQL oracle agree. Zero
-    exchanges: the old shape materialized the n x |C| scored rows and
-    hash-aggregated them back to one row per vector (max_by), which cost
-    an n x |C|-row exchange at every scale; the decision now never
-    leaves the scan projection (guide §2.4). ``keep_vec=True`` also
-    returns ``mvec`` — free here, and it saves the caller a corpus
-    re-join (``ivf_route_candidates``). The ``pandas`` kernel keeps the
-    legacy cross-join+max_by shape (a pandas UDF cannot run inside a
-    higher-order-function lambda).
+    One ``assign_cells_arrow`` pass (n_top=1): a linear scan with the
+    centroid matrix (bounded by construction when it comes from
+    ``ivf_centroids``, |C| ≈ min(sqrt(n), IVF_MAX_CELLS)) in the task
+    closure, argmax tie-broken by centroid id so Spark and the SQL
+    oracle agree, zero exchanges. ``keep_vec=True`` also returns
+    ``mvec`` — free here, and it saves the caller a corpus re-join
+    (``ivf_route_candidates``).
     """
     cent = centroids.select(
         F.col(id_col).alias("cell_id"), as_double(F.col(vec_col)).alias("centvec")
@@ -767,34 +677,8 @@ def ivf_assign(
             F.col(id_col).alias("member_id"), as_double(F.col(vec_col)).alias("mvec")
         )
     )
-    keep = ["member_id", "mvec"] if keep_vec else ["member_id"]
-    if kernel != "hof":
-        # Arrow kernel: one mapInPandas pass, centroid matrix in the
-        # closure — same decision order as the HOF argmax, no n x |C|
-        # cross join, no member-keyed exchange (assign_cells_arrow doc)
-        return assign_cells_arrow(
-            vecs,
-            cent,
-            n_top=1,
-            sim_decimals=sim_decimals,
-            keep_vec=keep_vec,
-        )
-    mnorm = norm(F.col("mvec"))
-    best = F.array_min(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                _rounded_negsim(F.col("mvec"), mnorm, c, sim_decimals).alias(
-                    "negsim"
-                ),
-                c["cell_id"].alias("cell_id"),
-            ),
-        )
-    )
-    return (
-        vecs.join(F.broadcast(centroid_struct_array(cent)))
-        .select(*keep, best["cell_id"].alias("cell_id"))
-        .filter(F.col("cell_id").isNotNull())
+    return assign_cells_arrow(
+        vecs, cent, n_top=1, sim_decimals=sim_decimals, keep_vec=keep_vec
     )
 
 
@@ -806,7 +690,6 @@ def ivf_route_candidates(
     n_probe: int = 2,
     max_cells: int = IVF_MAX_CELLS,
     sim_decimals: int = 6,
-    kernel: str = "hof",
 ) -> DataFrame:
     """THE IVF routing stage — (probe_id, pvec, member_id, mvec, crank).
 
@@ -823,14 +706,17 @@ def ivf_route_candidates(
     aggregate ``MIN(crank)`` (the profile).
 
     Centroids are hash-sampled and sqrt(n)-capped (``ivf_centroids``), so
-    the routing broadcast is bounded at any corpus size; candidates come
-    from a cell_id equi-join — cost n_probe/n_cells of brute force.
+    the routing closure is bounded at any corpus size; probes take their
+    top-``n_probe`` cells in one ``assign_cells_arrow`` pass (``crank`` =
+    stable-sort position, the oracle window's exact order), and
+    candidates come from a cell_id equi-join — cost n_probe/n_cells of
+    brute force.
     """
     centroids = ivf_centroids(corpus, id_col, max_cells)
     # keep_vec: the assignment row already carries the member vector, so
     # the old corpus re-join (a full extra shuffle of the vectors) is gone
     members = ivf_assign(
-        corpus, centroids, id_col, vec_col, sim_decimals, kernel, keep_vec=True
+        corpus, centroids, id_col, vec_col, sim_decimals, keep_vec=True
     )
 
     cent = centroids.select(
@@ -839,56 +725,16 @@ def ivf_route_candidates(
     p = probes.select(
         F.col(id_col).alias("probe_id"), as_double(F.col(vec_col)).alias("pvec")
     )
-    if kernel != "hof":
-        # Arrow kernel: per-probe top-n_probe routing in one mapInPandas
-        # pass (rank = stable-sort position, the window's exact order)
-        routed = assign_cells_arrow(
-            p,
-            cent,
-            n_top=n_probe,
-            sim_decimals=sim_decimals,
-            keep_vec=True,
-            rank_col="crank",
-            id_name="probe_id",
-            vec_name="pvec",
-        )
-    else:
-        # per-row routing: every probe row scores all centroids inside
-        # one projection (the ivf_assign shape generalized to top-n):
-        # sort (negsim, cell_id) structs — the window's exact total
-        # order — and keep the first n_probe; crank is the slice index
-        pnorm = norm(F.col("pvec"))
-        top = F.slice(
-            F.array_sort(
-                F.transform(
-                    F.col("_cents"),
-                    lambda c: F.struct(
-                        _rounded_negsim(
-                            F.col("pvec"), pnorm, c, sim_decimals
-                        ).alias("negsim"),
-                        c["cell_id"].alias("cell_id"),
-                    ),
-                )
-            ),
-            1,
-            n_probe,
-        )
-        routed = (
-            p.join(F.broadcast(centroid_struct_array(cent)))
-            .select(
-                "probe_id",
-                "pvec",
-                F.posexplode(F.transform(top, lambda s: s["cell_id"])).alias(
-                    "_pos", "cell_id"
-                ),
-            )
-            .select(
-                "probe_id",
-                "pvec",
-                "cell_id",
-                (F.col("_pos") + 1).alias("crank"),
-            )
-        )
+    routed = assign_cells_arrow(
+        p,
+        cent,
+        n_top=n_probe,
+        sim_decimals=sim_decimals,
+        keep_vec=True,
+        rank_col="crank",
+        id_name="probe_id",
+        vec_name="pvec",
+    )
     return (
         routed.join(members, "cell_id")
         .filter(F.col("probe_id") != F.col("member_id"))
@@ -905,7 +751,6 @@ def ivf_ann_topk(
     n_probe: int = 2,
     max_cells: int = IVF_MAX_CELLS,
     sim_decimals: int = 6,
-    kernel: str = "hof",
 ) -> DataFrame:
     """IVF-style ANN: the second scale path next to LSH bucketing.
 
@@ -919,12 +764,12 @@ def ivf_ann_topk(
     routing stage, so cost is n_probe/n_cells of brute force.
     """
     cand = ivf_route_candidates(
-        corpus, probes, id_col, vec_col, n_probe, max_cells, sim_decimals, kernel
+        corpus, probes, id_col, vec_col, n_probe, max_cells, sim_decimals
     )
     scored = cand.select(
         "probe_id",
         F.col("member_id").alias("neighbor_id"),
-        F.round(make_cosine(kernel)(F.col("pvec"), F.col("mvec")), sim_decimals).alias("sim"),
+        F.round(cosine(F.col("pvec"), F.col("mvec")), sim_decimals).alias("sim"),
     ).distinct()  # a neighbor reachable via both probed cells counts once
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
@@ -948,9 +793,8 @@ def kmeans_refine(
 
     Each round is the two canonical distributed steps:
 
-    - **assign**: corpus x broadcast(centroids) scored cosine, argmax per
-      vector (``ivf_assign``'s max_by form) — linear scan, no shuffle
-      beyond the broadcast;
+    - **assign**: ``ivf_assign`` — argmax rounded cosine per vector in
+      one linear scan, centroids in the task closure, no shuffle;
     - **recompute**: member vectors exploded to (cell, dim, value) and
       averaged — ONE (cell, dim)-keyed aggregation with map-side combine
       (k x dim result rows), then re-collected into ordered arrays.
@@ -960,7 +804,7 @@ def kmeans_refine(
     bit-identical across engines and partitionings, which is what lets a
     multi-round iterative result carry a SQL hash oracle at all.
     Centroid count is bounded by ``ivf_centroids``' stride rule, so the
-    broadcast side stays capped at any corpus size. Empty cells simply
+    closure-carried centroid matrix stays capped at any corpus size. Empty cells simply
     disappear (no members → no recomputed centroid), matching standard
     Lloyd behavior.
     """

@@ -841,7 +841,7 @@ def embedding_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
              ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS rank
       FROM scored) WHERE rank <= 5
     """,
-    doc="IVF-cell ANN: hash-sampled sqrt(n)-capped centroids, broadcast routing, "
+    doc="IVF-cell ANN: hash-sampled sqrt(n)-capped centroids, top-2 cell routing, "
     "candidate equi-join on cell_id, exact rerank — the oracle-checkable scale path",
 )
 def embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1174,59 +1174,6 @@ def embedding_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     aug = augmented_embeddings(spark, sf_dir)
     pairs = embedding_neardup_pairs(aug, threshold=-1.0, per_cell_cap=32)
-    return (
-        margin_scored_pairs(pairs, k=4, threshold_ppm=1_050_000, cand_cap=32)
-        .orderBy(F.col("margin_ppm").desc(), "id_a", "id_b")
-        .limit(100)
-    )
-
-
-@register(
-    "embedding_cosine_neardup_fast",
-    None,  # numpy pairwise summation differs from the HOF sequential sum in
-    # the last ulp, so no cross-engine hash oracle; equivalence to the HOF
-    # path is asserted in tests/test_similarity_kernels.py
-    doc="embedding near-dup pairs, Arrow/numpy cosine kernel: identical "
-    "blocking (multi-probe IVF cells) and pair rule as "
-    "embedding_cosine_neardup, with centroid assignment and pair scoring "
-    "on the vectorized kernel instead of the interpreted HOF path — the "
-    "production form. The r7 sf1 probe put the HOF semdedup chain at "
-    "18.6x for 10x data (n*sqrt(n) interpreted assignment, the same term "
-    "embedding_ivf_ann documents); this kernel removes the interpreted "
-    "constant while the candidate-pair volume stays sum(|cell|^2).",
-    bench_only=True,
-)
-def embedding_cosine_neardup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cupertino_nvr_spark.llm.dedup import embedding_neardup_pairs
-
-    return embedding_neardup_pairs(
-        augmented_embeddings(spark, sf_dir), threshold=0.99, kernel="pandas"
-    )
-
-
-@register(
-    "embedding_margin_pairs_fast",
-    None,  # same kernel-ulp caveat as embedding_cosine_neardup_fast: the
-    # Arrow cosine's pairwise summation differs from the HOF sequential
-    # sum in the last ulp, so no cross-engine hash oracle; equivalence to
-    # the declared margin query is pinned in tests/test_similarity_kernels.py
-    doc="margin-based pair mining, Arrow/numpy cosine kernel: identical "
-    "candidate blocking and EXACT-integer margin arithmetic as "
-    "embedding_margin_pairs (the margin stage operates on ppm integers, "
-    "so the twins can only diverge where a raw cosine sits on a 6-decimal "
-    "rounding boundary) — the production form for the n^1.5 candidate "
-    "volume the sqrt(n)-cell blocking admits (same per-endpoint "
-    "cand_cap=32 as the declared query).",
-    bench_only=True,
-)
-def embedding_margin_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cupertino_nvr_spark.llm.dedup import embedding_neardup_pairs
-    from cupertino_nvr_spark.llm.similarity import margin_scored_pairs
-
-    aug = augmented_embeddings(spark, sf_dir)
-    pairs = embedding_neardup_pairs(
-        aug, threshold=-1.0, kernel="pandas", per_cell_cap=32
-    )
     return (
         margin_scored_pairs(pairs, k=4, threshold_ppm=1_050_000, cand_cap=32)
         .orderBy(F.col("margin_ppm").desc(), "id_a", "id_b")
@@ -1601,21 +1548,6 @@ def _lsh_neardup_pairs_cte_sql(
     )"""
 
 
-# cheap cached row estimate so the adaptive-planes production twins never
-# pay a hidden corpus scan at plan-construction time (the parquet count
-# is metadata-cheap but still a job; once per sf_dir per process)
-_EMB_AUG_NROWS: dict[str, int] = {}
-
-
-def _aug_emb_nrows(spark: SparkSession, sf_dir: str) -> int:
-    if sf_dir not in _EMB_AUG_NROWS:
-        n = load_table(spark, "embeddings", sf_dir).count()
-        # aug = base + exact copies (vec_id%9) + perturbed copies (vec_id%5);
-        # only the bit_length matters downstream, so the ratio is enough
-        _EMB_AUG_NROWS[sf_dir] = int(n * (1 + 1 / 9 + 1 / 5)) + 1
-    return _EMB_AUG_NROWS[sf_dir]
-
-
 @register(
     "embedding_cosine_neardup_lsh",
     f"""
@@ -1630,11 +1562,10 @@ def _aug_emb_nrows(spark: SparkSession, sf_dir: str) -> int:
     "with planes ≈ log2(n) the bucket count tracks n so candidate volume "
     "stays O(n). Both sides multi-probe their 2 least-confident flip "
     "buckets; exact copies bucket identically and are never missed. This "
-    "declared form fixes n_planes=12 and scores on the HOF kernel so the "
-    "DuckDB oracle replays the chain exactly (centering AVG, sign bits, "
-    "rounded flip ranking, hot-bucket cap, 6-decimal cosine); the "
-    "adaptive-planes Arrow-kernel twin embedding_cosine_neardup_lsh_fast "
-    "is the production configuration.",
+    "declared form fixes n_planes=12 so the DuckDB oracle replays the "
+    "chain exactly (centering AVG, sign bits, rounded flip ranking, "
+    "hot-bucket cap, 6-decimal cosine); the library function's default "
+    "adapts the plane count to ≈log2(n).",
 )
 def embedding_cosine_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cupertino_nvr_spark.llm.dedup import embedding_neardup_pairs_lsh
@@ -1645,7 +1576,6 @@ def embedding_cosine_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes=_LSH_ND_PLANES,
         n_flip=_LSH_ND_FLIP,
         bucket_cap=_LSH_ND_CAP,
-        kernel="hof",
     )
 
 
@@ -1682,85 +1612,7 @@ def embedding_semdedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_planes=_LSH_ND_PLANES,
         n_flip=_LSH_ND_FLIP,
         bucket_cap=_LSH_ND_CAP,
-        kernel="hof",
     )
-    dups = pairs.groupBy(F.col("id_b").alias("vec_id")).agg(
-        F.count("*").alias("dup_n")
-    )
-    return aug.select("vec_id").join(dups, "vec_id", "left").select(
-        "vec_id",
-        F.coalesce(F.col("dup_n"), F.lit(0)).alias("n_dup_neighbors"),
-        F.col("dup_n").isNotNull().alias("is_dup"),
-    )
-
-
-@register(
-    "embedding_cosine_neardup_lsh_fast",
-    None,  # adaptive planes (log2 n) + Arrow/numpy cosine: the production
-    # configuration; last-ulp kernel caveat as the other _fast twins, and
-    # the plane count varies with the corpus so the static oracle of the
-    # declared form doesn't apply. Recall vs the IVF-exact pair set is
-    # pinned in tests/test_similarity_kernels.py.
-    doc="embedding near-dup pairs, centered sign-bit LSH blocking with "
-    "ADAPTIVE planes (≈log2 n, from a cached metadata count — no hidden "
-    "corpus scan at plan time) and the Arrow cosine kernel — the "
-    "production 100 TB configuration whose exact-pair semantics the "
-    "declared fixed-plane form oracle-checks.",
-    bench_only=True,
-)
-def embedding_cosine_neardup_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cupertino_nvr_spark.llm.dedup import embedding_neardup_pairs_lsh
-
-    return embedding_neardup_pairs_lsh(
-        augmented_embeddings(spark, sf_dir),
-        threshold=0.99,
-        kernel="pandas",
-        n_rows=_aug_emb_nrows(spark, sf_dir),
-    )
-
-
-@register(
-    "embedding_semdedup_lsh_fast",
-    None,  # same adaptive-planes/Arrow-kernel caveat as
-    # embedding_cosine_neardup_lsh_fast
-    doc="SemDeDup drop/keep materialization over the adaptive-planes "
-    "Arrow-kernel LSH chain — the production form; drop-rule semantics "
-    "oracle-checked via the declared fixed-plane twin.",
-    bench_only=True,
-)
-def embedding_semdedup_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cupertino_nvr_spark.llm.dedup import embedding_neardup_pairs_lsh
-
-    aug = augmented_embeddings(spark, sf_dir)
-    pairs = embedding_neardup_pairs_lsh(
-        aug,
-        threshold=0.99,
-        kernel="pandas",
-        n_rows=_aug_emb_nrows(spark, sf_dir),
-    )
-    dups = pairs.groupBy(F.col("id_b").alias("vec_id")).agg(
-        F.count("*").alias("dup_n")
-    )
-    return aug.select("vec_id").join(dups, "vec_id", "left").select(
-        "vec_id",
-        F.coalesce(F.col("dup_n"), F.lit(0)).alias("n_dup_neighbors"),
-        F.col("dup_n").isNotNull().alias("is_dup"),
-    )
-
-
-@register(
-    "embedding_semdedup_fast",
-    None,  # same last-ulp caveat as embedding_cosine_neardup_fast
-    doc="SemDeDup drop/keep materialization on the Arrow/numpy cosine "
-    "kernel — same one-pass lower-id drop rule and candidate chain as "
-    "embedding_semdedup, production scoring path",
-    bench_only=True,
-)
-def embedding_semdedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cupertino_nvr_spark.llm.dedup import embedding_neardup_pairs
-
-    aug = augmented_embeddings(spark, sf_dir)
-    pairs = embedding_neardup_pairs(aug, threshold=0.99, kernel="pandas")
     dups = pairs.groupBy(F.col("id_b").alias("vec_id")).agg(
         F.count("*").alias("dup_n")
     )
@@ -4773,7 +4625,7 @@ _KM_DIM = 64
 
 
 def _km_assign_sql(cent: str, out: str) -> str:
-    """argmax-cosine assignment CTE (ivf_assign's max_by tie-break: rounded
+    """argmax-cosine assignment CTE (ivf_assign's tie-break: rounded
     sim desc, then LOWEST cell id)."""
     return f"""
     {out} AS (
@@ -9931,8 +9783,8 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from cupertino_nvr_spark.llm.similarity import (
         as_double,
+        cosine,
         ensure_min_parallelism,
-        make_cosine,
     )
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -9961,9 +9813,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_label",
             "neighbor_id",
             "neighbor_label",
-            F.round(make_cosine("hof")(F.col("pvec"), F.col("cvec")), 6).alias(
-                "sim"
-            ),
+            F.round(cosine(F.col("pvec"), F.col("cvec")), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("probe_id").orderBy(
@@ -10114,7 +9964,7 @@ def _mmr_round_sql(r: int) -> str:
     ),
 )
 def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cupertino_nvr_spark.llm.similarity import as_double, make_cosine
+    from cupertino_nvr_spark.llm.similarity import as_double, cosine
 
     emb = load_table(spark, "embeddings", sf_dir)
     probes = emb.filter((F.col("vec_id") % 100 == 0) & (F.col("vec_id") < 20000))
@@ -10139,7 +9989,7 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "probe_id",
             "i",
             "j",
-            F.round(make_cosine("hof")(F.col("av"), F.col("bv")), 6).alias("p"),
+            F.round(cosine(F.col("av"), F.col("bv")), 6).alias("p"),
         )
     )
     per_probe = (

@@ -1,6 +1,6 @@
 """bench.py's output contract: two JSON lines on stdout, the compact one
-last, the headline total equal to the sum of the headline timings, and no
-file left behind in the repository."""
+last, the headline total equal to the sum of the headline timings, no
+file left behind in the repository, and only registered names timed."""
 
 from __future__ import annotations
 
@@ -44,3 +44,13 @@ def test_headline_run_prints_full_then_compact_record(spark, monkeypatch, capsys
     assert compact["queries"] == full["queries"]
     assert compact["value"] == full["value"]
     assert _tree(REPO) == before
+
+
+def test_bench_lists_name_registered_queries():
+    """Every name bench.py times is a registered query, listed once: a
+    stale name would only surface as a per-query entry under "errors"."""
+    from cupertino_nvr_spark.plans import REGISTRY
+
+    names = bench.HEADLINE + bench.VARIANTS + bench.EXTRAS
+    assert [n for n in names if n not in REGISTRY] == []
+    assert len(names) == len(set(names))

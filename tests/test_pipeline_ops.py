@@ -52,13 +52,16 @@ def test_components_no_fixpoint_raises(spark):
     assert {r["cluster_id"] for r in got.collect()} == {0}
 
 
-def test_components_contract_equals_multihop_on_random_graphs(spark):
-    """The star-contraction deep path and the r10 multi-hop path must
-    reach the identical fixpoint (component = transitive key-sharing,
+def test_components_contract_equals_propagation_on_random_graphs(spark):
+    """The star-contraction deep path and pure single-hop propagation
+    (``ramp_rounds >= max_iter``: contraction never engages) must reach
+    the identical fixpoint (component = transitive key-sharing,
     cluster_id = component min) on adversarial shapes: a long chain (the
     contraction trigger), a hot key (star), bridged stars, and
-    singletons — forced through the deep path with ramp_rounds=0."""
+    singletons — the contraction side forced with ramp_rounds=0."""
     import random
+
+    from cupertino_nvr_spark.llm import pipeline as P
 
     rng = random.Random(17)
     n = 120
@@ -76,17 +79,15 @@ def test_components_contract_equals_multihop_on_random_graphs(spark):
     kw = dict(id_col="doc_id", key_col="bkey", max_iter=40)
     via_contract = {
         r["doc_id"]: r["cluster_id"]
-        for r in components_over_keys(
-            nodes, memb, ramp_rounds=0, deep_path="contract", **kw
-        ).collect()
+        for r in components_over_keys(nodes, memb, ramp_rounds=0, **kw).collect()
     }
-    via_multihop = {
+    assert P.LAST_RUN_STATS["deep_path"] == "contract"
+    via_propagation = {
         r["doc_id"]: r["cluster_id"]
-        for r in components_over_keys(
-            nodes, memb, deep_path="multihop", **kw
-        ).collect()
+        for r in components_over_keys(nodes, memb, ramp_rounds=40, **kw).collect()
     }
-    assert via_contract == via_multihop
+    assert P.LAST_RUN_STATS["deep_path"] is None
+    assert via_contract == via_propagation
     # singletons (n..n+4) map to themselves
     for i in range(n, n + 5):
         assert via_contract[i] == i
@@ -109,7 +110,7 @@ def test_components_contract_string_ids(spark):
         r["node"]: r["cluster_id"]
         for r in components_over_keys(
             nodes, memb, id_col="node", key_col="bkey",
-            ramp_rounds=0, deep_path="contract",
+            ramp_rounds=0,
         ).collect()
     }
     assert got == {"d:1": "d:1", "d:2": "d:1", "m:1": "d:1",

@@ -38,59 +38,34 @@ def plan_of(spark, name: str) -> str:
 # (the correctness baseline; embedding_lsh_ann is its scale path and stays
 # equi-join). For these, BroadcastNestedLoopJoin with the tiny side built
 # is the correct physical shape.
-# embedding_ivf_ann's centroid assignment/routing is likewise corpus ×
-# broadcast(centroids) by definition — bounded small side, linear in corpus;
-# embedding_cosine_neardup shares that exact routing stage (its pair scoring
-# itself is a cell_id equi-join).
+# IVF cell assignment and probe routing (similarity.assign_cells_arrow)
+# carry the centroid matrix in the task closure, so the IVF consumers
+# (embedding_ivf_ann, embedding_ivf_pq_ann, embedding_cosine_neardup,
+# embedding_semdedup, embedding_eval_decontam, embedding_kmeans) plan no
+# nested-loop join at all and are deliberately NOT listed here.
 ALLOWED_BNLJ = {
     "embedding_cosine_topk",
     # ground-truth side IS embedding_cosine_topk's bounded probes x
     # corpus exact scoring (1% sampled probe set — an eval harness);
     # the candidate side and the comparison are equi-joins
     "embedding_ann_recall_eval",
-    "embedding_ivf_ann",
-    "embedding_ivf_ann_fast",
-    # shares embedding_ivf_ann's routing stage verbatim
-    # (ivf_route_candidates: corpus x broadcast(<=IVF_MAX_CELLS centroids)); the
-    # ADC scoring itself is four broadcast lookup-table equi-joins over
-    # the cell_id-equi-joined candidate set — no vector math per pair
-    "embedding_ivf_pq_ann",
-    # same shared routing stage at the max probe budget, plus the
-    # ground-truth side of embedding_ann_recall_eval (bounded 1% probe
+    # the ground-truth side of embedding_ann_recall_eval (bounded 1% probe
     # panel x corpus exact scoring) and a 4-row n_probe spine
     # range-joined against the bounded candidate-pair frame (the
     # media_phash_tau_profile spine pattern) — the sweep re-ranks one
     # pair frame, it never re-routes
     "embedding_ivf_probe_profile",
-    # composes three already-justified shapes verbatim: the IVF+PQ
-    # serving chain (shared routing + broadcast ADC lookups, above), the
-    # full-precision IVF rerank at the same routing, and the ground-truth
-    # side of embedding_ann_recall_eval (hard-capped probe panel x corpus
-    # exact scoring); its own additions are two (probe, neighbor)-keyed
-    # left joins + one per-probe aggregate
+    # its nested-loop side is the ground-truth side of
+    # embedding_ann_recall_eval (hard-capped probe panel x corpus exact
+    # scoring); the IVF+PQ serving chain and the full-precision rerank it
+    # composes are equi-joins, and its own additions are two
+    # (probe, neighbor)-keyed left joins + one per-probe aggregate
     "embedding_ivf_pq_recall_eval",
-    "embedding_cosine_neardup",
-    # shares embedding_cosine_neardup's exact routing stage (corpus x
-    # broadcast(centroids)); its own additions are a pair groupBy + keyed
-    # left join
-    "embedding_semdedup",
-    # same shared neardup routing stage; its own additions are two
-    # split-flag equi-joins on the pair stream, one groupBy, one keyed
-    # left join — semdedup's exact cost shape, bipartite-restricted
-    "embedding_eval_decontam",
-    # the Arrow-kernel twins of the two above: identical routing stage
-    # (corpus x broadcast(centroids)), only the cosine kernel differs
-    "embedding_cosine_neardup_fast",
-    "embedding_semdedup_fast",
     # 1-row per-plane mean-projection attach (the centering stats); the
     # candidate generation itself is a bucket equi-join with a hot-bucket
     # cap — the linear-time blocking path
     "embedding_cosine_neardup_lsh",
     "embedding_semdedup_lsh",  # same chain + pair groupBy/keyed left join
-    # the production-config twins (adaptive log2-n planes, Arrow cosine
-    # kernel): same 1-row centering attach, same bucket equi-join
-    "embedding_cosine_neardup_lsh_fast",
-    "embedding_semdedup_lsh_fast",
     # dense leg is embedding_cosine_topk's shape: 3 broadcast probe
     # vectors x one corpus scan; fusion itself is a 10-rows-per-leg
     # full-outer equi-join
@@ -115,10 +90,6 @@ ALLOWED_BNLJ = {
     # pair sims and greedy selection run on panel-bounded equi-joined
     # frames (10 candidates / 90 pairs per probe)
     "embedding_mmr_rerank",
-    # Lloyd assignment IS corpus x broadcast(centroids) by definition,
-    # once per round — bounded build side (IVF_MAX_CELLS); the recompute
-    # stage is a (cell, dim)-keyed aggregation
-    "embedding_kmeans",
     # BM25 attaches the single-row (N, avgdl) corpus stats to every scored
     # row: a broadcast of exactly one row — BroadcastNestedLoopJoin Cross
     # with a 1-row build side IS the right plan (a shuffle-free scalar
@@ -141,9 +112,9 @@ ALLOWED_BNLJ = {
     # probability); the scoring joins are vocab-keyed equi-joins
     "docs_kneser_ney_score",
     "embedding_int8_ann",
-    # int8 scale path: its BNLJ stages are the bounded attaches only —
-    # 1-row packed codebook and <=IVF_MAX_CELLS centroid routing; the
-    # candidate scoring itself is a cell_id equi-join (asserted below)
+    # int8 scale path: its BNLJ stage is the bounded 1-row packed
+    # codebook attach; the candidate scoring itself is a cell_id
+    # equi-join (asserted below)
     "embedding_int8_ivf_ann",
     # two-stage exact baseline: bounded-probe x corpus coarse scoring by
     # definition (probe side carries the same hard bound as int8_ann)
@@ -198,7 +169,7 @@ ALLOWED_BNLJ = {
     # max-piece-length attach above; the three per-tokenizer report rows
     # are 1-row aggregates unioned
     "docs_tokenizer_fertility",
-    # one extra Lloyd-assign-shaped pass by definition: corpus x
+    # one extra all-centroids pass by definition: corpus x
     # broadcast(centroids) distances for a/b, centroid count bounded by
     # the IVF stride cap — the eval scales wherever embedding_kmeans does
     "embedding_silhouette",
@@ -239,9 +210,9 @@ ALLOWED_BNLJ = {
     # per-cap metric assembly: each swept setting cross-joins three 1-ROW
     # aggregate frames (cell count, candidate count, base-hit count) plus
     # the 1-row base-count spine — every BNLJ side is a global aggregate,
-    # bounded by construction at any corpus size; the reference chain is
-    # embedding_cosine_neardup's justified shape, and the swept candidate
-    # counts ride skinny membership equi-joins
+    # bounded by construction at any corpus size; the reference chain
+    # (embedding_cosine_neardup's) and the swept candidate counts ride
+    # cell_id equi-joins
     "embedding_ivf_cell_budget_profile",
 }
 

@@ -1,7 +1,8 @@
-"""Session defaults sized to the machine, and the overlay stream's plan
+"""Session defaults sized to the machine, and the stateful streams' plan
 shape: state partitions follow the cores, the model runs once per frame,
-the state stays bounded as the watermark advances, and the progress
-listener reports trigger time, watermark and state size.
+the overlay's and the windowed metrics' state stays bounded as the
+watermark advances, and the progress listener reports trigger time,
+watermark and state size.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from cupertino_nvr_spark.streaming.asof import asof_overlay_stream
 from cupertino_nvr_spark.streaming.codec import encode_event_wire, parse_event_wire
 from cupertino_nvr_spark.streaming.control import ProgressListener, full_metrics_report
 from cupertino_nvr_spark.streaming.inference import with_synthetic_detections
+from cupertino_nvr_spark.streaming.windows import tumbling_metrics_stream
 
 from tests.test_streaming import make_frames, write_batches
 
@@ -43,9 +45,15 @@ def run_overlay(frames, checkpoint):
     """Run the overlay over a frame stream to the end of its input; return
     the progress report of every micro-batch."""
     overlay = asof_overlay_stream(frames, detection_events(frames), ttl_seconds=2.0)
+    return run_to_end(overlay, checkpoint)
+
+
+def run_to_end(stream, checkpoint):
+    """Run a stream to the end of its input in append mode; return the
+    progress report of every micro-batch."""
     name = f"mem_{uuid.uuid4().hex[:8]}"
     q = (
-        overlay.writeStream.format("memory")
+        stream.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
@@ -57,7 +65,33 @@ def run_overlay(frames, checkpoint):
         return q.recentProgress
     finally:
         q.stop()
-        frames.sparkSession.catalog.dropTempView(name)
+        stream.sparkSession.catalog.dropTempView(name)
+
+
+def five_spaced_batches(spark, path):
+    """Five one-file micro-batches of 2 cameras x 5 frames; frame time
+    jumps 100 s per batch, far past any 10 s watermark."""
+    n_batches = 5
+    batches = [
+        make_frames(spark, [(cam, k, 100.0 * b + 0.5 * k) for cam in (1, 2) for k in range(5)])
+        for b in range(n_batches)
+    ]
+    write_batches(batches, path)
+    stream = (
+        spark.readStream.schema(FRAME_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{path}/*")
+    )
+    return stream, n_batches
+
+
+def state_rows_by_batch(progress):
+    """{operator name: {batch id: numRowsTotal}}."""
+    rows = {}
+    for p in progress:
+        for op in p["stateOperators"]:
+            rows.setdefault(op["operatorName"], {})[p["batchId"]] = op["numRowsTotal"]
+    return rows
 
 
 def test_overlay_runs_model_once_on_cores_sized_state(tmp_path):
@@ -83,25 +117,33 @@ def test_overlay_state_stays_bounded_across_batches(tmp_path):
     Batch N's watermark comes from batch N-1's frames, so the state holds
     at most two batches of rows: its size at batch 1 caps every batch."""
     spark = get_spark()
-    n_batches = 5
-    batches = [
-        make_frames(spark, [(cam, k, 100.0 * b + 0.5 * k) for cam in (1, 2) for k in range(5)])
-        for b in range(n_batches)
-    ]
-    write_batches(batches, f"{tmp_path}/fr")
-    stream = (
-        spark.readStream.schema(FRAME_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp_path}/fr/*")
-    )
+    stream, n_batches = five_spaced_batches(spark, f"{tmp_path}/fr")
     progress = run_overlay(stream, f"{tmp_path}/ckpt")
     assert sum(p["numInputRows"] > 0 for p in progress) == n_batches
-    rows = {}
-    for p in progress:
-        for op in p["stateOperators"]:
-            rows.setdefault(op["operatorName"], {})[p["batchId"]] = op["numRowsTotal"]
+    rows = state_rows_by_batch(progress)
     assert sorted(rows) == ["stateStoreSave", "symmetricHashJoin"]
     for op_rows in rows.values():
+        assert max(op_rows.values()) <= op_rows[1], rows
+
+
+def test_window_metrics_state_stays_bounded_across_batches(tmp_path):
+    """The same five spaced micro-batches of detection events through the
+    10 s tumbling-window metrics with a 10 s watermark. Batch N evicts
+    every window that closed before batch N-1's frames, so the state
+    holds at most two batches of (window, camera) rows: its size at
+    batch 1 caps every batch. Without the watermark it grows by one
+    batch of rows per batch."""
+    spark = get_spark()
+    stream, n_batches = five_spaced_batches(spark, f"{tmp_path}/fr")
+    metrics = tumbling_metrics_stream(
+        detection_events(stream), window_duration="10 seconds", watermark="10 seconds"
+    )
+    progress = run_to_end(metrics, f"{tmp_path}/ckpt")
+    assert sum(p["numInputRows"] > 0 for p in progress) == n_batches
+    rows = state_rows_by_batch(progress)
+    assert sorted(rows) == ["stateStoreSave"]
+    for op_rows in rows.values():
+        assert op_rows[1] > 0
         assert max(op_rows.values()) <= op_rows[1], rows
 
 

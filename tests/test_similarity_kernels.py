@@ -137,44 +137,6 @@ def test_blocked_kernels_equivalent_to_hof(spark):
         assert hof == blk
 
 
-def test_pandas_kernel_equivalent_to_hof(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    probes = emb.filter(F.col("vec_id") % 100 == 0)
-    hof = brute_force_topk(emb, probes, k=5, kernel="hof").collect()
-    fast = brute_force_topk(emb, probes, k=5, kernel="pandas").collect()
-    assert {(r.probe_id, r.neighbor_id, r.rank) for r in hof} == {
-        (r.probe_id, r.neighbor_id, r.rank) for r in fast
-    }
-    hs = {(r.probe_id, r.neighbor_id): r.sim for r in hof}
-    for r in fast:
-        assert abs(hs[(r.probe_id, r.neighbor_id)] - r.sim) < 1e-9
-
-
-def test_neardup_and_semdedup_fast_equivalent_to_hof(spark):
-    """The Arrow-kernel near-dup chain (embedding_cosine_neardup_fast /
-    embedding_semdedup_fast) returns the same pair set and the same
-    drop/keep tags as the oracle-checked HOF twins: same IVF blocking,
-    same rounded-cosine threshold, only the scoring kernel changes."""
-    hof_pairs = REGISTRY["embedding_cosine_neardup"].spark(spark, SF).collect()
-    fast_pairs = (
-        REGISTRY["embedding_cosine_neardup_fast"].spark(spark, SF).collect()
-    )
-    assert {(r.id_a, r.id_b) for r in hof_pairs} == {
-        (r.id_a, r.id_b) for r in fast_pairs
-    }
-    assert len(hof_pairs) > 0
-
-    hof_tags = {
-        (r.vec_id, r.n_dup_neighbors, r.is_dup)
-        for r in REGISTRY["embedding_semdedup"].spark(spark, SF).collect()
-    }
-    fast_tags = {
-        (r.vec_id, r.n_dup_neighbors, r.is_dup)
-        for r in REGISTRY["embedding_semdedup_fast"].spark(spark, SF).collect()
-    }
-    assert hof_tags == fast_tags
-
-
 def test_lsh_blocked_neardup_recall(spark):
     """The linear-time LSH-blocked near-dup path recovers the IVF-blocked
     exact pair set at high recall with zero false positives above the
@@ -235,47 +197,6 @@ def test_lsh_blocked_neardup_recall(spark):
     # legitimate (both passed the exact cosine); they must be rare
     assert len(extra_drops) <= max(2, len(ivf_dropped) // 10)
     assert len(lsh_dropped & ivf_dropped) / max(len(ivf_dropped), 1) >= 0.8
-
-
-def test_lsh_fast_twins_match_declared_chain(spark):
-    """Kernel equivalence at identical parameters: the Arrow cosine and
-    the HOF cosine produce the SAME pair set and drop tags when the
-    blocking (fixed 12 planes) is held constant — only summation order
-    differs, and every threshold compare happens on the 6-decimal-rounded
-    score. The registered _fast twins additionally use adaptive planes;
-    those must still never miss a planted exact copy."""
-    from cupertino_nvr_spark.llm.dedup import embedding_neardup_pairs_lsh
-    from cupertino_nvr_spark.plans.llm import (
-        _LSH_ND_CAP,
-        _LSH_ND_FLIP,
-        _LSH_ND_PLANES,
-    )
-
-    aug = augmented_embeddings(spark, SF)
-    kw = dict(
-        threshold=0.99,
-        n_planes=_LSH_ND_PLANES,
-        n_flip=_LSH_ND_FLIP,
-        bucket_cap=_LSH_ND_CAP,
-    )
-    hof = {
-        (r.id_a, r.id_b)
-        for r in embedding_neardup_pairs_lsh(aug, kernel="hof", **kw).collect()
-    }
-    fast = {
-        (r.id_a, r.id_b)
-        for r in embedding_neardup_pairs_lsh(aug, kernel="pandas", **kw).collect()
-    }
-    assert hof == fast and hof
-
-    fast_reg = {
-        (r.id_a, r.id_b)
-        for r in REGISTRY["embedding_cosine_neardup_lsh_fast"]
-        .spark(spark, SF)
-        .collect()
-    }
-    exact_copies = {p for p in hof if p[1] - p[0] == 1000000}
-    assert exact_copies and exact_copies <= fast_reg
 
 
 def test_phash_neardup_exact_copies_never_missed(spark):
@@ -438,21 +359,3 @@ def test_margin_cap_profile_row32_is_the_declared_shortlist(spark):
     assert set(prof) == {8, 16, 32, 64}
     # survivor count is monotone in the cap
     assert prof[8][0] <= prof[16][0] <= prof[32][0] <= prof[64][0]
-
-
-def test_margin_fast_twin_equivalent_to_declared(spark):
-    """The Arrow-kernel margin twin must emit the same top-100 pair set
-    with the same integer margins as the oracle-checked HOF query: the
-    margin stage runs on ppm integers, so the kernels can only diverge
-    where a raw cosine sits exactly on a 6-decimal rounding boundary
-    (none in this corpus)."""
-    hof = {
-        (r.id_a, r.id_b): (r.margin_ppm, r.is_confident)
-        for r in REGISTRY["embedding_margin_pairs"].spark(spark, SF).collect()
-    }
-    fast = {
-        (r.id_a, r.id_b): (r.margin_ppm, r.is_confident)
-        for r in REGISTRY["embedding_margin_pairs_fast"].spark(spark, SF).collect()
-    }
-    assert hof == fast
-    assert len(hof) == 100

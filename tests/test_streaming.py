@@ -1314,7 +1314,6 @@ def test_embedding_bucket_membership_matches_batch_blocking(spark):
             threshold=0.99,
             n_planes=10,
             bucket_cap=1_000_000,
-            kernel="hof",
         ).collect()
     }
     assert emitted <= cand

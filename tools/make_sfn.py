@@ -28,7 +28,6 @@ round's sf1 scaling study; defaults reproduce it):
         [--dst /root/repo/.sf1] [--factor 10]
 Then:
     SPARK_GRAFT_SF_DIR=/root/repo/.sf1 python bench.py
-    python tools/ab_components.py
 
 Reproducibility pin (r11 VERDICT missing-item 3): every transform above
 is seedless pure column arithmetic, so two generations from the same
