@@ -3,18 +3,21 @@
 one session, and prints two JSON lines. The first is the full record: the
 headline timings in "queries", their sum in "value" (null with "partial"
 when any headline query failed), then "variants" and "extras" (the
-alternative kernels, the later queries and the table-maintenance OPS).
+alternative forms, the later queries and the table-maintenance OPS).
 The second, printed last, is a compact copy: the headline timings plus
 the 25 costliest variants/extras. SPARK_GRAFT_HEADLINE_ONLY=1 times the
 headline set alone. Nothing is written to disk except the OPS working
 directory (.bench_tmp/), which is removed again.
 
-Each query is forced end-to-end with a noop sink (computes every output
-column, no driver collect). The headline set covers scan+agg, multi-join,
-windows, the as-of join, sessionization, the event projection chain, and
-the LLM ops whose plans are built for scale (exact dedup, MinHash-LSH,
-bucketed ANN) — the quadratic correctness baselines (brute-force cosine,
-n-gram Jaccard) are deliberately not headline queries.
+Each query is timed from plan build to the end of a noop-sink write
+(computes every output column, no driver collect), so the jobs a query
+runs while its plan is built — corpus counts, centroid and probe
+collects, iterative loops — count toward its time. The headline set
+covers scan+agg, multi-join, windows, the as-of join, sessionization,
+the event projection chain, and the LLM ops whose plans are built for
+scale (exact dedup, MinHash-LSH, bucketed ANN) — the quadratic
+correctness baselines (brute-force cosine, n-gram Jaccard) are
+deliberately not headline queries.
 """
 
 from __future__ import annotations
@@ -49,18 +52,13 @@ HEADLINE = [
     "media_features",
 ]
 
-# timed and reported, but NOT in the headline total: alternative physical
-# forms of headline results (the block-matmul `_fast` kernels, multi-probe
-# LSH, int8 and sketch forms) and the LSH-blocked near-dup chain.
-# embedding_cosine_topk (the quadratic exact baseline) appears here with
-# its blocked kernel so the HOF-vs-block-matmul delta is measured on the
-# heaviest scoring load.
+# timed and reported, but NOT in the headline total: alternative forms of
+# headline results (multi-probe LSH, int8 and sketch forms), the exact
+# brute-force baseline the ANN queries approximate, and the LSH-blocked
+# near-dup chain.
 VARIANTS = [
-    "embedding_lsh_ann_fast",
     "embedding_lsh_ann_multiprobe",
-    "embedding_ivf_ann_fast",
     "embedding_cosine_topk",
-    "embedding_cosine_topk_fast",
     "embedding_int8_ann",
     "docs_chunked_udtf",
     "event_type_user_overlap_sketch",
@@ -330,24 +328,16 @@ def main() -> None:
 
     errors: dict[str, str] = dict(warm_errors)
 
-    def timed(name: str, include_build: bool = False) -> float:
-        # headline/variants time execution only (py4j plan construction is
-        # ~0.5 s of driver-side RPC noise per query, not cluster work; a
-        # query that collects a bounded side at build — IVF centroids,
-        # blocked-kernel probes — keeps that job out of its number).
-        # extras are timed build-INCLUSIVE because iterative
-        # operators (docs_dup_clusters' label-propagation loop) do their
-        # convergence work while building the final DataFrame.
+    def timed(name: str) -> float:
         t0 = time.perf_counter()
-        df = REGISTRY[name].spark(spark, sf_dir)
-        if not include_build:
-            t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
+        REGISTRY[name].spark(spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
         return round(time.perf_counter() - t0, 3)
 
-    def timed_safe(name: str, include_build: bool = False) -> float | None:
+    def timed_safe(name: str) -> float | None:
         try:
-            return timed(name, include_build)
+            return timed(name)
         except Exception as exc:
             errors[name] = repr(exc)[:200]
             return None
@@ -358,11 +348,7 @@ def main() -> None:
     headline_only = os.environ.get("SPARK_GRAFT_HEADLINE_ONLY") == "1"
     timings = {name: timed_safe(name) for name in HEADLINE}
     variants = {} if headline_only else {name: timed_safe(name) for name in VARIANTS}
-    extras = (
-        {}
-        if headline_only
-        else {name: timed_safe(name, include_build=True) for name in EXTRAS}
-    )
+    extras = {} if headline_only else {name: timed_safe(name) for name in EXTRAS}
 
     if not headline_only:
         scratch = str(Path(__file__).resolve().parent / ".bench_tmp")

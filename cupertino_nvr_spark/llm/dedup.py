@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cupertino_nvr_spark.llm.similarity import SIM_DECIMALS
 from cupertino_nvr_spark.llm.text import ws_tokens
 
 
@@ -514,7 +515,6 @@ def embedding_cell_members(
     vec_col: str = "embedding",
     max_cells: int | None = None,
     n_assign: int = 2,
-    sim_decimals: int = 6,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Multi-probe IVF cell membership: (member_id, mvec, cell_id), one
@@ -551,9 +551,7 @@ def embedding_cell_members(
             F.col(id_col).alias("member_id"), as_double(F.col(vec_col)).alias("mvec")
         )
     )
-    return assign_cells_arrow(
-        vecs, cent, n_top=n_assign, sim_decimals=sim_decimals, keep_vec=True
-    )
+    return assign_cells_arrow(vecs, cent, n_top=n_assign, keep_vec=True)
 
 
 def embedding_candidate_ids(
@@ -562,7 +560,6 @@ def embedding_candidate_ids(
     vec_col: str = "embedding",
     max_cells: int | None = None,
     n_assign: int = 2,
-    sim_decimals: int = 6,
     n_rows: int | None = None,
     members: DataFrame | None = None,
 ) -> DataFrame:
@@ -585,7 +582,7 @@ def embedding_candidate_ids(
         members
         if members is not None
         else embedding_cell_members(
-            vectors, id_col, vec_col, max_cells, n_assign, sim_decimals, n_rows
+            vectors, id_col, vec_col, max_cells, n_assign, n_rows
         )
     ).select("member_id", "cell_id")
     return (
@@ -604,7 +601,6 @@ def embedding_neardup_pairs(
     threshold: float = 0.99,
     max_cells: int | None = None,
     n_assign: int = 2,
-    sim_decimals: int = 6,
     per_cell_cap: int | None = None,
     n_rows: int | None = None,
     members: DataFrame | None = None,
@@ -660,7 +656,7 @@ def embedding_neardup_pairs(
 
     if members is None:
         members = embedding_cell_members(
-            vectors, id_col, vec_col, max_cells, n_assign, sim_decimals, n_rows
+            vectors, id_col, vec_col, max_cells, n_assign, n_rows
         )
     # norm hoisting (r14): cosine pays dot + BOTH norms per candidate
     # pair — 3 x dim flops on the chain's dominant Σ|cell|² stream.
@@ -690,7 +686,7 @@ def embedding_neardup_pairs(
         "cell_id",
         "id_a",
         "id_b",
-        F.round(sim, sim_decimals).alias("sim"),
+        F.round(sim, SIM_DECIMALS).alias("sim"),
     )
     if per_cell_cap is not None:
         # cosine paid once per cell-pair, THEN fanned to both directions;
@@ -733,13 +729,11 @@ def embedding_neardup_pairs(
     )
 
 
-def lsh_probe_buckets(
-    cprojs: Column, n_planes: int, n_flip: int, sim_decimals: int = 6
-) -> Column:
+def lsh_probe_buckets(cprojs: Column, n_planes: int, n_flip: int) -> Column:
     """Probe-bucket array (base sign bucket + ``n_flip`` least-confident
     flips, distinct) from CENTERED hyperplane projections.
 
-    The rank key is |centered projection| ROUNDED to sim_decimals with
+    The rank key is |centered projection| ROUNDED to SIM_DECIMALS with
     the plane index as tie-break: raw doubles differ between engines in
     the last ulp (summation order), and two planes of one vector CAN
     land within an ulp of each other — rounding + a deterministic
@@ -761,7 +755,7 @@ def lsh_probe_buckets(
         F.array(
             *[
                 F.struct(
-                    F.round(F.abs(cprojs[p]), sim_decimals).alias("a"),
+                    F.round(F.abs(cprojs[p]), SIM_DECIMALS).alias("a"),
                     F.lit(p).alias("plane"),
                 )
                 for p in range(n_planes)
@@ -818,7 +812,6 @@ def embedding_bucket_membership(
     vec_col: str = "embedding",
     dim: int = 64,
     n_flip: int = 2,
-    sim_decimals: int = 6,
 ) -> DataFrame:
     """(member_id, bucket) probe-bucket membership with FIXED centering
     offsets — the streaming-safe projection: stateless per row, so it
@@ -844,7 +837,7 @@ def embedding_bucket_membership(
     return projected.select(
         "member_id",
         F.explode(
-            lsh_probe_buckets(F.col("cprojs"), n_planes, n_flip, sim_decimals)
+            lsh_probe_buckets(F.col("cprojs"), n_planes, n_flip)
         ).alias("bucket"),
     )
 
@@ -858,7 +851,6 @@ def embedding_neardup_pairs_lsh(
     n_planes: int | None = None,
     n_flip: int = 2,
     bucket_cap: int = 256,
-    sim_decimals: int = 6,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs via CENTERED sign-bit LSH blocking — the
@@ -934,7 +926,7 @@ def embedding_neardup_pairs_lsh(
         "mvec",
         norm(F.col("mvec")).alias("_mn"),
         F.explode(
-            lsh_probe_buckets(F.col("cprojs"), n_planes, n_flip, sim_decimals)
+            lsh_probe_buckets(F.col("cprojs"), n_planes, n_flip)
         ).alias("bucket"),
     )
     hot = (
@@ -966,7 +958,7 @@ def embedding_neardup_pairs_lsh(
         F.try_divide(
             dot(F.col("avec"), F.col("bvec")), F.col("_na") * F.col("_nb")
         ),
-        sim_decimals,
+        SIM_DECIMALS,
     )
     return cand.select("id_a", "id_b", sim.alias("sim")).filter(
         F.col("sim") >= threshold

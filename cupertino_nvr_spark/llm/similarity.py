@@ -1,18 +1,29 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, same contract (probe id -> top-k neighbor ids):
+Three top-k families, one kernel each, same contract (probe id -> top-k
+neighbor ids with rounded cosine ``sim`` and ``rank``), every one
+hash-checked against a DuckDB oracle:
 
-- **Brute-force cosine top-k** — the correctness baseline. Dot products are
-  pure column expressions (``zip_with`` + ``aggregate``), evaluated
-  JVM-side; the probe set is broadcast so the big side streams through one
-  scan, and per-probe ranking is a window over (probe, rounded-sim) — no
-  all-pairs materialization beyond the probe×corpus product itself, which
-  is the definition of brute force.
-- **Random-hyperplane LSH ANN** — the 100 TB path: 8 deterministic
-  hyperplane sign bits bucket the corpus (one scan), candidates come from
-  an equi-join on bucket id, and only candidates pay the exact dot product.
-  Recall < 1 by construction; rows-only checked (the driver contract's
-  weaker check) since the bucketing has no tractable ANSI-SQL oracle.
+- **Brute-force cosine top-k** (``brute_force_topk``) — the exact
+  baseline for a bounded probe panel. The probe matrix rides in the task
+  closure (at most ``MAX_PROBES`` rows) and ``mapInPandas`` streams the
+  corpus through once: one BLAS matmul per Arrow batch scores it against
+  every probe, and a lossless per-batch top-k keeps the ranked rows at
+  partitions x probes x k.
+- **Random-hyperplane LSH ANN** (``lsh_ann_topk``) — hyperplane sign bits
+  (a pure integer formula, so the oracle replays the same bucketing in
+  SQL) bucket the corpus in one scan; candidates come from an equi-join
+  on bucket id, and only candidates pay the exact cosine. Recall < 1 by
+  construction.
+- **IVF ANN** (``ivf_ann_topk``) — hash-sampled ~sqrt(n) centroids, one
+  ``assign_cells_arrow`` pass assigns members and routes probes, a
+  ``cell_id`` equi-join picks the candidates, and only they pay the
+  exact cosine.
+
+Every cosine is rounded to ``SIM_DECIMALS`` before it is ranked or
+compared, the same ``round(..., 6)`` every oracle applies: matmul, the
+column-expression sums and DuckDB's ``list_cosine_similarity`` add in
+different orders, and the rounding is what makes the engines agree.
 """
 
 from __future__ import annotations
@@ -41,11 +52,16 @@ IVF_CENT_BUDGET_BYTES = 32 << 20  # conventional broadcast comfort zone
 IVF_CENT_BYTES_PER_CELL = 64 * 8  # shipped embeddings: 64 float64 dims
 IVF_MAX_CELLS = IVF_CENT_BUDGET_BYTES // IVF_CENT_BYTES_PER_CELL  # 65536
 
-# Hard ceiling on the probe side of the blocked (closure-capture) kernels.
-# Probes ride to every executor in the UDF closure, exactly like a broadcast
-# hash side — 65536 × 64-dim float64 ≈ 32 MiB, the conventional broadcast
-# comfort zone. A caller passing an unbounded frame (e.g. probes=corpus)
-# fails fast on the driver instead of OOMing it mid-collect.
+# Decimal places every similarity is rounded to before ranking; the
+# oracles hard-code the same round(..., 6).
+SIM_DECIMALS = 6
+
+# Hard ceiling on a driver-collected side that rides in a task closure
+# (``brute_force_topk``'s probes, ``assign_cells_arrow``'s centroids).
+# It reaches every executor exactly like a broadcast hash side — 65536 ×
+# 64-dim float64 ≈ 32 MiB, the conventional broadcast comfort zone. A
+# caller passing an unbounded frame (e.g. probes=corpus) fails fast on
+# the driver instead of OOMing it mid-collect.
 MAX_PROBES = 65536
 
 
@@ -64,10 +80,10 @@ def _collect_bounded(probes: DataFrame, max_probes: int | None = None) -> list:
     rows = probes.limit(max_probes + 1).collect()
     if len(rows) > max_probes:
         raise ValueError(
-            f"probe side exceeds MAX_PROBES={max_probes}; blocked kernels "
-            "collect probes to the driver (closure capture). Pass a bounded "
-            "retrieval batch, or use the distributed HOF kernels "
-            "(brute_force_topk / lsh_ann_topk) for probe sets at corpus scale."
+            f"probe side exceeds MAX_PROBES={max_probes}; brute_force_topk "
+            "collects probes to the driver (closure capture). Pass a bounded "
+            "retrieval batch, or use the index paths (lsh_ann_topk / "
+            "ivf_ann_topk) for probe sets at corpus scale."
         )
     return rows
 
@@ -150,46 +166,6 @@ def ivf_centroids(
     stride = ivf_stride(n, max_cells)
     return corpus.filter(
         F.pmod(md5_int(F.col(id_col).cast("string")), F.lit(stride)) == 0
-    )
-
-
-def brute_force_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    sim_decimals: int = 6,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each probe (excluding itself).
-
-    Similarity is rounded before ranking so ordering is reproducible across
-    engines; ties break on neighbor id.
-    """
-    p = probes.select(
-        F.col(id_col).alias("probe_id"), as_double(F.col(vec_col)).alias("pvec")
-    )
-    c = ensure_min_parallelism(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cvec")
-        )
-    )
-    scored = (
-        F.broadcast(p)
-        .join(c, F.col("probe_id") != F.col("neighbor_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round(cosine(F.col("pvec"), F.col("cvec")), sim_decimals).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "sim", "rank")
     )
 
 
@@ -311,8 +287,14 @@ def lsh_ann_topk(
     scored = cand.select(
         "probe_id",
         "neighbor_id",
-        F.round(cosine(F.col("pvec"), F.col("cvec")), 6).alias("sim"),
+        F.round(cosine(F.col("pvec"), F.col("cvec")), SIM_DECIMALS).alias("sim"),
     )
+    return _rank_topk(scored, k)
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k (probe_id, neighbor_id, sim, rank) per probe by (sim desc,
+    neighbor_id asc) — the order every top-k oracle ranks by."""
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -321,72 +303,41 @@ def lsh_ann_topk(
     )
 
 
-def _collect_probe_matrix(df: DataFrame, id_col: str, vec_col: str):
-    """Driver-side (ids, matrix) for a BOUNDED side of the search.
-
-    Probe sets are query-side inputs (a retrieval batch) and centroid sets
-    are capped at ``IVF_MAX_CELLS`` — both are exactly the rows Spark would
-    ship in a broadcast join anyway; collecting them into a numpy matrix
-    for closure capture is the same data movement minus the JVM hash
-    relation. Ids come back sorted ascending so positional argmax breaks
-    ties toward the LOWEST id, matching the column-expression kernels.
-    """
-    import numpy as np
-
-    rows = _collect_bounded(
-        df.select(F.col(id_col).alias("pid"), as_double(F.col(vec_col)).alias("pvec"))
-    )
-    rows.sort(key=lambda r: r["pid"])
-    ids = np.array([r["pid"] for r in rows], dtype=np.int64)
-    mat = np.array([list(r["pvec"]) for r in rows], dtype=np.float64)
-    return ids, mat
-
-
-_TOPK_LOCAL_SCHEMA = "probe_id long, neighbor_id long, sim double"
-
-
-def _finish_topk(local: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "sim", "rank")
-    )
-
-
-def brute_force_topk_blocked(
+def brute_force_topk(
     corpus: DataFrame,
     probes: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    sim_decimals: int = 6,
 ) -> DataFrame:
-    """Exact top-k by block matmul — the production brute-force kernel.
+    """Exact top-k cosine neighbors for each probe (excluding itself).
 
-    A per-pair Arrow cosine UDF turned out SLOWER than the interpreted
-    HOF ``cosine`` at sf0.1 because every candidate PAIR ships both
-    vectors through Arrow — serialization dwarfs the BLAS win. This kernel
-    inverts the shape: the probe matrix rides to executors in the UDF
-    closure (bounded query-side input, same rows a broadcast join ships),
-    and ``mapInPandas`` streams the corpus through ONCE — each vector
-    crosses Arrow a single time and one (batch × dim)·(dim × P) matmul
-    scores it against every probe. No probe×corpus row materialization
-    exists at all.
+    The probe side is collected once at plan build (at most
+    ``MAX_PROBES`` rows, the same rows a broadcast join would ship) and
+    rides to the executors in the task closure; ``mapInPandas`` streams
+    the corpus through ONCE — each vector crosses Arrow a single time and
+    one (batch × dim)·(dim × P) matmul scores it against every probe. No
+    probe × corpus row is ever materialized.
 
-    Per batch only the top-k per probe survive, selected under the exact
-    global order (rounded sim desc, neighbor id asc) — a total order, so
-    per-partition pruning is provably lossless and the final window ranks
-    partitions·P·k rows instead of N·P. At 100 TB: one corpus scan, matmul
-    per batch, shuffle of k rows per (partition, probe).
+    Similarity is rounded to ``SIM_DECIMALS`` before ranking so ordering
+    is reproducible across engines; ties break on neighbor id. Per batch
+    only the top-k per probe survive, selected under that exact order —
+    a total order, so the per-batch prune is lossless and the final
+    window ranks batches·P·k rows instead of N·P.
     """
     import numpy as np
     import pandas as pd
 
-    pids, pmat = _collect_probe_matrix(probes, id_col, vec_col)
-    spark = corpus.sparkSession
-    if len(pids) == 0:
-        return spark.createDataFrame([], _TOPK_LOCAL_SCHEMA + ", rank int")
+    schema = "probe_id long, neighbor_id long, sim double"
+    rows = _collect_bounded(
+        probes.select(
+            F.col(id_col).alias("pid"), as_double(F.col(vec_col)).alias("pvec")
+        )
+    )
+    if not rows:
+        return corpus.sparkSession.createDataFrame([], schema + ", rank int")
+    pids = np.array([r["pid"] for r in rows], dtype=np.int64)
+    pmat = np.array([list(r["pvec"]) for r in rows], dtype=np.float64)
     pnorm = np.linalg.norm(pmat, axis=1)
 
     c = ensure_min_parallelism(
@@ -404,7 +355,7 @@ def brute_force_topk_blocked(
             sims = np.round(
                 (cmat @ pmat.T)
                 / (np.linalg.norm(cmat, axis=1)[:, None] * pnorm[None, :]),
-                sim_decimals,
+                SIM_DECIMALS,
             )
             sims[nbr[:, None] == pids[None, :]] = -np.inf  # self-pairs out
             m = min(k, sims.shape[0])
@@ -423,158 +374,13 @@ def brute_force_topk_blocked(
                 )
             yield pd.concat(frames, ignore_index=True)
 
-    return _finish_topk(c.mapInPandas(score, _TOPK_LOCAL_SCHEMA), k)
-
-
-def lsh_ann_topk_blocked(
-    corpus: DataFrame,
-    probes: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    k: int = 5,
-    n_planes: int = 8,
-    sim_decimals: int = 6,
-) -> DataFrame:
-    """LSH ANN with the block-matmul scoring kernel.
-
-    Bucketing stays a JVM column expression on BOTH sides (bit-identical to
-    ``lsh_ann_topk``'s routing — numpy's pairwise projection sums could
-    flip a sign on a near-zero projection); scoring inverts the data
-    movement: probes (id, bucket, vector) ride in the closure and the
-    bucketed corpus streams through ``mapInPandas`` once. A bucket-match
-    mask restricts the scored matmul entries, so emitted rows ≈ the HOF
-    path's candidate count with zero pair-row materialization.
-    """
-    import numpy as np
-    import pandas as pd
-
-    prows = _collect_bounded(
-        probes.select(
-            F.col(id_col).alias("pid"), as_double(F.col(vec_col)).alias("pvec")
-        ).withColumn("pbucket", lsh_bucket(F.col("pvec"), dim, n_planes))
-    )
-    spark = corpus.sparkSession
-    if not prows:
-        return spark.createDataFrame([], _TOPK_LOCAL_SCHEMA + ", rank int")
-    prows.sort(key=lambda r: r["pid"])
-    pids = np.array([r["pid"] for r in prows], dtype=np.int64)
-    pmat = np.array([list(r["pvec"]) for r in prows], dtype=np.float64)
-    pbuckets = np.array([r["pbucket"] for r in prows], dtype=np.int64)
-    pnorm = np.linalg.norm(pmat, axis=1)
-
-    c = ensure_min_parallelism(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cvec")
-        )
-    ).withColumn("bucket", lsh_bucket(F.col("cvec"), dim, n_planes))
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nbr = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            buckets = pdf["bucket"].to_numpy(dtype=np.int64)
-            cmat = np.array([list(v) for v in pdf["cvec"]], dtype=np.float64)
-            allow = (buckets[:, None] == pbuckets[None, :]) & (
-                nbr[:, None] != pids[None, :]
-            )
-            bi, pj = np.nonzero(allow)
-            if len(bi) == 0:
-                continue
-            sims = np.round(
-                (cmat @ pmat.T)
-                / (np.linalg.norm(cmat, axis=1)[:, None] * pnorm[None, :]),
-                sim_decimals,
-            )
-            yield pd.DataFrame(
-                {"probe_id": pids[pj], "neighbor_id": nbr[bi], "sim": sims[bi, pj]}
-            )
-
-    return _finish_topk(c.mapInPandas(score, _TOPK_LOCAL_SCHEMA), k)
-
-
-def ivf_ann_topk_blocked(
-    corpus: DataFrame,
-    probes: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_probe: int = 2,
-    max_cells: int = IVF_MAX_CELLS,
-    sim_decimals: int = 6,
-) -> DataFrame:
-    """IVF ANN with assignment + scoring fused into one corpus pass.
-
-    Centroids (≤ ``IVF_MAX_CELLS``, ≤ the 32 MiB broadcast budget by
-    construction) and probes both ride in the UDF
-    closure; probe→cell routing is computed driver-side on those two tiny
-    matrices. The single ``mapInPandas`` pass then does per batch: one
-    matmul against centroids (argmax = cell assignment; centroid ids sorted
-    ascending so ties take the lowest id, matching ``ivf_assign``), one
-    matmul against probes, and a routed-cell mask picks which (member,
-    probe) sims to emit. Each corpus vector crosses Arrow once;
-    ``ivf_ann_topk``'s route + candidate joins collapse into zero
-    shuffles before the final k-row-per-probe ranking.
-    """
-    import numpy as np
-    import pandas as pd
-
-    n_rows = corpus.count()
-    cent = ivf_centroids(corpus, id_col, max_cells, n_rows=n_rows)
-    cids, cmat = _collect_probe_matrix(cent, id_col, vec_col)
-    pids, pmat = _collect_probe_matrix(probes, id_col, vec_col)
-    spark = corpus.sparkSession
-    if len(pids) == 0 or len(cids) == 0:
-        return spark.createDataFrame([], _TOPK_LOCAL_SCHEMA + ", rank int")
-    cnorm = np.linalg.norm(cmat, axis=1)
-    pnorm = np.linalg.norm(pmat, axis=1)
-
-    # probe→cell routing, driver-side: same (rounded sim desc, cell_id asc)
-    # order as assign_cells_arrow
-    psim = np.round(
-        (pmat @ cmat.T) / (pnorm[:, None] * cnorm[None, :]), sim_decimals
-    )
-    routed = np.zeros((len(cids), len(pids)), dtype=bool)
-    for j in range(len(pids)):
-        routed[np.lexsort((cids, -psim[j]))[: min(n_probe, len(cids))], j] = True
-
-    c = ensure_min_parallelism(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cvec")
-        )
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nbr = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            vmat = np.array([list(v) for v in pdf["cvec"]], dtype=np.float64)
-            vnorm = np.linalg.norm(vmat, axis=1)
-            csim = np.round(
-                (vmat @ cmat.T) / (vnorm[:, None] * cnorm[None, :]), sim_decimals
-            )
-            cell_idx = np.argmax(csim, axis=1)  # first max = lowest cell id
-            allow = routed[cell_idx] & (nbr[:, None] != pids[None, :])
-            bi, pj = np.nonzero(allow)
-            if len(bi) == 0:
-                continue
-            sims = np.round(
-                (vmat @ pmat.T) / (vnorm[:, None] * pnorm[None, :]), sim_decimals
-            )
-            yield pd.DataFrame(
-                {"probe_id": pids[pj], "neighbor_id": nbr[bi], "sim": sims[bi, pj]}
-            )
-
-    return _finish_topk(c.mapInPandas(score, _TOPK_LOCAL_SCHEMA), k)
+    return _rank_topk(c.mapInPandas(score, schema), k)
 
 
 def assign_cells_arrow(
     vecs: DataFrame,
     cent: DataFrame,
     n_top: int,
-    sim_decimals: int = 6,
     keep_vec: bool = True,
     rank_col: str | None = None,
     id_name: str = "member_id",
@@ -591,13 +397,13 @@ def assign_cells_arrow(
     and ``dedup.embedding_cell_members`` (multi-probe membership).
 
     Centroids are driver-collected at plan build under the
-    ``MAX_PROBES`` closure budget (the blocked kernels use the same
-    pattern for probes AND centroids), sorted by cell_id so numpy's
+    ``MAX_PROBES`` closure budget (``brute_force_topk`` carries its
+    probes the same way), sorted by cell_id so numpy's
     first-max / stable-sort tie-breaks reproduce the oracle's (sim
     desc, cell_id asc) window order; a non-finite cosine (zero-norm
     vector) maps to -2.0, below the cosine range, i.e. NULLS LAST.
     Matmul sums in a different order from DuckDB's
-    ``list_cosine_similarity``; the ``sim_decimals`` rounding is what
+    ``list_cosine_similarity``; the ``SIM_DECIMALS`` rounding is what
     makes the two engines pick the same cells.
     """
     import numpy as np
@@ -630,7 +436,7 @@ def assign_cells_arrow(
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = np.round(
                     vmat @ cmat.T / (vnorm[:, None] * cnorm[None, :]),
-                    sim_decimals,
+                    SIM_DECIMALS,
                 )
             sims[~np.isfinite(sims)] = -2.0
             if k == 1:
@@ -655,7 +461,6 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sim_decimals: int = 6,
     keep_vec: bool = False,
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (IVF cell):
@@ -678,7 +483,7 @@ def ivf_assign(
         )
     )
     return assign_cells_arrow(
-        vecs, cent, n_top=1, sim_decimals=sim_decimals, keep_vec=keep_vec
+        vecs, cent, n_top=1, keep_vec=keep_vec
     )
 
 
@@ -689,7 +494,6 @@ def ivf_route_candidates(
     vec_col: str = "embedding",
     n_probe: int = 2,
     max_cells: int = IVF_MAX_CELLS,
-    sim_decimals: int = 6,
 ) -> DataFrame:
     """THE IVF routing stage — (probe_id, pvec, member_id, mvec, crank).
 
@@ -715,9 +519,7 @@ def ivf_route_candidates(
     centroids = ivf_centroids(corpus, id_col, max_cells)
     # keep_vec: the assignment row already carries the member vector, so
     # the old corpus re-join (a full extra shuffle of the vectors) is gone
-    members = ivf_assign(
-        corpus, centroids, id_col, vec_col, sim_decimals, keep_vec=True
-    )
+    members = ivf_assign(corpus, centroids, id_col, vec_col, keep_vec=True)
 
     cent = centroids.select(
         F.col(id_col).alias("cell_id"), as_double(F.col(vec_col)).alias("centvec")
@@ -729,7 +531,6 @@ def ivf_route_candidates(
         p,
         cent,
         n_top=n_probe,
-        sim_decimals=sim_decimals,
         keep_vec=True,
         rank_col="crank",
         id_name="probe_id",
@@ -750,7 +551,6 @@ def ivf_ann_topk(
     k: int = 5,
     n_probe: int = 2,
     max_cells: int = IVF_MAX_CELLS,
-    sim_decimals: int = 6,
 ) -> DataFrame:
     """IVF-style ANN: the second scale path next to LSH bucketing.
 
@@ -758,25 +558,17 @@ def ivf_ann_topk(
     ~min(sqrt(n), max_cells) subset of the corpus (``ivf_centroids``; a
     k-means iteration would drop in here — the index structure: cells,
     routing, candidate equi-join, is what scales, and it is fully
-    SQL-expressible so the oracle can hash-check it, unlike the LSH
-    variant). Per probe, the ``n_probe`` nearest cells are searched
+    SQL-expressible so the oracle can hash-check it). Per probe, the ``n_probe`` nearest cells are searched
     exactly; candidates come from the shared ``ivf_route_candidates``
     routing stage, so cost is n_probe/n_cells of brute force.
     """
-    cand = ivf_route_candidates(
-        corpus, probes, id_col, vec_col, n_probe, max_cells, sim_decimals
-    )
+    cand = ivf_route_candidates(corpus, probes, id_col, vec_col, n_probe, max_cells)
     scored = cand.select(
         "probe_id",
         F.col("member_id").alias("neighbor_id"),
-        F.round(cosine(F.col("pvec"), F.col("mvec")), sim_decimals).alias("sim"),
+        F.round(cosine(F.col("pvec"), F.col("mvec")), SIM_DECIMALS).alias("sim"),
     ).distinct()  # a neighbor reachable via both probed cells counts once
-    w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def kmeans_refine(
@@ -785,7 +577,6 @@ def kmeans_refine(
     vec_col: str = "embedding",
     iterations: int = 2,
     max_cells: int = IVF_MAX_CELLS,
-    sim_decimals: int = 6,
 ) -> tuple[DataFrame, DataFrame]:
     """Lloyd's k-means over cosine assignment, seeded by the IVF
     hash-sampled centroids — the refinement step the IVF docstrings point
@@ -820,10 +611,7 @@ def kmeans_refine(
         named = c.select(
             F.col("cell_id").alias("member_id"), F.col("centvec").alias("mvec")
         )
-        return ivf_assign(
-            vecs, named, id_col="member_id", vec_col="mvec",
-            sim_decimals=sim_decimals,
-        )
+        return ivf_assign(vecs, named, id_col="member_id", vec_col="mvec")
 
     for _ in range(iterations):
         assign = _assign(cents)

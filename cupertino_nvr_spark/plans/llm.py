@@ -733,7 +733,8 @@ def docs_neardup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame
              ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS rank
       FROM scored) WHERE rank <= 5
     """,
-    doc="brute-force cosine top-5 ANN baseline: broadcast probes, one corpus scan",
+    doc="brute-force cosine top-5 ANN baseline: one corpus scan, one block "
+    "matmul per Arrow batch against the closure-carried probe matrix",
 )
 def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
@@ -848,55 +849,6 @@ def embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     probes = emb.filter(F.col("vec_id") % 100 == 0)
     return ivf_ann_topk(emb, probes, k=5, n_probe=2)
-
-
-@register(
-    "embedding_ivf_ann_fast",
-    None,  # numpy pairwise summation differs from the HOF sequential sum in
-    # the last ulp, so no cross-engine hash oracle; equivalence to the HOF
-    # path is asserted in tests/test_similarity_kernels.py
-    doc="IVF-cell ANN, block-matmul kernel: assignment + routed scoring fused "
-    "into one mapInPandas corpus pass (centroids+probes in the UDF closure) — "
-    "the production scoring path, same logical result as embedding_ivf_ann",
-    bench_only=True,
-)
-def embedding_ivf_ann_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cupertino_nvr_spark.llm.similarity import ivf_ann_topk_blocked
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") % 100 == 0)
-    return ivf_ann_topk_blocked(emb, probes, k=5, n_probe=2)
-
-
-@register(
-    "embedding_lsh_ann_fast",
-    None,  # numpy kernel, same last-ulp caveat as embedding_ivf_ann_fast
-    doc="LSH bucketed ANN, block-matmul kernel: JVM bucketing (bit-identical "
-    "to embedding_lsh_ann) + one mapInPandas scoring pass with a bucket mask",
-    bench_only=True,
-)
-def embedding_lsh_ann_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cupertino_nvr_spark.llm.similarity import lsh_ann_topk_blocked
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") % 100 == 0)
-    return lsh_ann_topk_blocked(emb, probes, dim=64, k=5)
-
-
-@register(
-    "embedding_cosine_topk_fast",
-    None,  # same last-ulp caveat as the other blocked kernels
-    doc="brute-force cosine top-5, block-matmul kernel: one corpus scan, one "
-    "BLAS matmul per Arrow batch, lossless per-partition top-k prune — the "
-    "production exact-search path, same logical result as embedding_cosine_topk",
-    bench_only=True,
-)
-def embedding_cosine_topk_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cupertino_nvr_spark.llm.similarity import brute_force_topk_blocked
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") % 100 == 0)
-    return brute_force_topk_blocked(emb, probes, k=5)
 
 
 _AUG_EMB_SQL = """
@@ -2770,8 +2722,8 @@ def docs_hot_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Deterministic probe-side bound for the exact int8 baseline: probes are
 # vec_id % 100 == 0 AND vec_id below this, so the broadcast side holds at
-# most MAX_PROBES (65536) rows NO MATTER the corpus size — same budget the
-# blocked kernels enforce via _collect_bounded (llm/similarity.py). A
+# most MAX_PROBES (65536) rows NO MATTER the corpus size — same budget
+# brute_force_topk enforces via _collect_bounded (llm/similarity.py). A
 # predicate (not limit()) keeps the probe set deterministic, so the oracle
 # replays it exactly; below 6.5M corpus rows it selects every %100 probe
 # and the result is unchanged.
@@ -7891,7 +7843,7 @@ _RRF_K = 60
         "retrieval IS docs_bm25_search) full-outer-joined with a dense "
         "cosine top-10 leg on (query, doc), 1/(k+rank) contributions "
         "summed, re-ranked. Both legs are bounded-probe retrievals "
-        "(broadcast terms / broadcast probe vectors, one corpus scan "
+        "(broadcast terms / closure-carried probe vectors, one corpus scan "
         "each); fusion touches only 2x10 rows per query, so the whole "
         "extra cost of hybrid over either leg is the legs themselves. "
         "rank=0 marks a doc absent from that leg."
@@ -9742,9 +9694,10 @@ def docs_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DPR / contrastive-training data op): for each probe in the fixed eval
 # panel, the top-5 most-similar corpus vectors carrying a DIFFERENT
 # label — the "looks close, is wrong" examples a contrastive loss needs.
-# Rides embedding_cosine_topk's bounded-probe brute-force chain with the
-# label inequality folded into the join predicate, so unwanted pairs are
-# dropped before the window ranks.
+# Scores the same bounded probe panel x corpus as embedding_cosine_topk,
+# but as a column-expression join with the label inequality folded into
+# the join predicate, so unwanted pairs are dropped before the window
+# ranks.
 @register(
     "embedding_hard_negatives",
     """

@@ -40,15 +40,13 @@ def test_shingle_df_cap_suppresses_boilerplate(spark):
 
 
 def test_blocked_kernels_reject_oversized_probe_side(spark, monkeypatch):
-    """The blocked ANN kernels collect() the probe side into the UDF closure;
-    an unbounded probe frame (e.g. probes=corpus) must fail fast on the
+    """brute_force_topk collect()s the probe side into the UDF closure; an
+    unbounded probe frame (e.g. probes=corpus) must fail fast on the
     driver instead of OOMing it mid-collect."""
     import pytest
 
     from cupertino_nvr_spark.llm import similarity as S
 
-    # id 0 and id 12 share the identical vector (id%12 folds them), so the
-    # LSH kernel is guaranteed at least one same-bucket neighbor pair
     emb = spark.range(13).select(
         F.col("id").alias("vec_id"),
         F.array(
@@ -57,14 +55,16 @@ def test_blocked_kernels_reject_oversized_probe_side(spark, monkeypatch):
     )
     monkeypatch.setattr(S, "MAX_PROBES", 8)
     with pytest.raises(ValueError, match="MAX_PROBES"):
-        S.brute_force_topk_blocked(emb, emb, k=2)
-    with pytest.raises(ValueError, match="MAX_PROBES"):
-        S.lsh_ann_topk_blocked(emb, emb, dim=4, k=2)
-    # a bounded batch under the cap still runs on both kernels and finds
-    # real neighbors (vec 0's identical twin guarantees an LSH hit)
+        S.brute_force_topk(emb, emb, k=2)
+    # a bounded batch under the cap still runs: every probe gets its k
+    # neighbors, and id 0's identical twin (id 12, folded by id % 12) ranks
+    # first at cosine 1
     small = emb.filter(F.col("vec_id") < 3)
-    assert S.brute_force_topk_blocked(emb, small, k=2).count() > 0
-    assert S.lsh_ann_topk_blocked(emb, small, dim=4, k=2).count() > 0
+    got = S.brute_force_topk(emb, small, k=2).collect()
+    assert len(got) == 3 * 2
+    assert {(r.neighbor_id, r.sim) for r in got if r.probe_id == 0 and r.rank == 1} == {
+        (12, 1.0)
+    }
 
 
 def test_band_cap_suppresses_hot_buckets(spark):

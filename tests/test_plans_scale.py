@@ -33,63 +33,44 @@ def plan_of(spark, name: str) -> str:
     return buf.getvalue()
 
 
-# Queries whose semantics ARE an all-pairs product over a broadcast-small
-# side: brute-force cosine scores every (probe, corpus) pair by definition
-# (the correctness baseline; embedding_lsh_ann is its scale path and stays
-# equi-join). For these, BroadcastNestedLoopJoin with the tiny side built
-# is the correct physical shape.
-# IVF cell assignment and probe routing (similarity.assign_cells_arrow)
-# carry the centroid matrix in the task closure, so the IVF consumers
-# (embedding_ivf_ann, embedding_ivf_pq_ann, embedding_cosine_neardup,
-# embedding_semdedup, embedding_eval_decontam, embedding_kmeans) plan no
-# nested-loop join at all and are deliberately NOT listed here.
+# Queries whose plan keeps a BroadcastNestedLoopJoin on purpose: every
+# entry's build side is bounded by construction (a 1-row stats attach, a
+# few-row spine, a bounded probe panel), never by the data.
+# Brute-force top-k (similarity.brute_force_topk) scores its probe panel
+# in one mapInPandas corpus pass with the probe matrix in the task
+# closure, and IVF cell assignment and probe routing
+# (similarity.assign_cells_arrow) carry the centroid matrix the same
+# way, so their consumers (embedding_cosine_topk, embedding_ann_recall_eval,
+# embedding_knn_label_eval, embedding_mmr_rerank, the IVF ANN and
+# near-dup chains) plan no nested-loop join at all and are deliberately
+# NOT listed here.
 ALLOWED_BNLJ = {
-    "embedding_cosine_topk",
-    # ground-truth side IS embedding_cosine_topk's bounded probes x
-    # corpus exact scoring (1% sampled probe set — an eval harness);
-    # the candidate side and the comparison are equi-joins
-    "embedding_ann_recall_eval",
-    # the ground-truth side of embedding_ann_recall_eval (bounded 1% probe
-    # panel x corpus exact scoring) and a 4-row n_probe spine
-    # range-joined against the bounded candidate-pair frame (the
-    # media_phash_tau_profile spine pattern) — the sweep re-ranks one
-    # pair frame, it never re-routes
+    # 4-row n_probe spine range-joined against the bounded candidate-pair
+    # frame (the media_phash_tau_profile spine pattern) — the sweep
+    # re-ranks one pair frame, it never re-routes
     "embedding_ivf_probe_profile",
-    # its nested-loop side is the ground-truth side of
-    # embedding_ann_recall_eval (hard-capped probe panel x corpus exact
-    # scoring); the IVF+PQ serving chain and the full-precision rerank it
-    # composes are equi-joins, and its own additions are two
-    # (probe, neighbor)-keyed left joins + one per-probe aggregate
-    "embedding_ivf_pq_recall_eval",
     # 1-row per-plane mean-projection attach (the centering stats); the
     # candidate generation itself is a bucket equi-join with a hot-bucket
     # cap — the linear-time blocking path
     "embedding_cosine_neardup_lsh",
     "embedding_semdedup_lsh",  # same chain + pair groupBy/keyed left join
-    # dense leg is embedding_cosine_topk's shape: 3 broadcast probe
-    # vectors x one corpus scan; fusion itself is a 10-rows-per-leg
+    # the BM25 sparse leg's 1-row (N, avgdl) corpus-stats attach (the
+    # docs_bm25_search shape); fusion itself is a 10-rows-per-leg
     # full-outer equi-join
     "docs_hybrid_rrf_search",
-    # three 1-row attaches per corpus pass (mean vector, then the
-    # current iterate v each round) — the covariance matvec itself is a
-    # per-dim map-side-combined aggregation, never dim^2
-    "embedding_power_iteration_pc1",
-    # same chain + one projection pass + a 1-row moment attach
+    # 1-row attaches onto the projection pass: the mean vector, the
+    # checkpointed final iterate v and the (mu, sd) moments — the
+    # power-iteration rounds before it are per-dim map-side-combined
+    # aggregations, never dim^2
     "embedding_pc1_outliers",
     # doc-profile rows x broadcast(n_langs) candidate languages — the
     # rank-distance must score every language; the build side is the
     # distinct-language dim (5 rows), bounded by the catalog not the
     # corpus; profile lookup itself is a broadcast equi-join
     "docs_char_ngram_langid",
-    # rides embedding_cosine_topk's bounded-probe brute-force chain
-    "embedding_knn_label_eval",
-    # same chain with the label inequality folded into the theta join —
-    # the build side stays the fixed 200-slot probe panel
+    # bounded-probe brute force with the label inequality folded into the
+    # theta join — the build side is the fixed 200-slot probe panel
     "embedding_hard_negatives",
-    # rides the same bounded-probe chain for its top-10 candidates; the
-    # pair sims and greedy selection run on panel-bounded equi-joined
-    # frames (10 candidates / 90 pairs per probe)
-    "embedding_mmr_rerank",
     # BM25 attaches the single-row (N, avgdl) corpus stats to every scored
     # row: a broadcast of exactly one row — BroadcastNestedLoopJoin Cross
     # with a 1-row build side IS the right plan (a shuffle-free scalar
@@ -124,9 +105,6 @@ ALLOWED_BNLJ = {
     # 1-row corpus-size (N for idf) attach; the df scoring join itself is
     # a term equi-join (vocab-sized side, never broadcast by construction)
     "docs_tfidf_topterms",
-    # five 1-row stage-count aggregates cross-joined into the report row;
-    # every data-sized join inside (keepers, contamination) is equi-keyed
-    "docs_curation_report",
     # two 1-row attaches: global-max timestamp + the quartile thresholds
     # (the alternative, NTILE(4) over all users, is an unpartitioned
     # global-sort window — the actual scale hazard)
@@ -173,9 +151,8 @@ ALLOWED_BNLJ = {
     # broadcast(centroids) distances for a/b, centroid count bounded by
     # the IVF stride cap — the eval scales wherever embedding_kmeans does
     "embedding_silhouette",
-    # both legs are the allow-listed bounded-probe retrievals (BM25's
-    # 1-row stats attach, dense's 3-probe x corpus scan); the RBO spine
-    # join is 10 depth rows x <=10 overlap rows per query
+    # BM25's 1-row stats attach on the sparse leg; the RBO spine join is
+    # 10 depth rows x <=10 overlap rows per query
     "docs_retrieval_rbo",
     # 4-row seq_len spine x #shards-row token totals — both sides bounded
     # post-aggregation, the corpus contributes one map-side-combined agg

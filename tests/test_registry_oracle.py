@@ -25,8 +25,9 @@ ROWS_ONLY_SPECS = sorted(name for name, s in REGISTRY.items() if s.oracle is Non
 # full rehearsal remains the documented round-close command in
 # pytest.ini). Chosen: the flagship, one scan-agg, one window chain, one
 # event chain, the touched-this-round dedup/clustering/curation chains,
-# one simhash, one embedding blocking chain, one IVF ANN, one rollup,
-# one media row.
+# one simhash, one embedding blocking chain, one IVF ANN, the exact
+# brute-force top-k (the block-matmul kernel every brute-force consumer
+# runs), one rollup, one media row.
 SMOKE_SPECS = [
     "asof_ttl_overlay",
     "pricing_summary",
@@ -41,6 +42,7 @@ SMOKE_SPECS = [
     "docs_curation_inc_report",
     "embedding_cosine_neardup",
     "embedding_ivf_ann",
+    "embedding_cosine_topk",
     "media_features",
 ]
 

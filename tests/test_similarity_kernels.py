@@ -1,4 +1,4 @@
-"""ANN quality + kernel-equivalence pins.
+"""ANN quality pins.
 
 Recall floors: the synthetic embeddings are near-uniform random, so ANN
 recall on arbitrary neighbors is ~(fraction of corpus searched) by
@@ -12,11 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cupertino_nvr_spark.llm.similarity import (
-    brute_force_topk,
-    ivf_ann_topk,
-    lsh_ann_topk,
-)
+from cupertino_nvr_spark.llm.similarity import ivf_ann_topk, lsh_ann_topk
 from cupertino_nvr_spark.plans import REGISTRY
 from cupertino_nvr_spark.plans.llm import augmented_embeddings
 
@@ -105,36 +101,6 @@ def test_natural_recall_floor(spark):
     # corpus); anything > 0 proves bucketing routes probes with the corpus,
     # and the planted-pair test above pins the quality that matters
     assert len(bf & lsh) / len(bf) >= 0.04
-
-
-def test_blocked_kernels_equivalent_to_hof(spark):
-    """The three block-matmul production kernels return the same
-    (probe, neighbor, rank) sets as their column-expression twins — the
-    physical plan changes (one mapInPandas pass, closure-carried probe
-    matrix), the logical result doesn't."""
-    from cupertino_nvr_spark.llm.similarity import (
-        brute_force_topk_blocked,
-        ivf_ann_topk_blocked,
-        lsh_ann_topk_blocked,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    probes = emb.filter(F.col("vec_id") % 100 == 0)
-    pairs = [
-        (brute_force_topk(emb, probes, k=5), brute_force_topk_blocked(emb, probes, k=5)),
-        (
-            ivf_ann_topk(emb, probes, k=5, n_probe=2),
-            ivf_ann_topk_blocked(emb, probes, k=5, n_probe=2),
-        ),
-        (
-            lsh_ann_topk(emb, probes, dim=64, k=5),
-            lsh_ann_topk_blocked(emb, probes, dim=64, k=5),
-        ),
-    ]
-    for hof_df, blocked_df in pairs:
-        hof = {(r.probe_id, r.neighbor_id, r.rank) for r in hof_df.collect()}
-        blk = {(r.probe_id, r.neighbor_id, r.rank) for r in blocked_df.collect()}
-        assert hof == blk
 
 
 def test_lsh_blocked_neardup_recall(spark):
