@@ -132,7 +132,7 @@ def dup_clusters_materialize(
     (cluster assignments), the DECISION (survivor flags), and the
     QUALITY row (B-cubed vs the construction gold) all derive from the
     persisted frame with cheap single-pass shapes — never re-running
-    propagation per consumer. Each derived frame is row-identical to its
+    the contraction per consumer. Each derived frame is row-identical to its
     standalone registry twin (``docs_dup_clusters``,
     ``docs_dedup_survivors``, ``docs_cluster_bcubed`` — pinned by
     ``tests/test_export.py``), because all four build through the same
@@ -164,7 +164,7 @@ def media_doc_components_materialize(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The cross-modal twin of ``dup_clusters_materialize``: compute the
     shared (node, cluster_id) component frame ONCE (signatures -> bands
-    -> pHash pairs -> provenance links -> propagation — the chain both
+    -> pHash pairs -> provenance links -> contraction — the chain both
     registry entries rebuild when run standalone), persist it to
     ``out_dir``, and derive the cluster REPORT and the dedup DECISION
     from the materialized frame. Row-identical to the standalone

@@ -11,18 +11,15 @@ Scale notes per operator:
   zero shuffles). Patterns are RE2-compatible so the DuckDB oracle runs
   the identical regexes.
 - **Duplicate clustering** — connected components over the *bipartite*
-  (doc, band-key) membership from MinHash banding. Propagating min-labels
-  doc→key→doc per iteration means cost per round is linear in membership
-  rows (never pair rows), so a hot band of m docs costs m, not m² — the
-  component structure comes out WITHOUT materializing candidate pairs.
-  Two-phase: single-hop propagation for the first ``ramp_rounds`` rounds
-  (shallow graphs — the common case — converge there at minimum
-  per-round cost), then large-star/small-star edge contraction for the
-  deep-chain tail (O(log² n) rounds independent of diameter, where
-  propagation is bound by diameter). Each round is two shuffles with
-  map-side combine on MIN; ``reliable_checkpoint`` truncates the growing
-  lineage each round (fault-tolerant ``checkpoint()`` on clusters, local
-  otherwise).
+  (doc, band-key) membership from MinHash banding. Each key stars its
+  members onto the key's min member, so the edge count is linear in
+  membership rows (never pair rows): a hot band of m docs costs m, not
+  m², and no candidate pair is materialized. Large-star/small-star
+  contraction then finds the components in O(log² n) rounds independent
+  of graph diameter; each round costs fixed job overhead, so the round
+  count, not the data volume, sets the price. ``reliable_checkpoint``
+  truncates the lineage each round (fault-tolerant ``checkpoint()`` on
+  clusters, local otherwise).
 - **Split + shard packing** — hash-split (train/val/test) then greedy
   token-budget packing via a running sum windowed over (split, bucket):
   bucketing bounds every window partition to ~1/n_buckets of the split,
@@ -54,13 +51,6 @@ _REDACTIONS = [  # applied in order; email first so its domain dots never
     (PHONE_RE, "<PHONE>"),
     (IPV4_RE, "<IP>"),
 ]
-
-# Diagnostics from the most recent components_over_keys call on this
-# driver (round counts + whether star contraction engaged) — what the
-# path-engagement regression tests read.
-# Driver-local bookkeeping only; never consulted by the plans.
-LAST_RUN_STATS: dict = {}
-
 
 def pii_counts(text: Column) -> dict[str, Column]:
     return {
@@ -102,161 +92,31 @@ def components_over_keys(
     id_col: str = "doc_id",
     key_col: str = "band_key",
     max_iter: int = 25,
-    ramp_rounds: int = 6,
 ) -> DataFrame:
     """Connected components of the bipartite (node, key) graph: two nodes
     are connected iff they transitively share keys. Returns
     (id_col, cluster_id) where cluster_id = min node id in the component.
 
-    Two-phase: the first ``ramp_rounds`` rounds are plain single-hop
-    min-label propagation with pointer jumping — each round pushes
-    labels node→key (min per key) then key→node (min over a node's
-    keys), then path-halves once (label := min(label, label-of-label);
-    every label is itself a node id so the hop is total). Shallow
-    graphs — exact-dup band memberships with diameter 2-3, the COMMON
-    case for every clustering consumer — converge inside the ramp at
-    the cheapest possible per-round cost (two min-combined shuffles +
-    one labels-sized join). A graph still unconverged after the ramp is
-    draining a chain — the r10 sf1 profile measured the min label
-    traveling exactly one key-graph EDGE per node→key→node pass
-    (jumped=0 while changed>0 in tail rounds: label-tree compression
-    cannot shortcut distance that lives in the KEY graph) on >40-hop
-    key chains — so the loop hands the rest to alternating
-    large-star/small-star edge contraction (Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond") over the
-    LABEL-contracted graph: nodes collapse to their current labels
-    (same-component invariant), each key star-ifies to (member-label →
-    key-min-label) edges, and the alternating rounds converge in
-    O(log^2 n) rounds INDEPENDENT of graph diameter, vs rounds ≈
-    diameter for propagation (r10 measured 19 rounds on the sf1
-    cross-modal graph). Same fixpoint: the component min node's label
-    is itself, so the star roots ARE the component minima.
-
-    ``max_iter`` counts ROUNDS: a propagation round is one key hop, a
-    contraction round one large-star + small-star pass; callers with
-    ``max_iter <= ramp_rounds`` run pure single-hop propagation and
-    never engage contraction. Work per round stays O(|membership| +
-    |nodes|) (contraction: O(|edges|) with |edges| <= |membership|): no
-    pair join ever happens, which is what makes clustering hot bands
-    safe at scale. Raises if ``max_iter`` rounds don't reach the
-    fixpoint — a loud failure beats a silently-wrong clustering.
+    Per key, every member is starred onto the key's minimum member — a
+    window MIN over the membership rows, O(|membership|) edges and never
+    a pair join, so a hot key of m members costs m. The edge set then
+    goes to large-star/small-star contraction (``_star_contract``),
+    whose rounds are independent of graph diameter. A node with no edge
+    is its own root. Every membership id must also appear in ``nodes``.
+    ``max_iter`` is the contraction's round budget; running out raises
+    rather than returning a partial clustering.
     """
-    LAST_RUN_STATS.clear()
-    LAST_RUN_STATS.update(
-        {"propagation_rounds": 0, "deep_path": None, "contract_rounds": 0}
-    )
-    labels = nodes.select(F.col(id_col)).distinct().select(
-        F.col(id_col), F.col(id_col).alias("label")
-    )
-    memb = reliable_checkpoint(
-        membership.select(F.col(id_col), F.col(key_col)).distinct()
-    )
+    from pyspark.sql import Window
 
-    for rnd in range(max_iter):
-        if rnd >= ramp_rounds:
-            # unconverged after the ramp: a deep chain — hand the
-            # label-contracted graph to star contraction, which owns
-            # the remaining round budget
-            LAST_RUN_STATS["deep_path"] = "contract"
-            return _contract_components(
-                labels, memb, id_col, key_col, max_iter - rnd
-            )
-        LAST_RUN_STATS["propagation_rounds"] = rnd + 1
-        key_min = (
-            memb.join(labels, id_col)
-            .groupBy(key_col)
-            .agg(F.min("label").alias("key_label"))
-        )
-        via = (
-            memb.join(key_min, key_col)
-            .groupBy(id_col)
-            .agg(F.min("key_label").alias("nbr_label"))
-        )
-        # persisted: referenced twice below (self + pointer map)
-        stepped = labels.join(via, id_col, "left").select(
-            id_col,
-            F.col("label").alias("_old"),
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
-        ).persist()
-        # pointer jumping: follow the label one hop (label-of-label);
-        # labels only decrease, so min(label, its label) keeps the
-        # component-min invariant while halving chain distances
-        ptr = stepped.select(
-            F.col(id_col).alias("_t"), F.col("label").alias("_tl")
-        )
-        # the change flag rides in the checkpointed frame, so convergence
-        # detection is a column sum over the rows this round materializes
-        # anyway — no extra old-vs-new join per round. The checkpoint is
-        # LAZY: the convergence aggregate below is the round's ONE action,
-        # and materializing the frame as that job's side effect (instead
-        # of an eager checkpoint job + a second agg job over the
-        # materialized blocks) halves the per-round fixed job overhead —
-        # at ~1M-row frames scheduling, not data volume, is the per-round
-        # cost. The agg computes every partition (a global sum), so the
-        # frame is fully materialized when the collect returns.
-        new_labels = reliable_checkpoint(
-            stepped.join(ptr, stepped["label"] == F.col("_t"), "left")
-            .select(
-                F.col(id_col),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("_tl"), F.col("label"))
-                ).alias("label"),
-                (
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("_tl"), F.col("label"))
-                    )
-                    < F.col("_old")
-                ).cast("int").alias("_changed"),
-            ),
-            eager=False,
-        )
-        changed = new_labels.agg(F.sum("_changed")).collect()[0][0] or 0
-        stepped.unpersist()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            return labels.withColumnRenamed("label", "cluster_id")
-    raise RuntimeError(f"components_over_keys: no fixpoint after {max_iter} rounds")
-
-
-def _contract_components(
-    labels: DataFrame,
-    memb: DataFrame,
-    id_col: str,
-    key_col: str,
-    max_iter: int,
-) -> DataFrame:
-    """Finish a partially-propagated clustering by star contraction.
-
-    ``labels`` is (id, label) where label is a node id inside the same
-    component (the min-propagation invariant) — so contracting every
-    node to its label preserves components exactly, and the component
-    MIN's label is itself (nothing smaller exists to displace it), so
-    the contracted graph's component minima are the original ones.
-    Edges: per key, the distinct member labels star-ify onto the
-    key-min label — O(|membership|) edges, never a pair join. Final
-    labels: node -> root(label) (labels absent from the edge set are
-    already component minima or singletons).
-    """
-    lab_memb = (
-        memb.join(labels, id_col)
-        .select(F.col("label").alias("u"), F.col(key_col).alias("_k"))
-        .distinct()
-    )
-    kmin = lab_memb.groupBy("_k").agg(F.min("u").alias("v"))
+    kmin = F.min(id_col).over(Window.partitionBy(key_col))
     edges = (
-        lab_memb.join(kmin, "_k")
+        membership.select(F.col(id_col).alias("u"), kmin.alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .select("u", "v")
     )
     roots = _star_contract(edges, max_iter)
-    return (
-        labels.join(roots, labels["label"] == roots["_cn"], "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("_croot"), F.col("label")).alias("cluster_id"),
-        )
+    ids = nodes.select(id_col).distinct()
+    return ids.join(roots, ids[id_col] == roots["_cn"], "left").select(
+        F.col(id_col), F.coalesce("_croot", id_col).alias("cluster_id")
     )
 
 
@@ -283,14 +143,11 @@ def _star_contract(edges: DataFrame, max_iter: int) -> DataFrame:
     child>parent) merges u and its smaller neighbors onto their min.
     Both preserve connectivity (paper Lemmas 1-2) and strictly decrease
     a potential until the edge set is a star forest, in O(log^2 n)
-    rounds independent of graph diameter — the property that makes this
-    the deep-chain path where per-round propagation is bound by
-    diameter. Returns (_cn [child node], _croot [component min]) for
+    rounds independent of graph diameter. Returns (_cn [child node], _croot [component min]) for
     every non-root node in ``edges``. Raises on round exhaustion."""
     edges = reliable_checkpoint(edges.select("u", "v").distinct())
-    for rnd in range(max_iter):
+    for _ in range(max_iter):
         if _is_star_forest(edges):
-            LAST_RUN_STATS["contract_rounds"] = rnd
             return edges.select(
                 F.col("u").alias("_cn"), F.col("v").alias("_croot")
             )
@@ -318,9 +175,7 @@ def _star_contract(edges: DataFrame, max_iter: int) -> DataFrame:
         )
         e_self = smin.select("u", F.col("_mn").alias("v"))
         edges = reliable_checkpoint(e_sib.unionByName(e_self).distinct())
-    raise RuntimeError(
-        f"_star_contract: no star forest after {max_iter} rounds"
-    )
+    raise RuntimeError(f"components_over_keys: no fixpoint after {max_iter} rounds")
 
 
 def duplicate_clusters(

@@ -38,7 +38,7 @@ from cupertino_nvr_spark.operators.checkpoint import reliable_checkpoint
 # Ceiling on the IVF centroid count. The centroid matrix rides to every
 # task in the assignment/routing closure (``assign_cells_arrow``), so the
 # one PHYSICAL bound on the cell count is a broadcast-sized byte budget — derive the cap from it instead
-# of pinning a literal (r12 VERDICT item 2: the old fixed 4096 inflected
+# of pinning a literal (a fixed 4096 would inflect
 # the sqrt(n) cell target into a linear per-cell-membership regime past
 # 4096² ≈ 16.7M vectors, and with it the blocking families' Σ|cell|²
 # candidate term into n²/4096). At 64-dim float64 centroids the 32 MiB
@@ -670,8 +670,8 @@ def margin_scored_pairs(
     Pairs with non-positive sim or denominator are not mining candidates
     and are dropped.
 
-    **Per-endpoint candidate cap** (``cand_cap``, the r11 VERDICT's one
-    scale watch item): only pairs inside at least one endpoint's
+    **Per-endpoint candidate cap** (``cand_cap``, the chain's one scale
+    hazard without it): only pairs inside at least one endpoint's
     ``cand_cap`` best candidates (by sim6 desc, neighbor id — the same
     deterministic rank the top-k stats use) are scored. Under
     sqrt(n)-cell IVF blocking the raw candidate volume grows ~n^1.5, and
@@ -687,8 +687,8 @@ def margin_scored_pairs(
     hot-band caps; the capped definition itself is pinned by a Python
     recompute in tests/test_similarity_kernels.py. The DEFAULT is
     ``cand_cap=None`` — score every candidate pair, the library
-    function's original documented semantics (r12 ADVICE: a silent
-    default cap would change results under callers that relied on the
+    function's original documented semantics (a silent default cap
+    would change results under callers that relied on the
     uncapped definition); every registered consumer opts into its cap
     explicitly (the declared queries pass cand_cap=32/64).
 

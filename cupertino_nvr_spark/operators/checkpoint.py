@@ -6,7 +6,7 @@ after the checkpoint loses blocks that can no longer be recomputed (the
 lineage is gone), killing the job. That is acceptable in ``local[N]``
 (one JVM — if it dies the job is dead anyway) but not in the
 1000-executor posture, where iterative operators (PageRank, k-means,
-label propagation) hold their loop-invariant frames for many stages.
+connected components) hold their loop-invariant frames for many stages.
 
 ``reliable_checkpoint`` picks the right mechanism per deployment:
 

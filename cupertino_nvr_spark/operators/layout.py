@@ -32,7 +32,7 @@ def _bucket(c: Column, lo: Column, hi: Column, bits: int) -> Column:
     explicit coalesce, floor(null*top) is NULL and F.least skips NULLs,
     so null rows would silently cluster at the curve's MAX corner and
     give the files there artificially wide min-max stats on every other
-    dimension (ADVICE r5)."""
+    dimension."""
     span = (hi - lo).cast("double")
     frac = F.coalesce(
         F.when(span > 0, (c.cast("double") - lo.cast("double")) / span),

@@ -30,6 +30,7 @@ from cupertino_nvr_spark.llm.dedup import (
 from cupertino_nvr_spark.llm.multimodal import decode_features, frame_sample_plan
 from cupertino_nvr_spark.llm.similarity import (
     IVF_MAX_CELLS,
+    MAX_PROBES,
     brute_force_topk,
     ivf_ann_topk,
     lsh_ann_topk,
@@ -52,13 +53,22 @@ from cupertino_nvr_spark.sources.tables import load_table
 
 TAIL = " duplicated tail marker"
 
+# Deterministic probe-panel bound for every brute-force (exact) top-k
+# consumer: probes are vec_id % 100 == 0 AND vec_id below this, so the
+# probe side holds at most MAX_PROBES (65536) rows NO MATTER the corpus
+# size — the budget brute_force_topk enforces via _collect_bounded
+# (llm/similarity.py). A predicate (not limit()) keeps the probe set
+# deterministic, so the oracle replays it exactly; below 6.5M corpus rows
+# it selects every %100 probe and the result is unchanged.
+_PROBE_BOUND = 100 * MAX_PROBES
+
 
 def augmented_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents corpus with injected duplicates both engines build
     identically: exact copies (+1M), tail-appended near-dups (+2M),
     upper-cased variants (+3M), 2-token truncations (+4M).
 
-    INVARIANT (r11 ADVICE): base doc_ids must stay < 1,000,000 — the
+    INVARIANT: base doc_ids must stay < 1,000,000 — the
     fixed +1M/+2M/+3M/+4M strides both ENCODE the variant kind and let
     consumers DECODE a variant's base id as ``doc_id % 1000000``
     (docs_source_quality_report's re-crawl attribution inverts the
@@ -459,7 +469,7 @@ _SIMHASH_ND_BAND_CAP = 64
     "the pairing real positives. is_sig_exact flags SIGNATURE equality "
     "(hamming = 0), not verified text equality — two distinct texts "
     "colliding to one 32-bit simhash carry the flag too; byte-exact "
-    "duplication is docs_exact_dedup's md5 rule (r11 ADVICE)",
+    "duplication is docs_exact_dedup's md5 rule",
 )
 def docs_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cupertino_nvr_spark.llm.dedup import simhash_neardup_pairs
@@ -498,7 +508,7 @@ def docs_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT id_a, id_b, hamming, CAST(hamming = 0 AS INT) AS is_sig_exact
     FROM scored WHERE hamming <= {_SIMHASH_ND_TAU}
     """,
-    doc="Streaming-parity ANCHOR row (r13 VERDICT item 3): the UNCAPPED "
+    doc="Streaming-parity ANCHOR row: the UNCAPPED "
     "SimHash pairing — docs_simhash_neardup with no hot-band prune — "
     "which is EXACTLY the batch form the streaming twin "
     "(streaming/neardup.py::simhash_neardup_stream) is pinned equal to "
@@ -720,8 +730,9 @@ def docs_neardup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "embedding_cosine_topk",
-    """
-    WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 100 = 0),
+    f"""
+    WITH probes AS (SELECT vec_id, embedding FROM embeddings
+                    WHERE vec_id % 100 = 0 AND vec_id < {_PROBE_BOUND}),
     scored AS (
       SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
              round(list_cosine_similarity(CAST(p.embedding AS DOUBLE[]),
@@ -738,7 +749,9 @@ def docs_neardup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") % 100 == 0)
+    probes = emb.filter(
+        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _PROBE_BOUND)
+    )
     return brute_force_topk(emb, probes, k=5)
 
 
@@ -1306,7 +1319,7 @@ def embedding_margin_cap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY max_cells
     """,
     doc="IVF cell-budget tuning profile — the measurement row for the "
-    "corpus-scaled centroid cap (r12 VERDICT item 2; the knob itself is "
+    "corpus-scaled centroid cap (the knob itself is "
     "the broadcast-budget-derived IVF_MAX_CELLS in llm/similarity.py, "
     "shared by the whole embedding blocking family): for each forced "
     "cap 8/16/32 plus the production budget, the sampled centroid "
@@ -1364,8 +1377,8 @@ def embedding_ivf_cell_budget_profile(
     # downstream of the membership — cell self-join, hoisted-norm
     # scoring, threshold, distinct — is the registered definition
     # verbatim). Deliberately NOT rebuilt by joining vectors onto a
-    # checkpointed candidate frame — the r13 A/B (ROUND_NOTES_r13)
-    # measured that shape 5x SLOWER at sf1, while this keeps the
+    # checkpointed candidate frame — an A/B at sf1 measured that shape
+    # 5x SLOWER, while this keeps the
     # candidate stream pipelined inside the cell join's stage.
     base = reliable_checkpoint(
         embedding_neardup_pairs(
@@ -1928,10 +1941,10 @@ def _dup_cluster_frames(spark: SparkSession, sf_dir: str):
     FROM comp
     """,
     doc="near-duplicate clusters: connected components over MinHash band "
-    "membership via the pairless two-phase loop (single-hop min-label "
-    "ramp, then large-star/small-star contraction for deep chains; cost "
-    "linear in membership rows per round); oracle is the recursive-CTE "
-    "transitive closure of the same band graph",
+    "membership by pairless star contraction (each band stars its members "
+    "onto its min member, then large-star/small-star rounds, independent "
+    "of graph diameter; edges linear in membership rows); oracle is the "
+    "recursive-CTE transitive closure of the same band graph",
 )
 def docs_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dup_cluster_frames(spark, sf_dir)[1]
@@ -2720,15 +2733,6 @@ def docs_hot_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantize/dequantize expressions per engine, so the ANN baseline can never
 # drift from the codebook the quantizer reports.
 
-# Deterministic probe-side bound for the exact int8 baseline: probes are
-# vec_id % 100 == 0 AND vec_id below this, so the broadcast side holds at
-# most MAX_PROBES (65536) rows NO MATTER the corpus size — same budget
-# brute_force_topk enforces via _collect_bounded (llm/similarity.py). A
-# predicate (not limit()) keeps the probe set deterministic, so the oracle
-# replays it exactly; below 6.5M corpus rows it selects every %100 probe
-# and the result is unchanged.
-_INT8_PROBE_BOUND = 65536 * 100
-
 _INT8_STATS_SQL = """dims AS (
       SELECT unnest(embedding) AS v,
              unnest(range(1, len(embedding) + 1)) AS dim
@@ -2901,7 +2905,7 @@ def docs_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM embeddings CROSS JOIN packed
     ),
     probes AS (SELECT vec_id AS probe_id, embedding AS pvec FROM deq
-               WHERE vec_id % 100 = 0 AND vec_id < {_INT8_PROBE_BOUND}),
+               WHERE vec_id % 100 = 0 AND vec_id < {_PROBE_BOUND}),
     scored AS (
       SELECT p.probe_id, c.vec_id AS neighbor_id,
              ROUND(
@@ -2925,7 +2929,7 @@ def docs_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "precision, only the stored side). Same plan skeleton as "
     "embedding_cosine_topk (bounded probe side x corpus scan, per-probe "
     "top-k window); the per-dim stats broadcast as one packed row, and the "
-    "probe side is hard-bounded by the _INT8_PROBE_BOUND predicate so the "
+    "probe side is hard-bounded by the _PROBE_BOUND predicate so the "
     "broadcast cannot grow with the corpus. Exact-scoring BASELINE — the "
     "scale path is embedding_int8_ivf_ann below. Companion to "
     "embedding_int8_quant — same codebook constants by construction "
@@ -2945,7 +2949,7 @@ def embedding_int8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", dq.alias("dq"), F.col("embedding").cast("array<double>").alias("fvec")
     )
     probes = deq.filter(
-        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _INT8_PROBE_BOUND)
+        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _PROBE_BOUND)
     ).select(F.col("vec_id").alias("probe_id"), F.col("fvec").alias("pvec"))
     scored = (
         F.broadcast(probes)
@@ -3237,13 +3241,13 @@ def docs_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_prefix_rerank_ann",
-    """
+    f"""
     WITH vecs AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
     ),
     probes AS (
       SELECT vec_id AS probe_id, e AS pvec, list_slice(e, 1, 16) AS ppref
-      FROM vecs WHERE vec_id % 100 = 0 AND vec_id < 6553600
+      FROM vecs WHERE vec_id % 100 = 0 AND vec_id < {_PROBE_BOUND}
     ),
     coarse AS (
       SELECT probe_id, pvec, c.vec_id AS neighbor_id, c.e AS cvec,
@@ -3269,7 +3273,7 @@ def docs_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "retrieval trick): stage 1 scores only the FIRST 16 of 64 dimensions — "
     "4x less arithmetic per candidate pair — and keeps 20 survivors per "
     "probe; stage 2 pays full-dimension cosine for just those 20. Probe "
-    "side carries the same deterministic bound as the int8 baseline so "
+    "side carries the shared deterministic _PROBE_BOUND so "
     "its broadcast stays fixed-size; candidates never materialize beyond "
     "stage 1's per-probe top-20",
 )
@@ -3281,7 +3285,7 @@ def embedding_prefix_rerank_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("e"))
     probes = vecs.filter(
-        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _INT8_PROBE_BOUND)
+        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _PROBE_BOUND)
     ).select(
         F.col("vec_id").alias("probe_id"),
         F.col("e").alias("pvec"),
@@ -3734,7 +3738,7 @@ def embedding_pq_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     probes AS (
       SELECT vec_id AS probe_id, CAST(embedding AS DOUBLE[]) AS p
-      FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < {_INT8_PROBE_BOUND}
+      FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < {_PROBE_BOUND}
     ),
     psub AS (
       SELECT probe_id, u.s AS sub_idx,
@@ -3794,7 +3798,7 @@ def embedding_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("codes")
     )
     probes = emb.filter(
-        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _INT8_PROBE_BOUND)
+        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _PROBE_BOUND)
     ).select(F.col("vec_id").alias("probe_id"), as_double(F.col("embedding")).alias("p"))
     psub = probes.select(
         "probe_id",
@@ -3903,7 +3907,7 @@ _IVF_PQ_CTES_SQL = f"""{_PQ_CHAIN_SQL},
     ),
     probes AS (
       SELECT vec_id AS probe_id, CAST(embedding AS DOUBLE[]) AS p
-      FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < {_INT8_PROBE_BOUND}
+      FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < {_PROBE_BOUND}
     ),
     {_IVF_ROUTE_CTE_SQL.replace("{max_probe}", "2")},
     cand AS (
@@ -3982,7 +3986,7 @@ def _ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, "embeddings", sf_dir)
     probes_raw = emb.filter(
-        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _INT8_PROBE_BOUND)
+        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _PROBE_BOUND)
     )
     cand = (
         ivf_route_candidates(emb, probes_raw, n_probe=2)
@@ -4065,7 +4069,7 @@ _IVF_PROFILE_MAX_PROBE = 4
     f"""
     WITH probes AS (
       SELECT vec_id AS probe_id, CAST(embedding AS DOUBLE[]) AS p
-      FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < {_INT8_PROBE_BOUND}
+      FROM embeddings WHERE vec_id % 100 = 0 AND vec_id < {_PROBE_BOUND}
     ),
     {_IVF_ROUTE_CTE_SQL.replace("{max_probe}", str(_IVF_PROFILE_MAX_PROBE))},
     pairs AS (
@@ -4133,7 +4137,7 @@ _IVF_PROFILE_MAX_PROBE = 4
     "pair frame — the sweep never re-routes or re-scores. Ground truth "
     "pays the bounded probes x corpus exact scoring (the "
     "embedding_ann_recall_eval cost class, with the probe panel "
-    "hard-capped by the int8 family's _INT8_PROBE_BOUND so the truth "
+    "hard-capped by the shared _PROBE_BOUND so the truth "
     "term stays linear-in-corpus at 100 TB, never quadratic); output is "
     "4 rows: per budget, "
     "avg candidates per probe (the cost axis) and corpus-level recall@5 "
@@ -4151,7 +4155,7 @@ def embedding_ivf_probe_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same hard bound as the int8 family so it stays a FIXED sample
     # at 100 TB (a percentage panel would make the truth side quadratic)
     probes = emb.filter(
-        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _INT8_PROBE_BOUND)
+        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _PROBE_BOUND)
     )
     routed = ivf_route_candidates(emb, probes, n_probe=_IVF_PROFILE_MAX_PROBE)
     pairs = (
@@ -4267,8 +4271,8 @@ def embedding_ivf_probe_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON i.probe_id = t.probe_id AND i.neighbor_id = t.neighbor_id
     GROUP BY t.probe_id
     """,
-    doc="PQ quality telemetry for the r11 ADC serving path (r11 VERDICT "
-    "punch item 4): per-probe recall@5 of embedding_ivf_pq_ann (shared "
+    doc="PQ quality telemetry for the ADC serving path: "
+    "per-probe recall@5 of embedding_ivf_pq_ann (shared "
     "_IVF_PQ_CTES_SQL / _ivf_pq_topk chain VERBATIM — the measured path "
     "IS the serving path) against brute-force truth over the capped "
     "probe panel, NEXT TO the full-precision IVF rerank's recall at the "
@@ -4277,14 +4281,14 @@ def embedding_ivf_probe_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "left open: what recall does the 16x code compression cost vs "
     "re-ranking candidates with exact cosines. Truth pays the bounded "
     "probes x corpus scoring (embedding_ann_recall_eval cost class, "
-    "panel hard-capped by _INT8_PROBE_BOUND so the term stays "
+    "panel hard-capped by _PROBE_BOUND so the term stays "
     "linear-in-corpus); both ANN legs are (probe, neighbor)-keyed left "
     "joins onto the 5-per-probe truth rows plus one per-probe aggregate.",
 )
 def embedding_ivf_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     probes = emb.filter(
-        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _INT8_PROBE_BOUND)
+        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _PROBE_BOUND)
     )
     truth = brute_force_topk(emb, probes, k=5).select("probe_id", "neighbor_id")
     pq = _ivf_pq_topk(spark, sf_dir).select(
@@ -4475,8 +4479,8 @@ def docs_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the corpus is tokenized exactly twice: counts pass + scoring pass.
 # single source of truth for the curated-target source set: the SQL
 # IN-list and the Spark isin() both derive from this tuple so the oracle
-# and the plan cannot drift (ADVICE r5 — the failure mode the shared
-# MinHash/Jaccard CTE fragments exist to prevent)
+# and the plan cannot drift (the failure mode the shared MinHash/Jaccard
+# CTE fragments exist to prevent)
 _DSIR_TARGET_SOURCES = ("src1", "src2", "src3")
 _DSIR_TARGET_SQL = "(" + ", ".join(f"'{s}'" for s in _DSIR_TARGET_SOURCES) + ")"
 
@@ -4572,7 +4576,7 @@ _KM_VECS_SQL = (
 # the oracle's per-dim CTE must enumerate every vector position; the Spark
 # path asserts the data really has this many dims (embedding_kmeans below),
 # so a dimensionality change fails loudly instead of silently computing
-# means over the wrong dim set (ADVICE r5)
+# means over the wrong dim set
 _KM_DIM = 64
 
 
@@ -5180,7 +5184,8 @@ def docs_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "embedding_ann_recall_eval",
     f"""
-    WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 100 = 0),
+    WITH probes AS (SELECT vec_id, embedding FROM embeddings
+                    WHERE vec_id % 100 = 0 AND vec_id < {_PROBE_BOUND}),
     exact_scored AS (
       SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
              round(list_cosine_similarity(CAST(p.embedding AS DOUBLE[]),
@@ -5197,7 +5202,7 @@ def docs_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_LSH_BASE_SQL},
     pbuckets AS (
       SELECT vec_id AS probe_id, e AS pvec, bucket
-      FROM bucketed WHERE vec_id % 100 = 0
+      FROM bucketed WHERE vec_id % 100 = 0 AND vec_id < {_PROBE_BOUND}
     ),
     cand AS (
       SELECT p.probe_id, c.vec_id AS neighbor_id,
@@ -5227,7 +5232,8 @@ def docs_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "brute-force top-5 — the standard ANN quality harness "
         "(ann-benchmarks shape), the embedding-side sibling of "
         "docs_lsh_quality_eval. Ground truth pays the bounded "
-        "probes x corpus exact scoring (1% probe side, same cost class "
+        "probes x corpus exact scoring (1% probe side under _PROBE_BOUND, "
+        "same cost class "
         "as embedding_cosine_topk — an eval harness runs on a sampled "
         "probe set, never the full corpus); the candidate side reuses "
         "embedding_lsh_ann's bucket equi-join; the comparison is a "
@@ -5237,7 +5243,9 @@ def docs_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") % 100 == 0)
+    probes = emb.filter(
+        (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < _PROBE_BOUND)
+    )
     truth = brute_force_topk(emb, probes, k=5).select("probe_id", "neighbor_id")
     approx = lsh_ann_topk(emb, probes, dim=64, k=5).select(
         "probe_id", F.col("neighbor_id").alias("a_neighbor")
@@ -7508,12 +7516,12 @@ def docs_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "projection while an exact global NTILE would funnel every row "
     "through one partition — plus EXPLICIT open-ended underflow (-1: "
     "keep_prob < 0.40, bin_lo NULL) and overflow (20: keep_prob >= "
-    "0.60, bin_hi NULL) bins, r13: the r12 form clamped out-of-range "
+    "0.60, bin_hi NULL) bins; a clamping form put out-of-range "
     "mass into edge bins 0/19 whose labels still claimed 0.01 width, "
     "so edge-bin mean_keep_prob could fall outside its own bounds). "
     "Bin assignment is computed on the FIXED-POINT kp6 integer "
     "(FLOOR((kp6 - 400000) / 10000), kp6 = round(keep_prob * 1e6)) — "
-    "r14, closing the r13 ADVICE float-boundary gap: the float "
+    "which closes a float-boundary gap: the float "
     "expression put keep_prob exactly 0.60 in bin 19 "
     "((0.60-0.40)/0.01 = 19.999999999999996 in IEEE doubles) and a doc "
     "within 5e-7 below an edge in the lower bin while its kp6 counted "
@@ -8520,19 +8528,17 @@ def _media_doc_comp_sql() -> str:
         "decoded-pixel kernel plugs into the same slot), and (c) "
         "media->host-page provenance links for base media. Nodes are "
         "namespaced ('d:'/'m:'); clustering is the SAME pairless "
-        "alternating min-label propagation as docs_dup_clusters "
-        "(llm/pipeline.py:components_over_keys) — cost per round linear "
-        "in membership rows, never pair-quadratic, pair edges entering "
+        "star contraction as docs_dup_clusters "
+        "(llm/pipeline.py:components_over_keys) — edges linear in "
+        "membership rows, never pair-quadratic, pair edges entering "
         "as 2-member keys. A media copy (+1M) clusters with other pages "
         "ONLY transitively: phash pair -> base media -> provenance link "
         "-> page doc -> text bands. Oracle: recursive-CTE transitive "
         "closure of the identical symmetric edge union. Scale: each "
-        "edge source is the already-bounded chain it reuses; the ramp's "
-        "propagation rounds pay graph diameter in key-hops, and a graph "
-        "still deep after the ramp (this one at sf1: >40-hop chains) "
-        "switches to star contraction — O(log^2 n) rounds independent "
-        "of diameter (r11: 2 star rounds vs 19 propagation rounds at "
-        "sf1), checkpointed per round."
+        "edge source is the already-bounded chain it reuses; star "
+        "contraction takes O(log^2 n) rounds independent of the graph's "
+        "diameter (this graph has >40-hop chains at sf1), checkpointed "
+        "per round."
     ),
 )
 def media_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9913,7 +9919,7 @@ def _mmr_round_sql(r: int) -> str:
         "probes at sf0.1); the sf0.1 bench constant understates the "
         "per-query cost, whose true saturated number is the sf1 record "
         "(~8 s, measured linear post-saturation: 1.9x for 2x data with "
-        "the panel pinned at 200 in both legs, ROUND_NOTES_r09)."
+        "the panel pinned at 200 in both legs)."
     ),
 )
 def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1502,7 +1502,7 @@ def orders_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lift are symmetric but confidence is not, and the pair is "
         "canonicalized to part_a < part_b, so BOTH rule directions are "
         "emitted (confidence_a_to_b = n_both/n_a, confidence_b_to_a = "
-        "n_both/n_b — r11 ADVICE); item "
+        "n_both/n_b); item "
         "supports attach by part-keyed equi-joins and the basket total "
         "is a 1-row broadcast. All ratios are single divisions of exact "
         "integer counts, so both engines produce identical doubles; the "

@@ -97,7 +97,7 @@ def read_csv(
         # sequentially inside one partition, where monotonically
         # increasing ids follow row order by construction — no reliance
         # on how FileSourceScan orders splits across partitions (which is
-        # size-sorted, internal, and was the r5 ADVICE hazard). A data
+        # size-sorted and internal). A data
         # row equal to the header string in any later block can never be
         # picked; in block 0 it always carries a larger id than the true
         # header above it.

@@ -153,7 +153,7 @@ def simhash_neardup_stream(
 ) -> DataFrame:
     """Streaming SimHash near-dup pairing — the streaming twin of
     ``llm.dedup.simhash_neardup_pairs`` (the registered
-    docs_simhash_neardup definition), r11 VERDICT missing-item 4.
+    docs_simhash_neardup definition).
 
     ``members`` carries one row per (doc, band) WITH the doc's signature:
     build it by computing the stateless per-row signature

@@ -1,8 +1,7 @@
-"""The budget-derived IVF cell cap, exercised in a BINDING regime (r13
-VERDICT item 5).
+"""The budget-derived IVF cell cap, exercised in a BINDING regime.
 
 At every shipped scale sqrt(n) <= 161 << IVF_MAX_CELLS = 65536, so the
-r13 budget derivation was verified result-neutral but the budget BRANCH
+budget derivation is result-neutral there but the budget BRANCH
 (max_cells=None -> the module constant) never actually capped anything;
 only the forced-cap arms of the cell-budget profile did. These pins run
 the blocking chain on a synthetic corpus (generated, not shipped) with

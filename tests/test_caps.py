@@ -83,7 +83,7 @@ def test_band_cap_suppresses_hot_buckets(spark):
 def test_simhash_banding_rejects_indivisible_bits(spark):
     """bits % n_bands != 0 would silently leave the top remainder bits
     out of every band, voiding the pigeonhole recall guarantee — loud
-    ValueError instead (r12 ADVICE), the margin cand_cap < k convention."""
+    ValueError instead, the margin cand_cap < k convention."""
     import pytest
 
     from cupertino_nvr_spark.llm.dedup import simhash_band_membership

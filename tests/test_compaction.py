@@ -72,7 +72,7 @@ def test_compacted_sizes_bounded(spark, tmp_path):
 def test_compact_survives_reserved_looking_columns(spark, tmp_path):
     """A source whose schema legitimately contains `bucket`, `bin`, and
     `_file` columns compacts cleanly: the rewrite join rides on
-    collision-proof __compact_* internals (ADVICE r5)."""
+    collision-proof __compact_* internals."""
     ev = (
         load_table(spark, "events", SF)
         .select(

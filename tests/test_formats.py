@@ -177,7 +177,7 @@ def test_csv_header_drop_is_block_anchored(spark, tmp_path):
     """The header drop only considers candidates in the byte-0 block of
     each file (input_file_block_start == 0), where min-id-equals-first-
     line is contractual — not dependent on FileSourceScan's internal
-    split ordering (ADVICE r5). A header-valued data row far into the
+    split ordering. A header-valued data row far into the
     file (a later block under adversarial splitting) can never be the
     drop target."""
     import pyspark.sql.types as T

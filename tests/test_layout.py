@@ -87,7 +87,7 @@ def test_zorder_nulls_go_to_min_corner(spark):
     """NULL dimension values bucket to 0 (the min corner), not the max:
     floor(null*top) is NULL and F.least skips NULLs, so without the
     explicit coalesce nulls would cluster in the max-corner file and
-    widen its stats on every other dimension (ADVICE r5)."""
+    widen its stats on every other dimension."""
     from cupertino_nvr_spark.operators.layout import zorder_key
 
     df = spark.createDataFrame(

@@ -35,38 +35,59 @@ def test_components_chain_and_singletons(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 99: 99}
 
 
-def test_components_no_fixpoint_raises(spark):
-    # a 64-chain: one membership round moves labels ~1 key-hop and the
-    # frontier pointer jumps (<=3 per round) at most triple the reach,
-    # so max_iter=1 cannot finish — the loud-failure path must fire
-    n = 64
+def _chain(spark, n):
+    """An n-node chain 0-1-...-(n-1): node i and i+1 share key k{i}."""
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     memb = spark.createDataFrame(
         [(i, f"k{i}") for i in range(n - 1)]
         + [(i + 1, f"k{i}") for i in range(n - 1)],
         "doc_id long, bkey string",
     )
+    return nodes, memb
+
+
+def test_components_no_fixpoint_raises(spark):
+    # a 64-chain needs several contraction rounds, so a 1-round budget
+    # cannot finish — the loud-failure path must fire, not a partial
+    # clustering
+    nodes, memb = _chain(spark, 64)
     with pytest.raises(RuntimeError, match="no fixpoint"):
         components_over_keys(nodes, memb, key_col="bkey", max_iter=1)
     got = components_over_keys(nodes, memb, key_col="bkey", max_iter=25)
     assert {r["cluster_id"] for r in got.collect()} == {0}
 
 
-def test_components_contract_equals_propagation_on_random_graphs(spark):
-    """The star-contraction deep path and pure single-hop propagation
-    (``ramp_rounds >= max_iter``: contraction never engages) must reach
-    the identical fixpoint (component = transitive key-sharing,
-    cluster_id = component min) on adversarial shapes: a long chain (the
-    contraction trigger), a hot key (star), bridged stars, and
-    singletons — the contraction side forced with ramp_rounds=0."""
+def _union_find_components(n_nodes, rows):
+    """Reference: plain union-find over (node, key) rows -> {node: min
+    node of its component}."""
+    parent = list(range(n_nodes))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    first_member = {}
+    for node, key in rows:
+        other = first_member.setdefault(key, node)
+        a, b = find(node), find(other)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return {i: find(i) for i in range(n_nodes)}
+
+
+@pytest.mark.parametrize("seed", [3, 17, 29])
+def test_components_match_union_find_on_random_graphs(spark, seed):
+    """Component = transitive key-sharing, cluster_id = component min, on
+    adversarial shapes: chain segments, a hot key (star), random extra
+    memberships bridging them, and singletons — checked against a
+    pure-Python union-find on the same rows."""
     import random
 
-    from cupertino_nvr_spark.llm import pipeline as P
-
-    rng = random.Random(17)
+    rng = random.Random(seed)
     n = 120
     rows = []
-    # chain segments + hot keys + random extra memberships
     for i in range(n - 1):
         if i % 3:
             rows += [(i, f"c{i}"), (i + 1, f"c{i}")]
@@ -76,28 +97,17 @@ def test_components_contract_equals_propagation_on_random_graphs(spark):
         rows.append((rng.randrange(n), f"r{rng.randrange(20)}"))
     nodes = spark.createDataFrame([(i,) for i in range(n + 5)], "doc_id long")
     memb = spark.createDataFrame(rows, "doc_id long, bkey string")
-    kw = dict(id_col="doc_id", key_col="bkey", max_iter=40)
-    via_contract = {
+    got = {
         r["doc_id"]: r["cluster_id"]
-        for r in components_over_keys(nodes, memb, ramp_rounds=0, **kw).collect()
+        for r in components_over_keys(nodes, memb, key_col="bkey").collect()
     }
-    assert P.LAST_RUN_STATS["deep_path"] == "contract"
-    via_propagation = {
-        r["doc_id"]: r["cluster_id"]
-        for r in components_over_keys(nodes, memb, ramp_rounds=40, **kw).collect()
-    }
-    assert P.LAST_RUN_STATS["deep_path"] is None
-    assert via_contract == via_propagation
-    # singletons (n..n+4) map to themselves
-    for i in range(n, n + 5):
-        assert via_contract[i] == i
+    assert got == _union_find_components(n + 5, rows)
 
 
 def test_components_contract_string_ids(spark):
     """The cross-modal graph clusters namespaced STRING node ids — the
-    contraction's min/least comparisons must agree with lexicographic
-    label propagation. Chain d:1 ~ m:1 ~ m:2 ~ d:2 via shared keys,
-    forced through the deep path."""
+    contraction's min/least comparisons must be lexicographic. Chain
+    d:1 ~ m:1 ~ m:2 ~ d:2 via shared keys."""
     nodes = spark.createDataFrame(
         [("d:1",), ("d:2",), ("m:1",), ("m:2",), ("m:9",)], "node string"
     )
@@ -109,61 +119,22 @@ def test_components_contract_string_ids(spark):
     got = {
         r["node"]: r["cluster_id"]
         for r in components_over_keys(
-            nodes, memb, id_col="node", key_col="bkey",
-            ramp_rounds=0,
+            nodes, memb, id_col="node", key_col="bkey"
         ).collect()
     }
     assert got == {"d:1": "d:1", "d:2": "d:1", "m:1": "d:1",
                    "m:2": "d:1", "m:9": "m:9"}
 
 
-def test_components_deep_path_engages_only_past_ramp(spark):
-    """Path-selection regression: a shallow graph must finish inside the
-    single-hop ramp (contraction never engages — its plan is identical
-    to the pre-contraction loop), while a 64-hop chain must hand off to
-    contraction and converge in a handful of star rounds (the
-    diameter-independence that is the whole point)."""
-    from cupertino_nvr_spark.llm import pipeline as P
-
-    shallow_nodes = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
-    shallow_memb = spark.createDataFrame(
-        [(0, "a"), (1, "a"), (2, "b"), (3, "b")], "doc_id long, bkey string"
-    )
-    components_over_keys(shallow_nodes, shallow_memb, key_col="bkey").collect()
-    assert P.LAST_RUN_STATS["deep_path"] is None
-    assert P.LAST_RUN_STATS["propagation_rounds"] <= 6
-
-    n = 64
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    memb = spark.createDataFrame(
-        [(i, f"k{i}") for i in range(n - 1)]
-        + [(i + 1, f"k{i}") for i in range(n - 1)],
-        "doc_id long, bkey string",
-    )
-    got = components_over_keys(nodes, memb, key_col="bkey")
+def test_components_chain_converges_in_few_rounds(spark):
+    """Round-budget pin: a 64-hop chain converges within a small fixed
+    round budget — star contraction's rounds do not grow with the
+    graph's diameter (min-label propagation would need ~64). Measured:
+    6 contraction rounds at 64 nodes, 8 at 200, 10 at 1,000; the budget
+    counts the final star-forest check as a round, hence 7."""
+    nodes, memb = _chain(spark, 64)
+    got = components_over_keys(nodes, memb, key_col="bkey", max_iter=7)
     assert {r["cluster_id"] for r in got.collect()} == {0}
-    assert P.LAST_RUN_STATS["deep_path"] == "contract"
-    # the ramp's pointer jumping plus the label-contracted star-edge
-    # derivation leave only O(log) residual distance; star contraction
-    # must close it in a handful of rounds (0 = already a star forest)
-    assert P.LAST_RUN_STATS["contract_rounds"] <= 6
-
-
-def test_components_contract_budget_exhaustion_raises(spark):
-    """The contraction path inherits the loud-failure contract: a deep
-    chain with a 1-round contraction budget (ramp_rounds=0, max_iter=1)
-    must raise, not return a partial clustering."""
-    n = 64
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    memb = spark.createDataFrame(
-        [(i, f"k{i}") for i in range(n - 1)]
-        + [(i + 1, f"k{i}") for i in range(n - 1)],
-        "doc_id long, bkey string",
-    )
-    with pytest.raises(RuntimeError, match="no star forest"):
-        components_over_keys(
-            nodes, memb, key_col="bkey", ramp_rounds=0, max_iter=1
-        )
 
 
 def test_dup_clusters_group_planted_copies(spark):

@@ -87,7 +87,7 @@ ALLOWED_BNLJ = {
     # 1-row smoothing-denominator attach (bigram LM) and the asymmetric
     # int8 exact-scoring baseline (all-pairs over a bounded probe side by
     # definition, like embedding_cosine_topk; probe side hard-bounded by
-    # the _INT8_PROBE_BOUND predicate)
+    # the _PROBE_BOUND predicate)
     "docs_bigram_lm_score",
     # same 1-row attach (distinct-bigram total for the continuation
     # probability); the scoring joins are vocab-keyed equi-joins
@@ -265,10 +265,62 @@ def test_int8_ivf_candidates_are_equi_join(spark):
 
 def test_int8_ann_probe_bound_filter(spark):
     """The exact int8 baseline's probe side must carry the deterministic
-    _INT8_PROBE_BOUND predicate so its broadcast cannot grow with the
+    _PROBE_BOUND predicate so its broadcast cannot grow with the
     corpus."""
     plan = plan_of(spark, "embedding_int8_ann")
     assert "6553600" in plan, "probe bound predicate missing from int8 ANN plan"
+
+
+def _brute_force_callers() -> list[str]:
+    """Every plans/llm.py function whose body calls brute_force_topk."""
+    import ast
+    import inspect
+
+    from cupertino_nvr_spark.plans import llm
+
+    tree = ast.parse(inspect.getsource(llm))
+    return sorted(
+        f.name
+        for f in tree.body
+        if isinstance(f, ast.FunctionDef)
+        and any(
+            isinstance(n, ast.Call) and getattr(n.func, "id", None) == "brute_force_topk"
+            for n in ast.walk(f)
+        )
+    )
+
+
+class _Recorded(Exception):
+    """Stops a plan build right after its probe panel is recorded."""
+
+
+@pytest.mark.parametrize("name", _brute_force_callers())
+def test_brute_force_probe_panel_is_bounded(spark, monkeypatch, name):
+    """brute_force_topk carries its whole probe panel in the task closure
+    and rejects more than MAX_PROBES rows at plan build, so a panel that
+    grows with the corpus (e.g. ``vec_id % 100 == 0`` alone, 1 % of it)
+    breaks above 6.5M rows. Every caller's probe plan must bound the
+    panel by a constant: a ``vec_id <`` literal of at most
+    100 * MAX_PROBES (with the %100 sampling), or an IN list."""
+    from cupertino_nvr_spark.llm.similarity import MAX_PROBES
+    from cupertino_nvr_spark.plans import llm
+
+    assert name in REGISTRY, f"{name} calls brute_force_topk but is not a query"
+    plans = []
+
+    def recording(corpus, probes, *args, **kwargs):
+        plans.append(probes._jdf.queryExecution().optimizedPlan().toString())
+        raise _Recorded
+
+    monkeypatch.setattr(llm, "brute_force_topk", recording)
+    with pytest.raises(_Recorded):
+        REGISTRY[name].spark(spark, SF)
+    plan = plans[0]
+    bounds = [int(b) for b in re.findall(r"vec_id#\d+L? < (\d+)", plan)]
+    in_list = re.search(r"vec_id#\d+L? IN \(", plan)
+    assert in_list or (bounds and min(bounds) <= 100 * MAX_PROBES), (
+        f"{name}: probe panel has no constant bound:\n{plan}"
+    )
 
 
 def test_vocab_topk_takeordered(spark):

@@ -1,14 +1,14 @@
-"""Semantics pins for the r13/r14 definition changes, beyond the oracle
-hash gate (which proves engine parity, not intent):
+"""Semantics pins for two definition changes, beyond the oracle hash gate
+(which proves engine parity, not intent):
 
-- docs_classifier_calibration's explicit underflow/overflow bins (r12
-  ADVICE: the old form clamped out-of-range mass into edge bins 0/19
-  whose labels still claimed 0.01 width, so an edge bin's mean could sit
-  outside its own [bin_lo, bin_hi) bounds) — r14: bin assignment moved
-  to the fixed-point kp6 integer (r13 ADVICE item 3: the float
-  expression put keep_prob exactly 0.60 in bin 19 and a doc within 5e-7
-  below an edge in the lower bin while its kp6 counted toward the
-  upper), so the bin rule and the kp6-based mean agree by construction.
+- docs_classifier_calibration's explicit underflow/overflow bins (a
+  form that clamped out-of-range mass into edge bins 0/19, whose labels
+  still claimed 0.01 width, let an edge bin's mean sit outside its own
+  [bin_lo, bin_hi) bounds); bin assignment runs on the fixed-point kp6
+  integer (the float expression put keep_prob exactly 0.60 in bin 19
+  and a doc within 5e-7 below an edge in the lower bin while its kp6
+  counted toward the upper), so the bin rule and the kp6-based mean
+  agree by construction.
 - embedding_ivf_cell_budget_profile's axes: candidate volume must GROW
   as the forced cap squeezes the production blocking into fewer cells,
   while the production near-dup pairs stay co-located.
@@ -34,8 +34,8 @@ def test_calibration_bins_are_honest(spark):
     just vacuously true. Bounds carry a 5e-7 slack on the OPEN side
     only: mean_keep_prob is ROUND(sum(kp6)/n/1e6, 6), and rounding a
     true mean within half an ulp-of-6-decimals of the boundary can land
-    exactly on it — the r13 ADVICE brittleness (a strict < on the
-    underflow mean) is what the slack replaces."""
+    exactly on it, so a strict < on the underflow mean would be
+    brittle; the slack replaces it."""
     rows = (
         REGISTRY["docs_classifier_calibration"].spark(spark, SF01).collect()
     )
@@ -66,9 +66,8 @@ def test_cell_budget_profile_axes(spark):
     shrink, and the production row must sit at recall 1.0 with every
     production pair co-located under every coarser setting too (bigger
     cells merge neighborhoods, never split them apart on this corpus).
-    The production label is the IMPORTED budget constant (r13 ADVICE
-    item 4: a hardcoded 65536 would silently diverge from a budget
-    re-derivation)."""
+    The production label is the IMPORTED budget constant (a hardcoded
+    65536 would silently diverge from a budget re-derivation)."""
     rows = {
         r.max_cells: r
         for r in REGISTRY["embedding_ivf_cell_budget_profile"]

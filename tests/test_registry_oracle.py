@@ -20,10 +20,8 @@ ROWS_ONLY_SPECS = sorted(name for name, s in REGISTRY.items() if s.oracle is Non
 # Fast-by-default oracle smoke: one row per query family, so the default
 # (gate) run still exercises the whole Spark-vs-DuckDB comparison
 # machinery end-to-end while the FULL 441-row rehearsal is `slow` (the
-# driver's bounded test window truncated on it — r14 VERDICT item 1; the
-# driver independently oracle-checks the sampled window itself, and the
-# full rehearsal remains the documented round-close command in
-# pytest.ini). Chosen: the flagship, one scan-agg, one window chain, one
+# whole sweep is long enough for a bounded test window to cut it; the
+# full rehearsal remains the documented command in pytest.ini). Chosen: the flagship, one scan-agg, one window chain, one
 # event chain, the touched-this-round dedup/clustering/curation chains,
 # one simhash, one embedding blocking chain, one IVF ANN, the exact
 # brute-force top-k (the block-matmul kernel every brute-force consumer

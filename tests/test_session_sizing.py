@@ -1,20 +1,25 @@
 """Session defaults sized to the machine, and the stateful streams' plan
 shape: state partitions follow the cores, the model runs once per frame,
-the overlay's and the windowed metrics' state stays bounded as the
-watermark advances, and the progress listener reports trigger time,
-watermark and state size.
+the state of the overlay, the windowed metrics, the replay dedup and the
+frame-rate cap stays bounded as the watermark advances, and the progress
+listener reports trigger time, watermark and state size.
 """
 
 from __future__ import annotations
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.listener import QueryProgressEvent
 
 from cupertino_nvr_spark.schemas import FRAME_SCHEMA
 from cupertino_nvr_spark.session import default_driver_memory, get_spark
-from cupertino_nvr_spark.streaming.asof import asof_overlay_stream
+from cupertino_nvr_spark.streaming.asof import (
+    asof_overlay_stream,
+    dedup_events_stream,
+    rate_limit_frames,
+)
 from cupertino_nvr_spark.streaming.codec import encode_event_wire, parse_event_wire
 from cupertino_nvr_spark.streaming.control import ProgressListener, full_metrics_report
 from cupertino_nvr_spark.streaming.inference import with_synthetic_detections
@@ -70,10 +75,14 @@ def run_to_end(stream, checkpoint):
 
 def five_spaced_batches(spark, path):
     """Five one-file micro-batches of 2 cameras x 5 frames; frame time
-    jumps 100 s per batch, far past any 10 s watermark."""
+    jumps 100 s per batch, far past any 10 s watermark, and frame ids
+    count up across batches as a camera's do."""
     n_batches = 5
     batches = [
-        make_frames(spark, [(cam, k, 100.0 * b + 0.5 * k) for cam in (1, 2) for k in range(5)])
+        make_frames(
+            spark,
+            [(cam, 5 * b + k, 100.0 * b + 0.5 * k) for cam in (1, 2) for k in range(5)],
+        )
         for b in range(n_batches)
     ]
     write_batches(batches, path)
@@ -126,22 +135,35 @@ def test_overlay_state_stays_bounded_across_batches(tmp_path):
         assert max(op_rows.values()) <= op_rows[1], rows
 
 
-def test_window_metrics_state_stays_bounded_across_batches(tmp_path):
-    """The same five spaced micro-batches of detection events through the
-    10 s tumbling-window metrics with a 10 s watermark. Batch N evicts
-    every window that closed before batch N-1's frames, so the state
-    holds at most two batches of (window, camera) rows: its size at
-    batch 1 caps every batch. Without the watermark it grows by one
-    batch of rows per batch."""
-    spark = get_spark()
-    stream, n_batches = five_spaced_batches(spark, f"{tmp_path}/fr")
-    metrics = tumbling_metrics_stream(
+def window_metrics(stream):
+    return tumbling_metrics_stream(
         detection_events(stream), window_duration="10 seconds", watermark="10 seconds"
     )
-    progress = run_to_end(metrics, f"{tmp_path}/ckpt")
+
+
+@pytest.mark.parametrize(
+    "build, operator",
+    [
+        (window_metrics, "stateStoreSave"),
+        (lambda stream: dedup_events_stream(detection_events(stream)), "dedupeWithinWatermark"),
+        (rate_limit_frames, "stateStoreSave"),
+    ],
+    ids=["window_metrics", "dedup_events", "rate_limit"],
+)
+def test_stateful_stream_state_stays_bounded_across_batches(tmp_path, build, operator):
+    """The same five spaced micro-batches through each wall-path stateful
+    operator with its 10 s watermark: the 10 s tumbling-window metrics,
+    the per-(camera, frame) replay dedup, and the per-camera frame-rate
+    cap. Batch N evicts every key that expired before batch N-1's frames,
+    so the state holds at most two batches of keys: its size at batch 1
+    caps every batch. Without a watermark that passes the old keys it
+    grows by one batch of keys per batch."""
+    spark = get_spark()
+    stream, n_batches = five_spaced_batches(spark, f"{tmp_path}/fr")
+    progress = run_to_end(build(stream), f"{tmp_path}/ckpt")
     assert sum(p["numInputRows"] > 0 for p in progress) == n_batches
     rows = state_rows_by_batch(progress)
-    assert sorted(rows) == ["stateStoreSave"]
+    assert sorted(rows) == [operator]
     for op_rows in rows.values():
         assert op_rows[1] > 0
         assert max(op_rows.values()) <= op_rows[1], rows

@@ -1042,7 +1042,7 @@ def test_simhash_neardup_stream_matches_batch(spark, stream_dir):
     docs co-occupy a band bucket.
 
     The batch expectation is THE REGISTERED ANCHOR ROW
-    docs_simhash_neardup_uncapped (r13 VERDICT item 3), so the driver's
+    docs_simhash_neardup_uncapped, so the driver's
     oracle gate externally hash-confirms the exact form this pin is
     stated against — stream == declared row == DuckDB."""
     from cupertino_nvr_spark.llm.dedup import (
@@ -1125,7 +1125,7 @@ def test_simhash_neardup_stream_cap_saturates(spark, stream_dir):
 
 def test_simhash_neardup_capped_divergence_contract(spark, stream_dir):
     """The twins' DOCUMENTED divergence under a binding cap, pinned exactly
-    (r12 ADVICE: the equality test only covers the uncapped case): the
+    (the equality test only covers the uncapped case): the
     batch rule anti-joins a hot bucket away ENTIRELY (membership is known
     up front), while the stream saturates — the first ``cap`` arrivals of
     a bucket still pair, later arrivals are neither paired nor stored. So

@@ -29,7 +29,7 @@ round's sf1 scaling study; defaults reproduce it):
 Then:
     SPARK_GRAFT_SF_DIR=/root/repo/.sf1 python bench.py
 
-Reproducibility pin (r11 VERDICT missing-item 3): every transform above
+Reproducibility pin: every transform above
 is seedless pure column arithmetic, so two generations from the same
 --src are row-identical. After generating (or with --verify-only against
 an existing --dst), the tool computes a per-table manifest (row count +
@@ -201,7 +201,7 @@ def main() -> None:
         print(f"{name}: {rec['rows']} rows, xxh64_sum {rec['xxh64_sum']}")
     # resolve() so an equivalent spelling (trailing slash, relative path,
     # symlink) cannot silently bypass the manifest verification the pin
-    # exists for (r12 ADVICE)
+    # exists for
     is_documented_recipe = (
         Path(args.src).resolve() == Path("/root/testdata/sf0.1").resolve()
         and args.factor == 10
