@@ -125,15 +125,19 @@ def _is_star_forest(edges: DataFrame) -> bool:
     stars: every child has exactly one parent and no parent is itself a
     child. At that point both star operations are no-ops and every
     child's parent is its component min (edges stay child>parent
-    oriented throughout, so a star's root is its min). Two limit-1
-    probe jobs — cheap next to the round's shuffles."""
-    multi = (
-        edges.groupBy("u").agg(F.count("*").alias("_n")).filter(F.col("_n") > 1)
+    oriented throughout, so a star's root is its min). One aggregate
+    (per node: its parents, as edges are distinct, and all its edges)
+    under one ``isEmpty`` probe."""
+    roles = edges.select(F.col("u").alias("_node"), F.lit(1).alias("_child")).unionByName(
+        edges.select(F.col("v").alias("_node"), F.lit(0).alias("_child"))
     )
-    chained = edges.join(
-        edges.select(F.col("u").alias("v")).distinct(), "v", "left_semi"
+    per_node = roles.groupBy("_node").agg(
+        F.sum("_child").alias("_parents"), F.count("*").alias("_edges")
     )
-    return multi.isEmpty() and chained.isEmpty()
+    # two parents, or a parent and a child
+    parents, edges_at = F.col("_parents"), F.col("_edges")
+    off_star = (parents > 1) | ((parents > 0) & (edges_at > parents))
+    return per_node.filter(off_star).isEmpty()
 
 
 def _star_contract(edges: DataFrame, max_iter: int) -> DataFrame:

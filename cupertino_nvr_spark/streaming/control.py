@@ -368,7 +368,8 @@ def full_metrics_report(
     (``metrics_reporter.py:111-156``): timestamp, instance id, current
     throughput, per-source latency reports, per-source metadata
     (fps/resolution), and recent status updates; plus the latest
-    trigger's duration, watermark and per-operator state size.
+    trigger's duration, watermark and per-operator state size, commit
+    time and late rows dropped.
 
     Pure shaping — the inputs are the ProgressListener (U4 hook), the
     collected rows of the ``per_source_latest_metrics`` plan (P8/A3:
@@ -394,8 +395,9 @@ def full_metrics_report(
             latest.get("processed_rows_per_second") if latest else None
         ),
         # the watchdog half of the report: how long the last trigger took,
-        # where the watermark stands and how much state each stateful
-        # operator holds
+        # where the watermark stands, and for each stateful operator how
+        # much state it holds, how long its commit took and how many late
+        # rows it dropped
         "stream_progress": (
             {
                 "batch_id": latest.get("batch_id"),
@@ -437,7 +439,8 @@ def full_metrics_report(
 
 def attach_metrics_listener(spark) -> "ProgressListener":
     """Register a StreamingQueryListener capturing per-batch progress
-    (rows/sec, trigger duration, watermark, per-operator state size) —
+    (rows/sec, trigger duration, watermark, per-operator state size,
+    state commit time and late rows dropped) —
     the watchdog/metrics hook (U4, reference ``interfaces.py:155-228``)."""
     listener = ProgressListener()
     spark.streams.addListener(listener)
@@ -475,6 +478,8 @@ try:  # StreamingQueryListener import path (PySpark >= 3.4)
                             "num_state_store_instances": op.numStateStoreInstances,
                             "num_rows_total": op.numRowsTotal,
                             "memory_used_bytes": op.memoryUsedBytes,
+                            "commit_time_ms": op.commitTimeMs,
+                            "num_rows_dropped_by_watermark": op.numRowsDroppedByWatermark,
                         }
                         for op in p.stateOperators
                     ],

@@ -11,8 +11,9 @@ from __future__ import annotations
 
 import time
 import uuid
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -34,9 +35,9 @@ pytestmark = pytest.mark.slow  # rehearsal suite: excluded from the default (gat
 
 
 def ts(second: float) -> datetime:
-    """Deterministic event times on 2024-01-01 (UTC, tz-naive for Spark)."""
-    base = datetime(2024, 1, 1, 0, 0, 0)
-    return datetime.fromtimestamp(base.timestamp() + second)
+    """Deterministic event times on 2024-01-01 (UTC, tz-naive for Spark),
+    exact to the microsecond."""
+    return datetime(2024, 1, 1) + timedelta(seconds=second)
 
 
 def make_events(spark, rows):
@@ -250,6 +251,98 @@ def test_asof_overlay_stream(spark, stream_dir):
         if r["frame_id"] < 10**9
     }
     assert got == {1000: (101, 2), 2000: (None, 0), 3000: (None, 0)}
+
+
+def overlay_reference(frames, events, ttl_seconds):
+    """Pandas as-of overlay: per frame, the events of its camera with
+    frame_ts - TTL <= ev_ts <= frame_ts, their count and the latest one."""
+    fr = pd.DataFrame(frames, columns=["source_id", "frame_id", "second"])
+    ev = pd.DataFrame(events, columns=["source_id", "ev_frame_id", "ev_second", "n_det"])
+    pairs = fr.merge(ev, on="source_id")
+    pairs = pairs[
+        (pairs["ev_second"] <= pairs["second"])
+        & (pairs["ev_second"] >= pairs["second"] - ttl_seconds)
+    ]
+    want = {fid: (None, None, 0) for fid in fr["frame_id"]}
+    for fid, group in pairs.groupby("frame_id"):
+        latest = group.loc[group["ev_second"].idxmax()]
+        want[fid] = (int(latest["ev_frame_id"]), ts(latest["ev_second"]), len(group))
+    return want
+
+
+def test_asof_overlay_stream_edges_match_pandas(spark, stream_dir):
+    """TTL bounds to the microsecond, a window boundary between two frames
+    that share an event, a camera without frames, and an event that lands
+    one micro-batch after its frame: the streaming overlay equals a pandas
+    as-of computed on the same rows."""
+    ttl = 1.0
+    frames = [
+        (1, 1, 20.0),  # events at 19.0 (= frame_ts - TTL) and at 20.0
+        (1, 2, 30.0),  # only event 1 us older than the TTL
+        (1, 3, 40.0),  # event at 40.0 in, event 1 us later out
+        (1, 4, 50.8),  # TTL buckets [50, 51) and [51, 52) share the
+        (1, 5, 51.3),  # event at 50.5
+        (1, 6, 70.0),  # its only event arrives in the next micro-batch
+    ]
+    events_0 = [
+        (1, 101, 19.0, 1),
+        (1, 102, 20.0, 2),
+        (1, 103, 30.0 - ttl - 1e-6, 1),
+        (1, 104, 40.0, 3),
+        (1, 105, 40.0 + 1e-6, 1),
+        (1, 106, 50.5, 2),
+        (2, 201, 20.0, 1),  # camera 2 has events but no frames
+        (2, 202, 50.7, 1),
+    ]
+    frames_1 = [(1, 7, 71.5)]  # keeps both sources in step
+    events_1 = [(1, 107, 69.7, 1)]
+    ev_dir, fr_dir = f"{stream_dir}/ev", f"{stream_dir}/fr"
+    write_batches(
+        [make_events(spark, events_0), make_events(spark, events_1), flush_events(spark)],
+        ev_dir,
+    )
+    write_batches(
+        [
+            make_frames(spark, frames),
+            make_frames(spark, frames_1),
+            make_frames(spark, [(99, 10**9, FLUSH_SEC)]),
+        ],
+        fr_dir,
+    )
+    fr_stream = (
+        spark.readStream.schema(FRAME_SCHEMA).option("maxFilesPerTrigger", 1).parquet(f"{fr_dir}/*")
+    )
+    ev_stream = replay_events_stream(spark, f"{ev_dir}/*", DETECTION_EVENT_SCHEMA)
+    name = f"mem_{uuid.uuid4().hex[:8]}"
+    q = (
+        asof_overlay_stream(fr_stream, ev_stream, ttl_seconds=ttl)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", f"{stream_dir}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120)
+        progress = q.recentProgress
+    finally:
+        q.stop()
+    # the late event is read in batch 1, while the watermark is still
+    # before it
+    batch_1 = next(p for p in progress if p["batchId"] == 1)
+    assert [s["numInputRows"] for s in batch_1["sources"]] == [1, 1]
+    watermark = datetime.fromisoformat(batch_1["eventTime"]["watermark"].replace("Z", "+00:00"))
+    assert watermark.timestamp() < ts(69.7).timestamp()
+
+    got = {
+        r["frame_id"]: (r["ev_frame_id"], r["ev_ts"], r["n_candidate_events"])
+        for r in spark.table(name).collect()
+        if r["frame_id"] < 10**9
+    }
+    want = overlay_reference(frames + frames_1, events_0 + events_1, ttl)
+    assert got == want
+    assert {fid: n for fid, (_, _, n) in got.items()} == {1: 2, 2: 0, 3: 1, 4: 1, 5: 1, 6: 1, 7: 0}
 
 
 # ---------------------------------------------------------------------------
