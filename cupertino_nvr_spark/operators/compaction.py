@@ -79,16 +79,14 @@ def compact_parquet(
     # a source table legitimately containing `bucket`/`bin`/`_file` never
     # hits an ambiguous-reference error or a wrongly-dropped data column
     fcol, bkcol, bncol = "__compact_file", "__compact_bucket", "__compact_bin"
-    src_cols = set(spark.read.parquet(src_dir).columns)
-    clash = src_cols & {fcol, bkcol, bncol}
+    src = spark.read.parquet(src_dir)
+    clash = set(src.columns) & {fcol, bkcol, bncol}
     if clash:
         raise ValueError(
             f"compact_parquet: source schema uses reserved internal "
             f"column name(s) {sorted(clash)}"
         )
-    data = spark.read.parquet(src_dir).withColumn(
-        fcol, _norm(F.input_file_name())
-    )
+    data = src.withColumn(fcol, _norm(F.input_file_name()))
     grouped = data.join(
         F.broadcast(
             plan.select(

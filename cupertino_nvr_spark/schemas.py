@@ -2,11 +2,16 @@
 
 The reference enforces a fixed, declared schema at runtime with Pydantic
 (reference ``cupertino_nvr/events/schema.py:32-48``); here the same logical
-schema is a Spark ``StructType`` that is always passed explicitly (never
-inferred) so ``from_json`` parsing, Parquet scans and streaming sources all
-agree. Validation constraints that Pydantic carried (e.g. confidence in
-[0,1], ``events/schema.py:27``) live in ``operators.filters`` as
-filter/dead-letter predicates, since Spark schemas don't carry range checks.
+schema is a Spark ``StructType`` that is passed explicitly, never inferred,
+so ``from_json`` parsing, Parquet scans and streaming sources all agree.
+Every batch table in ``BATCH_TABLES`` has one (``TABLE_SCHEMAS``), with the
+types Spark's parquet inference gives the driver data and every field
+nullable, as a file scan reports it; ``sources.tables.load_table`` reads
+with it, so building a plan over a scan runs no schema-inference job, and
+checks it against one parquet footer instead. Validation constraints that
+Pydantic carried (e.g. confidence in [0,1], ``events/schema.py:27``) live
+in ``operators.filters`` as filter/dead-letter predicates, since Spark
+schemas don't carry range checks.
 """
 
 from __future__ import annotations
@@ -96,6 +101,80 @@ STATUS_SCHEMA = T.StructType(
 # Driver batch tables (/root/testdata) — FIXTURES.md §A
 # ---------------------------------------------------------------------------
 
+REGION_SCHEMA = T.StructType(
+    [
+        T.StructField("r_regionkey", T.IntegerType(), True),
+        T.StructField("r_name", T.StringType(), True),
+    ]
+)
+
+NATION_SCHEMA = T.StructType(
+    [
+        T.StructField("n_nationkey", T.IntegerType(), True),
+        T.StructField("n_name", T.StringType(), True),
+        T.StructField("n_regionkey", T.IntegerType(), True),
+    ]
+)
+
+CUSTOMER_SCHEMA = T.StructType(
+    [
+        T.StructField("c_custkey", T.LongType(), True),
+        T.StructField("c_name", T.StringType(), True),
+        T.StructField("c_nationkey", T.IntegerType(), True),
+        T.StructField("c_acctbal", T.DoubleType(), True),
+        T.StructField("c_mktsegment", T.StringType(), True),
+    ]
+)
+
+SUPPLIER_SCHEMA = T.StructType(
+    [
+        T.StructField("s_suppkey", T.LongType(), True),
+        T.StructField("s_name", T.StringType(), True),
+        T.StructField("s_nationkey", T.IntegerType(), True),
+        T.StructField("s_acctbal", T.DoubleType(), True),
+    ]
+)
+
+PART_SCHEMA = T.StructType(
+    [
+        T.StructField("p_partkey", T.LongType(), True),
+        T.StructField("p_name", T.StringType(), True),
+        T.StructField("p_brand", T.StringType(), True),
+        T.StructField("p_type", T.StringType(), True),
+        T.StructField("p_size", T.IntegerType(), True),
+        T.StructField("p_retailprice", T.DoubleType(), True),
+    ]
+)
+
+# TPC-H dates are naive microsecond timestamps in the files: TIMESTAMP_NTZ
+ORDERS_SCHEMA = T.StructType(
+    [
+        T.StructField("o_orderkey", T.LongType(), True),
+        T.StructField("o_custkey", T.LongType(), True),
+        T.StructField("o_orderstatus", T.StringType(), True),
+        T.StructField("o_totalprice", T.DoubleType(), True),
+        T.StructField("o_orderdate", T.TimestampNTZType(), True),
+        T.StructField("o_orderpriority", T.StringType(), True),
+    ]
+)
+
+LINEITEM_SCHEMA = T.StructType(
+    [
+        T.StructField("l_orderkey", T.LongType(), True),
+        T.StructField("l_partkey", T.LongType(), True),
+        T.StructField("l_suppkey", T.LongType(), True),
+        T.StructField("l_linenumber", T.IntegerType(), True),
+        T.StructField("l_quantity", T.DoubleType(), True),
+        T.StructField("l_extendedprice", T.DoubleType(), True),
+        T.StructField("l_discount", T.DoubleType(), True),
+        T.StructField("l_tax", T.DoubleType(), True),
+        T.StructField("l_returnflag", T.StringType(), True),
+        T.StructField("l_linestatus", T.StringType(), True),
+        T.StructField("l_shipdate", T.TimestampNTZType(), True),
+    ]
+)
+
+# ``ts`` is TIMESTAMP whatever its encoding in the files (sources.tables)
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), True),
@@ -140,15 +219,18 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-BATCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+#: every batch table and its declared schema, in load order
+TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "region": REGION_SCHEMA,
+    "nation": NATION_SCHEMA,
+    "customer": CUSTOMER_SCHEMA,
+    "supplier": SUPPLIER_SCHEMA,
+    "part": PART_SCHEMA,
+    "orders": ORDERS_SCHEMA,
+    "lineitem": LINEITEM_SCHEMA,
+    "events": EVENTS_SCHEMA,
+    "documents": DOCUMENTS_SCHEMA,
+    "embeddings": EMBEDDINGS_SCHEMA,
+}
+
+BATCH_TABLES = tuple(TABLE_SCHEMAS)

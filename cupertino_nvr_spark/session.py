@@ -61,7 +61,8 @@ def get_spark(app_name: str = "cupertino_nvr_spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        # testdata events.ts is TIMESTAMP(NANOS); read as long, loader converts
+        # an inferred read of parquet TIMESTAMP(NANOS) yields int64 nanos instead
+        # of failing; load_table reads such data declared and needs no conf
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(
             "spark.driver.memory",

@@ -20,6 +20,8 @@ from tests.test_streaming import make_events, ts, write_batches
 
 pytestmark = pytest.mark.slow  # rehearsal suite: excluded from the default (gate) run, see pytest.ini
 
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
 
 # ---------------------------------------------------------------------------
 # T5: TTL latest-per-key keyed state
@@ -43,15 +45,23 @@ def test_ttl_latest_per_key_updates(spark, tmp_path):
     )
     cached = ttl_latest_per_key(stream, ttl_seconds=300.0)
     name = f"mem_{uuid.uuid4().hex[:8]}"
-    q = (
-        cached.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmp_path}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    # A processing-time timeout asks for a state-cleanup batch after every
+    # batch, so with no-data batches on an availableNow query never ends
+    # (nor does processAllAvailable return). The expiry test covers those
+    # batches; this one needs only the two data batches.
+    spark.conf.set(NO_DATA_BATCHES, "false")
+    try:
+        q = (
+            cached.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update")
+            .option("checkpointLocation", f"{tmp_path}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+    finally:
+        spark.conf.unset(NO_DATA_BATCHES)
     rows = spark.table(name).collect()
     # per key, the LAST emitted row is the cache's final value
     final = {}
@@ -128,7 +138,7 @@ def test_dedup_state_survives_restart(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     write_batches([make_events(spark, [(1, 1, 1.0, 1), (2, 1, 2.0, 1)])], src)
     run_once()

@@ -80,7 +80,7 @@ def run_stream(df, tmpdir, output_mode="append"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "availableNow query did not terminate"
     return df.sparkSession.table(name)
 
 
