@@ -65,26 +65,34 @@ SIM_DECIMALS = 6
 MAX_PROBES = 65536
 
 
-def _collect_bounded(probes: DataFrame, max_probes: int | None = None) -> list:
-    """Collect the probe side under the closure-capture budget, in ONE job.
+_PROBE_HINT = (
+    "brute_force_topk collects probes to the driver (closure capture). Pass "
+    "a bounded retrieval batch, or use the index paths (lsh_ann_topk / "
+    "ivf_ann_topk) for probe sets at corpus scale."
+)
+
+
+def _collect_bounded(
+    frame: DataFrame,
+    max_rows: int | None = None,
+    cap: str = "MAX_PROBES",
+    hint: str = _PROBE_HINT,
+) -> list:
+    """Collect a driver-side frame under a row cap, in one action.
 
     ``limit(max+1).collect()`` touches at most max+1 rows — it never scans
-    the full frame — and doubles as the guard: more than ``max_probes``
-    rows back means the caller passed an unbounded frame (e.g.
-    probes=corpus), which must fail fast instead of OOMing the driver.
-    Under the cap, limit(max+1) returns every row, so the collected set is
-    complete. Reads ``MAX_PROBES`` at call time so tests can lower it.
+    the full frame — and doubles as the guard: more than ``max_rows`` rows
+    back means the caller passed an unbounded frame (e.g. probes=corpus),
+    which must fail fast, naming the ``cap`` constant, instead of OOMing
+    the driver. Under the cap, limit(max+1) returns every row, so the
+    collected set is complete. ``max_rows`` defaults to ``MAX_PROBES``,
+    read at call time so tests can lower it.
     """
-    if max_probes is None:
-        max_probes = MAX_PROBES
-    rows = probes.limit(max_probes + 1).collect()
-    if len(rows) > max_probes:
-        raise ValueError(
-            f"probe side exceeds MAX_PROBES={max_probes}; brute_force_topk "
-            "collects probes to the driver (closure capture). Pass a bounded "
-            "retrieval batch, or use the index paths (lsh_ann_topk / "
-            "ivf_ann_topk) for probe sets at corpus scale."
-        )
+    if max_rows is None:
+        max_rows = MAX_PROBES
+    rows = frame.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(f"more than {cap}={max_rows} rows to collect; {hint}")
     return rows
 
 

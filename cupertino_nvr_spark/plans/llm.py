@@ -31,6 +31,7 @@ from cupertino_nvr_spark.llm.multimodal import decode_features, frame_sample_pla
 from cupertino_nvr_spark.llm.similarity import (
     IVF_MAX_CELLS,
     MAX_PROBES,
+    _collect_bounded,
     brute_force_topk,
     ivf_ann_topk,
     lsh_ann_topk,
@@ -47,6 +48,14 @@ from cupertino_nvr_spark.llm.text import (
     repetition_gate,
     token_count,
     ws_tokens,
+)
+from cupertino_nvr_spark.llm.tokenizers import (
+    likelihood_micro,
+    merge_train,
+    pair_count,
+    unigram_train,
+    wordpiece_tokens,
+    wordpiece_vocab,
 )
 from cupertino_nvr_spark.plans.registry import register
 from cupertino_nvr_spark.sources.tables import load_table
@@ -362,16 +371,19 @@ def docs_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The signature table feeds FOUR arms downstream (hot-bucket count +
     # anti-join left, then both self-join sides) and Spark cannot CSE
     # across them — the plain plan re-ran the whole scan+shingle+md5+agg
-    # chain per arm (40 parquet scans at r14). LAZY checkpoint: the
-    # signature RDD is filled by the query's own first action rather than
-    # by a separate count at build, and the four arms then share it.
-    # The build still runs one Spark job (tests/build_jobs.json), and it
-    # is timed: bench.py times a query from its build, perfbench reports
-    # build and exec apart. The expensive map side
-    # (scan + shingles + md5) runs once even if downstream stages race on
-    # the lazily-persisted blocks: they share the signature aggregate's
-    # single shuffle dependency, so a race can only duplicate the cheap
-    # reduce-side min-agg tasks, never the corpus scan.
+    # chain per arm (40 parquet scans). LAZY checkpoint: no separate
+    # count fills the signature RDD at build; the four arms share
+    # it once the query's first action fills it. The expensive map side
+    # does NOT wait for that action, though: under AQE, turning the plan
+    # into the checkpoint's RDD materializes its shuffle-map stage (scan +
+    # shingles + md5, 5 tasks at sf0.001) while the plan is built. That
+    # stage is the one build job in tests/build_jobs.json (0 with AQE
+    # off), and it is timed: bench.py times a query from its build,
+    # perfbench reports build and exec apart. The map side runs once even
+    # if downstream stages race on the lazily-persisted blocks: they share
+    # the signature aggregate's single shuffle dependency, so a race can
+    # only duplicate the cheap reduce-side min-agg tasks, never the corpus
+    # scan.
     sigs = reliable_checkpoint(
         minhash_signature(aug, num_hashes=8, shingle_k=3, hash_fn="md5"),
         eager=False,
@@ -5324,17 +5336,24 @@ def docs_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- distributed BPE trainer (K merge rounds, fully oracle-checked) ----------
-
-# Words are encoded as separator-delimited symbol strings with DOUBLED
-# boundaries: "<SS>c1<SS>c2<SS>" where SS = two U+001F chars. Applying
-# merge (a, b) is then ONE plain string replace of "<S>a<SS>b<S>" with
-# "<S>ab<S>" (S = one U+001F): the pattern consumes only the INNER half
-# of each doubled boundary, so consecutive occurrences keep their shared
-# boundary and leftmost non-overlapping replace reproduces exactly the
-# greedy left-to-right merge BPE specifies ([a,a,a,a] -> [aa,aa], not
-# [aa,a,a]). Both engines' replace() scan leftmost non-overlapping, so
-# the oracle replays the merge bit-identically — no fold/UDF needed.
+# --- tokenizer trainers: BPE, WordPiece, unigram-LM (fully oracle-checked) ---
+#
+# Spark collapses the corpus to its word-frequency table (_word_freq) and
+# collects it in one bounded action (_word_table); the trainers then run
+# in plain Python on the driver (llm/tokenizers.py) and their results come
+# back as small local DataFrames the per-doc legs join against. The word
+# table is bounded by the vocabulary, not the corpus (the generated
+# corpora hold 31 distinct words at every scale factor), so no round
+# needs a Spark job.
+#
+# The DuckDB oracles unroll the same rounds as SQL CTEs. There words are
+# separator-delimited symbol strings with DOUBLED boundaries:
+# "<SS>c1<SS>c2<SS>" where SS = two U+001F chars. Applying merge (a, b) is
+# then ONE plain string replace of "<S>a<SS>b<S>" with "<S>ab<S>" (S = one
+# U+001F): the pattern consumes only the INNER half of each doubled
+# boundary, so consecutive occurrences keep their shared boundary and
+# leftmost non-overlapping replace reproduces exactly the greedy
+# left-to-right merge BPE specifies ([a,a,a,a] -> [aa,aa], not [aa,a,a]).
 _BPE_S = "\x1f"
 _BPE_SS = _BPE_S * 2
 _BPE_MERGES = 6
@@ -5384,39 +5403,43 @@ _BPE_FINAL_SQL = "\n    UNION ALL ".join(
     {_BPE_FINAL_SQL}
     """,
     doc=(
-        f"distributed BPE tokenizer training, {_BPE_MERGES} merge rounds "
-        "(Sennrich et al. 2016 exactly: weighted adjacent-pair counts "
-        "over the word-frequency table, argmax pair, greedy "
-        "left-to-right merge, repeat) — the full trainer, not just one "
-        "round's statistic (docs_bpe_pair_stats). The corpus collapses "
-        "ONCE to the distinct-word/frequency table (vocabulary-bounded "
-        "at any corpus size — the classic trainer trick), and every "
-        "round is: split symbols, one map-side-combined pair count, a "
-        "1-row argmax broadcast back, one string replace — no UDF, no "
-        "driver-side state; merge application is a plain replace over a "
-        "doubled-boundary symbol encoding that reproduces greedy BPE "
-        "semantics under leftmost non-overlapping replacement on both "
-        "engines. Spark rounds checkpoint the word table "
-        "(reliable_checkpoint) so round k+1 reads a materialized round "
-        "k instead of replaying the whole chain; the oracle unrolls the "
-        "identical rounds as SQL CTEs, pagerank-style."
+        f"BPE tokenizer training, {_BPE_MERGES} merge rounds (Sennrich et "
+        "al. 2016 exactly: weighted adjacent-pair counts over the "
+        "word-frequency table, argmax pair, greedy left-to-right merge, "
+        "repeat) — the full trainer, not just one round's statistic "
+        "(docs_bpe_pair_stats). The corpus collapses ONCE in Spark to the "
+        "distinct-word/frequency table (vocabulary-bounded at any corpus "
+        "size — the classic trainer trick), collected in one bounded "
+        "action (at most _TOKENIZER_MAX_WORDS words); every round then "
+        "runs in memory on the driver, so the round count costs no Spark "
+        "job. The oracle unrolls the identical rounds as SQL CTEs over a "
+        "doubled-boundary symbol encoding, pagerank-style."
     ),
 )
 def docs_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    merge_rows, _, _ = _bpe_train(spark, sf_dir)
-    out = merge_rows[0]
-    for mr in merge_rows[1:]:
-        out = out.unionAll(mr)
-    return out
+    merges, _ = merge_train(_word_table(spark, sf_dir), _BPE_MERGES, pair_count)
+    return spark.createDataFrame(
+        [(i, lt, rt, lt + rt, c) for i, (lt, rt, c, _) in enumerate(merges, 1)],
+        _MERGES_DDL,
+    )
+
+
+# Cap on the distinct words a tokenizer query collects to the driver: the
+# trainers hold the word table there as a dict plus one symbol list per
+# word (about 260 MB of Python objects for 2^20 words of 3-10 letters).
+# More words raise, naming the cap.
+_TOKENIZER_MAX_WORDS = 1 << 20
+
+_MERGES_DDL = (
+    "merge_rank INT NOT NULL, left_sym STRING NOT NULL, "
+    "right_sym STRING NOT NULL, merged STRING NOT NULL, pair_count BIGINT"
+)
 
 
 def _word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE corpus word-frequency collapse every tokenizer trainer starts
     from: lowercased whitespace tokens, one explode + one
-    map-side-combined groupBy. Factored out so a multi-trainer consumer
-    (docs_tokenizer_fertility runs all three) can materialize it ONCE
-    and pass it in — three trainers used to repeat the full corpus scan
-    + tokenize + shuffle each."""
+    map-side-combined groupBy."""
     docs = load_table(spark, "documents", sf_dir)
     return (
         docs.select(F.explode(ws_tokens(F.lower(F.col("text")))).alias("w"))
@@ -5425,72 +5448,16 @@ def _word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_train(spark: SparkSession, sf_dir: str, words: DataFrame | None = None):
-    """Shared trainer loop: returns (merge_rows, initial_state,
-    final_state) — the merges query unions the former, the compression
-    eval aggregates the two states. ``words``: a pre-built (w, f) word
-    table (see ``_word_freq``) to train on instead of collapsing the
-    corpus again."""
-    from cupertino_nvr_spark.operators.checkpoint import reliable_checkpoint
-
-    if words is None:
-        words = _word_freq(spark, sf_dir)
-    enc0 = F.concat(
-        F.lit(_BPE_SS), F.regexp_replace(F.col("w"), "(.)", "$1" + _BPE_SS)
+def _word_table(spark: SparkSession, sf_dir: str) -> dict[str, int]:
+    """``_word_freq`` on the driver as {word: frequency}, collected in one
+    bounded action; more than ``_TOKENIZER_MAX_WORDS`` words raise."""
+    rows = _collect_bounded(
+        _word_freq(spark, sf_dir),
+        _TOKENIZER_MAX_WORDS,
+        cap="_TOKENIZER_MAX_WORDS",
+        hint="the tokenizer trainers hold the word-frequency table on the driver.",
     )
-    state = reliable_checkpoint(words.select("w", enc0.alias("enc"), "f"))
-    state0 = state
-    merge_rows = []
-    for i in range(_BPE_MERGES):
-        syms = F.split(F.col("enc"), _BPE_SS)
-        n = F.size(syms)
-        # guard n >= 4 (>= 2 real symbols): F.sequence(2, n-2) silently
-        # REVERSES to [2, 1] when n = 3 (a word collapsed to one symbol),
-        # which would index the boundary empties as a phantom pair — the
-        # same trap _shingle_spans documents; DuckDB's range() is empty
-        spans = F.when(
-            n >= 4, F.sequence(F.lit(2), n - 2)
-        ).otherwise(F.array().cast("array<int>"))
-        pair = F.explode(
-            F.transform(
-                spans,
-                lambda j: F.struct(
-                    F.element_at(syms, j).alias("l"),
-                    F.element_at(syms, j + 1).alias("r2"),
-                ),
-            )
-        )
-        counts = (
-            state.select(pair.alias("p"), "f")
-            .groupBy("p.l", "p.r2")
-            .agg(F.sum("f").cast("bigint").alias("cnt"))
-        )
-        m = counts.orderBy(
-            F.col("cnt").desc(), F.col("l"), F.col("r2")
-        ).limit(1)
-        merge_rows.append(
-            m.select(
-                F.lit(i + 1).alias("merge_rank"),
-                F.col("l").alias("left_sym"),
-                F.col("r2").alias("right_sym"),
-                F.concat("l", "r2").alias("merged"),
-                F.col("cnt").alias("pair_count"),
-            )
-        )
-        pattern = F.concat(
-            F.lit(_BPE_S), F.col("l"), F.lit(_BPE_SS), F.col("r2"), F.lit(_BPE_S)
-        )
-        replacement = F.concat(
-            F.lit(_BPE_S), F.col("l"), F.col("r2"), F.lit(_BPE_S)
-        )
-        state = reliable_checkpoint(
-            state.crossJoin(F.broadcast(m)).select(
-                "w",
-                F.replace(F.col("enc"), pattern, replacement).alias("enc"),
-                "f",
-            )
-        )
-    return merge_rows, state0, state
+    return {r["w"]: r["f"] for r in rows}
 
 
 @register(
@@ -5529,26 +5496,25 @@ def _bpe_train(spark: SparkSession, sf_dir: str, words: DataFrame | None = None)
         "merges: corpus token counts before (= characters) and after, "
         "chars-per-symbol and symbols-per-word — the number a tokenizer "
         "team watches as the merge list grows (fertility's inverse). "
-        "Reuses the trainer's word-table rounds verbatim "
-        "(docs_bpe_train_merges) and adds two 1-row aggregates over the "
-        "initial and final word states cross-joined into the report row; "
-        "all costs identical to the trainer at any scale."
+        "Reuses the in-memory trainer of docs_bpe_train_merges and sums "
+        "the word table before and after its merges into the one report "
+        "row; all costs identical to the trainer at any scale."
     ),
 )
 def docs_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, state0, state_k = _bpe_train(spark, sf_dir)
-
-    def syms_count(df):
-        return F.sum(
-            F.col("f") * (F.size(F.split(F.col("enc"), _BPE_SS)) - 2)
-        ).cast("bigint")
-
-    before = state0.agg(
-        F.sum("f").cast("bigint").alias("n_words"),
-        syms_count(state0).alias("n_chars"),
+    words = _word_table(spark, sf_dir)
+    _, segs = merge_train(words, _BPE_MERGES, pair_count)
+    counts = spark.createDataFrame(
+        [
+            (
+                sum(words.values()),
+                sum(f * len(w) for w, f in words.items()),
+                sum(f * len(segs[w]) for w, f in words.items()),
+            )
+        ],
+        "n_words BIGINT, n_chars BIGINT, n_symbols BIGINT",
     )
-    after = state_k.agg(syms_count(state_k).alias("n_symbols"))
-    return before.crossJoin(after).select(
+    return counts.select(
         "n_words",
         "n_chars",
         "n_symbols",
@@ -5593,26 +5559,23 @@ def docs_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
         "third leg of the tokenizer family (train: "
         "docs_bpe_train_merges; corpus eval: docs_bpe_compression; "
         "per-doc application: this). Tokenizing a document is a "
-        "vocabulary JOIN, not a re-segmentation: every word's "
-        "post-merge symbol count is already materialized in the "
-        "trainer's final word table, so the corpus-sized work is one "
-        "word-keyed equi-join of the token stream against the "
-        "vocabulary-bounded word table plus a doc-keyed count — "
-        "exactly how production pipelines tokenize (word-level cache "
-        "in front of the BPE automaton)."
+        "vocabulary JOIN, not a re-segmentation: the in-memory trainer "
+        "already holds every word's post-merge symbol count, shipped as "
+        "a local (w, n_syms) table, so the corpus-sized work is one "
+        "word-keyed equi-join of the token stream against that "
+        "vocabulary-bounded table plus a doc-keyed count — exactly how "
+        "production pipelines tokenize (word-level cache in front of the "
+        "BPE automaton)."
     ),
 )
 def docs_bpe_tokenized_len(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, _, state_k = _bpe_train(spark, sf_dir)
+    _, segs = merge_train(_word_table(spark, sf_dir), _BPE_MERGES, pair_count)
+    wsyms = spark.createDataFrame(
+        [(w, len(s)) for w, s in segs.items()], "w STRING, n_syms BIGINT"
+    )
     docs = load_table(spark, "documents", sf_dir)
     toksd = docs.select(
         "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("w")
-    )
-    wsyms = state_k.select(
-        "w",
-        (F.size(F.split(F.col("enc"), _BPE_SS)) - 2)
-        .cast("bigint")
-        .alias("n_syms"),
     )
     return toksd.join(wsyms, "w").groupBy("doc_id").agg(
         F.count("*").alias("n_words"),
@@ -5629,30 +5592,30 @@ def docs_bpe_tokenized_len(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pairs whose parts rarely occur apart, where BPE takes raw frequency.
 # The ratio argmax rides FIXED-POINT MICRO-NATS
 # (round((ln(c) - ln(a) - ln(b)) * 1e6) as BIGINT — the unigram trainer's
-# rule) so the selection is an exact integer sort in both engines; ties
-# break on (left, right) like BPE.
+# rule) so the selection is an exact integer sort on the driver and in the
+# oracle; ties break on (left, right) like BPE.
 _WP_MERGES = 6
 
 
 def _wp_round_sql(i: int) -> str:
     s, ss = _BPE_S, _BPE_SS
     return f"""
-    vs{i} AS (SELECT string_split(enc, '{ss}') AS syms, f FROM v{i}),
-    vu{i} AS (
+    vs{i} AS MATERIALIZED (SELECT string_split(enc, '{ss}') AS syms, f FROM v{i}),
+    vu{i} AS MATERIALIZED (
       SELECT syms[j] AS sym, CAST(SUM(f) AS BIGINT) AS cnt
       FROM (SELECT syms, f,
                    unnest(range(2, greatest(len(syms), 2))) AS j
             FROM vs{i})
       GROUP BY 1
     ),
-    vp{i} AS (
+    vp{i} AS MATERIALIZED (
       SELECT syms[j] AS l, syms[j+1] AS r2, CAST(SUM(f) AS BIGINT) AS cnt
       FROM (SELECT syms, f,
                    unnest(range(2, greatest(len(syms) - 1, 2))) AS j
             FROM vs{i})
       GROUP BY 1, 2
     ),
-    vsc{i} AS (
+    vsc{i} AS MATERIALIZED (
       SELECT p.l, p.r2, p.cnt,
              CAST(round((ln(CAST(p.cnt AS DOUBLE)) - ln(CAST(ul.cnt AS DOUBLE))
                          - ln(CAST(ur.cnt AS DOUBLE))) * 1000000) AS BIGINT)
@@ -5661,9 +5624,9 @@ def _wp_round_sql(i: int) -> str:
       JOIN vu{i} ul ON ul.sym = p.l
       JOIN vu{i} ur ON ur.sym = p.r2
     ),
-    vm{i} AS (SELECT l, r2, cnt, score_micro FROM vsc{i}
+    vm{i} AS MATERIALIZED (SELECT l, r2, cnt, score_micro FROM vsc{i}
               ORDER BY score_micro DESC, l, r2 LIMIT 1),
-    v{i + 1} AS (
+    v{i + 1} AS MATERIALIZED (
       SELECT w, replace(enc, '{s}' || m.l || '{ss}' || m.r2 || '{s}',
                         '{s}' || m.l || m.r2 || '{s}') AS enc, f
       FROM v{i}, vm{i} m
@@ -5700,254 +5663,21 @@ _WP_FINAL_SQL = "\n    UNION ALL ".join(
         "merge the pair maximizing count(xy)/(count(x)count(y)), i.e. "
         "pairs whose parts rarely occur apart — completing the "
         "production tokenizer-trainer trio (BPE frequency, unigram-LM "
-        "EM, WordPiece likelihood). Same scale shape as "
-        "docs_bpe_train_merges: the corpus collapses ONCE to the "
-        "vocabulary-bounded word table; every round is one symbol count "
-        "+ one pair count (both map-side combined), a 1-row argmax over "
-        "fixed-point micro-nat scores (exact integer sort, (l, r) "
-        "tiebreak), one string replace. Oracle unrolls the identical "
-        "rounds as CTEs."
+        "EM, WordPiece likelihood). Same shape as docs_bpe_train_merges, "
+        "and the same in-memory merge loop over the collected "
+        "vocabulary-bounded word table: every round counts symbols and "
+        "pairs, takes the argmax over fixed-point micro-nat scores "
+        "(exact integer sort, (l, r) tiebreak) and applies the merge. "
+        "Oracle unrolls the identical rounds as CTEs."
     ),
 )
 def docs_wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    merge_rows, _ = _wp_train(spark, sf_dir)
-    out = merge_rows[0]
-    for mr in merge_rows[1:]:
-        out = out.unionAll(mr)
-    return out
-
-
-def _wp_train(spark: SparkSession, sf_dir: str, words: DataFrame | None = None):
-    """Shared WordPiece trainer loop: returns (merge_rows, final_state) —
-    the merges query unions the former; the application legs
-    (docs_wordpiece_tokenized_len, the fertility wordpiece row) derive
-    the greedy-matching vocabulary from the latter. ``words``: see
-    ``_bpe_train``."""
-    from cupertino_nvr_spark.operators.checkpoint import reliable_checkpoint
-
-    if words is None:
-        words = _word_freq(spark, sf_dir)
-    enc0 = F.concat(
-        F.lit(_BPE_SS), F.regexp_replace(F.col("w"), "(.)", "$1" + _BPE_SS)
+    merges, _ = merge_train(
+        _word_table(spark, sf_dir), _WP_MERGES, likelihood_micro
     )
-    state = reliable_checkpoint(words.select("w", enc0.alias("enc"), "f"))
-    merge_rows = []
-    for i in range(_WP_MERGES):
-        syms = F.split(F.col("enc"), _BPE_SS)
-        n = F.size(syms)
-        sym_spans = F.when(n >= 3, F.sequence(F.lit(2), n - 1)).otherwise(
-            F.array().cast("array<int>")
-        )
-        ucounts = (
-            state.select(
-                F.explode(
-                    F.transform(sym_spans, lambda j: F.element_at(syms, j))
-                ).alias("sym"),
-                "f",
-            )
-            .groupBy("sym")
-            .agg(F.sum("f").cast("bigint").alias("cnt"))
-        )
-        # pair spans: same n >= 4 guard as the BPE trainer (F.sequence
-        # REVERSES when the upper bound is below the lower)
-        pair_spans = F.when(
-            n >= 4, F.sequence(F.lit(2), n - 2)
-        ).otherwise(F.array().cast("array<int>"))
-        pair = F.explode(
-            F.transform(
-                pair_spans,
-                lambda j: F.struct(
-                    F.element_at(syms, j).alias("l"),
-                    F.element_at(syms, j + 1).alias("r2"),
-                ),
-            )
-        )
-        pcounts = (
-            state.select(pair.alias("p"), "f")
-            .groupBy("p.l", "p.r2")
-            .agg(F.sum("f").cast("bigint").alias("cnt"))
-        )
-        ul = ucounts.select(F.col("sym").alias("l"), F.col("cnt").alias("ucnt_l"))
-        ur = ucounts.select(F.col("sym").alias("r2"), F.col("cnt").alias("ucnt_r"))
-        scored = (
-            pcounts.join(F.broadcast(ul), "l")
-            .join(F.broadcast(ur), "r2")
-            .select(
-                "l",
-                "r2",
-                "cnt",
-                F.round(
-                    (
-                        F.log(F.col("cnt").cast("double"))
-                        - F.log(F.col("ucnt_l").cast("double"))
-                        - F.log(F.col("ucnt_r").cast("double"))
-                    )
-                    * 1000000,
-                    0,
-                )
-                .cast("bigint")
-                .alias("score_micro"),
-            )
-        )
-        m = scored.orderBy(
-            F.col("score_micro").desc(), F.col("l"), F.col("r2")
-        ).limit(1)
-        merge_rows.append(
-            m.select(
-                F.lit(i + 1).alias("merge_rank"),
-                F.col("l").alias("left_sym"),
-                F.col("r2").alias("right_sym"),
-                F.concat("l", "r2").alias("merged"),
-                F.col("cnt").alias("pair_count"),
-                "score_micro",
-            )
-        )
-        pattern = F.concat(
-            F.lit(_BPE_S), F.col("l"), F.lit(_BPE_SS), F.col("r2"), F.lit(_BPE_S)
-        )
-        replacement = F.concat(
-            F.lit(_BPE_S), F.col("l"), F.col("r2"), F.lit(_BPE_S)
-        )
-        state = reliable_checkpoint(
-            state.crossJoin(F.broadcast(m)).select(
-                "w",
-                F.replace(F.col("enc"), pattern, replacement).alias("enc"),
-                "f",
-            )
-        )
-    return merge_rows, state
-
-
-# WordPiece APPLICATION (the BERT tokenizer's runtime half): greedy
-# longest-match-first with continuation pieces. The vocabulary derives
-# from the trained word state — word-initial pieces are each word's first
-# final-segmentation symbol, continuation pieces (BERT's "##xyz" class,
-# carried here as an is_cont flag instead of a literal prefix) are every
-# later symbol — plus the corpus alphabet in BOTH classes (BERT's
-# coverage guarantee: tokenization of an in-alphabet word can always fall
-# back to single characters; a word containing an out-of-alphabet
-# character becomes ONE [UNK] token, the published whole-word-UNK rule).
-# Greedy matching is position-independent of the path taken (the best
-# piece at position s depends only on (word, s, s>1)), so the per-word
-# longest-match table is ONE vocabulary join + groupBy-max and the walk
-# is a per-row fold — no per-position joins, no UDF.
-
-
-def _wp_vocab(state: DataFrame) -> DataFrame:
-    """Trained word state -> (piece, is_cont) application vocabulary."""
-    syms = F.split(F.col("enc"), _BPE_SS)
-    n = F.size(syms)
-    init_p = state.select(F.element_at(syms, 2).alias("piece")).distinct()
-    cont_idx = F.when(n >= 4, F.sequence(F.lit(3), n - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    cont_p = state.select(
-        F.explode(
-            F.transform(cont_idx, lambda j: F.element_at(syms, j))
-        ).alias("piece")
-    ).distinct()
-    chr_idx = F.when(
-        F.length("w") >= 1, F.sequence(F.lit(1), F.length("w").cast("int"))
-    ).otherwise(F.array().cast("array<int>"))
-    chars = state.select(
-        F.explode(
-            F.transform(chr_idx, lambda j: F.col("w").substr(j, F.lit(1)))
-        ).alias("piece")
-    ).distinct()
-    return (
-        init_p.unionByName(chars)
-        .distinct()
-        .withColumn("is_cont", F.lit(False))
-        .unionByName(
-            cont_p.unionByName(chars).distinct().withColumn("is_cont", F.lit(True))
-        )
-    )
-
-
-def _wp_word_tokens(words: DataFrame, vocab: DataFrame) -> DataFrame:
-    """Greedy longest-match-first WordPiece token counts per word:
-    (w) x (piece, is_cont) -> (w, n_wp, unk). ``words`` may be ANY word
-    frame (not just the training table) — words containing characters
-    outside the vocabulary alphabet take the whole-word [UNK] path
-    (n_wp = 1, unk = 1). Cost: one broadcast vocabulary join over the
-    (word x position x piece-length) candidate frame (vocabulary-bounded,
-    piece length capped by the longest trained piece), one groupBy-max,
-    one per-row fold."""
-    ml = vocab.agg(F.max(F.length("piece")).cast("int").alias("ml"))
-    starts = F.when(
-        F.length("w") >= 1, F.sequence(F.lit(1), F.length("w").cast("int"))
-    ).otherwise(F.array().cast("array<int>"))
-    cands = (
-        words.select("w")
-        .crossJoin(F.broadcast(ml))
-        .select("w", "ml", F.explode(starts).alias("s"))
-        .select(
-            "w",
-            "s",
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    F.least(
-                        F.col("ml"), (F.length("w") - F.col("s") + 1).cast("int")
-                    ),
-                )
-            ).alias("plen"),
-        )
-        .select(
-            "w",
-            "s",
-            "plen",
-            F.col("w").substr(F.col("s"), F.col("plen")).alias("piece"),
-            (F.col("s") > 1).alias("is_cont"),
-        )
-    )
-    best = (
-        cands.join(F.broadcast(vocab), ["piece", "is_cont"])
-        .groupBy("w", "s")
-        .agg(F.max("plen").cast("int").alias("bl"))
-    )
-    bmap = best.groupBy("w").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("s").cast("int").alias("k"), F.col("bl")))
-        ).alias("bmap")
-    )
-    ln = F.length("w").cast("int")
-    init = F.struct(
-        F.lit(1).cast("int").alias("pos"),
-        F.lit(0).cast("int").alias("n"),
-        F.lit(False).alias("unk"),
-    )
-
-    def step(acc, _):
-        bl = F.element_at(F.col("bmap"), acc["pos"])
-        return F.when(acc["pos"] > ln, acc).otherwise(
-            F.when(
-                bl.isNull(),
-                F.struct(
-                    (ln + 1).cast("int").alias("pos"),
-                    acc["n"].alias("n"),
-                    F.lit(True).alias("unk"),
-                ),
-            ).otherwise(
-                F.struct(
-                    (acc["pos"] + bl).cast("int").alias("pos"),
-                    (acc["n"] + 1).cast("int").alias("n"),
-                    acc["unk"].alias("unk"),
-                )
-            )
-        )
-
-    steps = F.when(ln >= 1, F.sequence(F.lit(1), ln)).otherwise(
-        F.array().cast("array<int>")
-    )
-    res = F.aggregate(steps, init, step)
-    return words.select("w").join(bmap, "w", "left").select(
-        "w",
-        F.when(res["unk"], F.lit(1))
-        .otherwise(res["n"])
-        .cast("bigint")
-        .alias("n_wp"),
-        res["unk"].cast("int").alias("unk"),
+    return spark.createDataFrame(
+        [(i, lt, rt, lt + rt, c, sc) for i, (lt, rt, c, sc) in enumerate(merges, 1)],
+        _MERGES_DDL + ", score_micro BIGINT",
     )
 
 
@@ -6049,27 +5779,29 @@ def _wp_apply_sql() -> str:
         "tokenizer-trainer trio (BPE: docs_bpe_tokenized_len; unigram: "
         "docs_unigram_segment; WordPiece: this). Tokenization is BERT's "
         "greedy longest-match-first with continuation pieces (the "
-        "'##' class, carried as an is_cont flag) over the vocabulary "
-        "derived from the trained word state, alphabet included in both "
-        "classes (coverage guarantee). The greedy longest match at a "
-        "position is path-independent, so the per-word match table is "
-        "ONE broadcast vocabulary join + groupBy-max and the walk is a "
-        "per-row higher-order fold (no per-position joins, no UDF); "
-        "per-doc application is then a word-keyed equi-join of the token "
-        "stream against the vocabulary-bounded word table — the "
+        "'##' class) over the vocabulary derived from the trained "
+        "segmentation, alphabet included in both classes (coverage "
+        "guarantee); a word with an unmatched position is one [UNK]. The "
+        "in-memory trainer tokenizes every word of the collected word "
+        "table, and per-doc application is a word-keyed equi-join of the "
+        "token stream against that local (w, n_wp) table — the "
         "word-level-cache shape production tokenizers serve from. Oracle "
-        "replays the walk as a recursive CTE over the same longest-match "
-        "table."
+        "replays the walk as a recursive CTE over a per-(word, position) "
+        "longest-match table."
     ),
 )
 def docs_wordpiece_tokenized_len(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, state = _wp_train(spark, sf_dir)
-    wptok = _wp_word_tokens(state.select("w"), _wp_vocab(state))
+    _, segs = merge_train(_word_table(spark, sf_dir), _WP_MERGES, likelihood_micro)
+    init, cont = wordpiece_vocab(segs)
+    wptok = spark.createDataFrame(
+        [(w, wordpiece_tokens(w, init, cont)[0]) for w in segs],
+        "w STRING, n_wp BIGINT",
+    )
     docs = load_table(spark, "documents", sf_dir)
     toksd = docs.select(
         "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("w")
     )
-    return toksd.join(wptok.select("w", "n_wp"), "w").groupBy("doc_id").agg(
+    return toksd.join(wptok, "w").groupBy("doc_id").agg(
         F.count("*").alias("n_words"),
         F.sum("n_wp").cast("bigint").alias("n_wp_tokens"),
         F.round(
@@ -6093,17 +5825,16 @@ def docs_wordpiece_tokenized_len(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cross-engine exactness: log-probs are FIXED-POINT MICRO-NATS
 # (round(ln(cnt/total) * 1e6) as BIGINT — the PSI/KN round-the-transcendental
 # rule), so the Viterbi DP is exact integer arithmetic; ties break on the
-# (score, piece_len) struct max — prefer the longer piece — identically in
-# Spark (F.greatest over structs) and DuckDB (MAX(struct_pack(...))).
+# (score, piece_len) max — prefer the longer piece — identically on the
+# driver (tuple max) and in DuckDB (MAX(struct_pack(...))).
 #
-# Scale shape: the corpus collapses ONCE to the word-frequency table (the
-# BPE trainer's trick); every EM round is one vocab equi-join (broadcast —
-# the vocab is seed-bounded), one map_from_entries groupBy, the DP+backtrace
-# as pure per-row higher-order functions (NO per-position joins, no UDF),
-# one explode+count. Words longer than _UNI_MAXW are excluded from training
-# (the SentencePiece max-piece-surface analog); _unigram_segment reports
-# them separately. Reference analog: none (north-star §2.11 tokenizer
-# family; BPE twin docs_bpe_train_merges).
+# Scale shape: the corpus collapses ONCE in Spark to the word-frequency
+# table (the BPE trainer's trick), collected under _TOKENIZER_MAX_WORDS;
+# the EM rounds run in memory (llm/tokenizers.py::unigram_train). Words
+# longer than _UNI_MAXW are excluded from training (the SentencePiece
+# max-piece-surface analog); docs_unigram_segment reports them
+# separately. Reference analog: none (north-star §2.11 tokenizer family;
+# BPE twin docs_bpe_train_merges).
 _UNI_MAXW = 12
 _UNI_MAXP = 4
 _UNI_SEED_V = 400
@@ -6211,150 +5942,10 @@ def _uni_chain_sql() -> str:
     return _uni_base_sql() + ",\n    " + rounds
 
 
-def _viterbi_dp(lpmap, wlen):
-    """Spark-side Viterbi DP over micro-nat log-probs: one F.aggregate
-    fold per row producing the array of (score, best_len) structs for
-    positions 0..len(w) — exact integer arithmetic, struct-max tiebreak
-    (prefer the longer piece), no joins, no UDF."""
-    init = F.array(
-        F.struct(F.lit(0).cast("bigint").alias("sc"), F.lit(0).cast("int").alias("bl"))
-    )
-
-    def step(acc, j):
-        cands = []
-        for ln in range(1, _UNI_MAXP + 1):
-            prior = F.element_at(acc, (j - ln + 1).cast("int"))
-            lp = F.element_at(lpmap, ((j - ln + 1) * 8 + ln).cast("int"))
-            cands.append(
-                F.when(
-                    (j >= ln) & prior.isNotNull() & lp.isNotNull(),
-                    F.struct(
-                        (prior["sc"] + lp).alias("sc"),
-                        F.lit(ln).cast("int").alias("bl"),
-                    ),
-                )
-            )
-        return F.concat(acc, F.array(F.greatest(*cands)))
-
-    return F.aggregate(F.sequence(F.lit(1), wlen.cast("int")), init, step)
-
-
-def _viterbi_pieces(wcol, dps):
-    """Backtrace the DP array into the chosen piece list: a fixed
-    _UNI_MAXW-step fold walking pos -> pos - best_len(pos)."""
-    init = F.struct(
-        F.length(wcol).cast("int").alias("pos"),
-        F.array().cast("array<string>").alias("ps"),
-    )
-
-    def step(acc, _):
-        pos = acc["pos"]
-        bl = F.element_at(dps, pos + 1)["bl"]
-        return F.when(
-            pos > 0,
-            F.struct(
-                (pos - bl).cast("int").alias("pos"),
-                F.concat(
-                    acc["ps"], F.array(wcol.substr(pos - bl + 1, bl))
-                ).alias("ps"),
-            ),
-        ).otherwise(acc)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(_UNI_MAXW)), init, step, lambda acc: acc["ps"]
-    )
-
-
-def _unigram_train(
-    spark: SparkSession, sf_dir: str, words: DataFrame | None = None
-):
-    """Shared trainer: returns (words, vocab_final, word_pieces) — the
-    trainer query emits vocab_final; segment/fertility reuse word_pieces
-    (each word's final-round Viterbi piece count), so the evaluated
-    segmentation is exactly the trained one. ``words``: a pre-built
-    UNfiltered (w, f) table (``_word_freq``); the surface-length cap is
-    applied here either way (filtering the token stream before the
-    groupBy and filtering the aggregated keys are identical — every
-    occurrence of a word has the word's length)."""
-    from cupertino_nvr_spark.operators.checkpoint import reliable_checkpoint
-
-    if words is None:
-        docs = load_table(spark, "documents", sf_dir)
-        words = (
-            docs.select(F.explode(ws_tokens(F.lower(F.col("text")))).alias("w"))
-            .filter(F.length("w").between(1, _UNI_MAXW))
-            .groupBy("w")
-            .agg(F.count("*").cast("bigint").alias("f"))
-        )
-    else:
-        words = words.filter(F.length("w").between(1, _UNI_MAXW)).select(
-            "w", F.col("f").cast("bigint").alias("f")
-        )
-    words = reliable_checkpoint(words)
-    starts = F.sequence(F.lit(1), F.length("w").cast("int"))
-    plens = F.sequence(F.lit(1), F.lit(_UNI_MAXP))
-    cands = reliable_checkpoint(
-        words.select(
-            "w",
-            "f",
-            F.explode(starts).alias("s"),
-        )
-        .select("w", "f", "s", F.explode(plens).alias("plen"))
-        .filter(F.col("s") + F.col("plen") - 1 <= F.length("w"))
-        .select(
-            "w",
-            "f",
-            "s",
-            "plen",
-            F.col("w").substr(F.col("s"), F.col("plen")).alias("piece"),
-        )
-    )
-    seedcnt = cands.groupBy("piece").agg(F.sum("f").cast("bigint").alias("cnt"))
-    top = seedcnt.orderBy(F.col("cnt").desc(), "piece").limit(_UNI_SEED_V)
-    chars = seedcnt.filter(F.length("piece") == 1)
-    v0src = top.unionByName(chars).distinct()
-    tot0 = v0src.agg(F.sum("cnt").cast("bigint").alias("t"))
-
-    def mstep(counts, tot):
-        lp = F.round(
-            F.log(F.col("cnt").cast("double") / F.col("t")) * _UNI_LP_SCALE, 0
-        ).cast("bigint")
-        return counts.crossJoin(F.broadcast(tot)).select(
-            "piece", "cnt", lp.alias("lp")
-        )
-
-    vocab = reliable_checkpoint(mstep(v0src, tot0))
-    word_pieces = None
-    for _ in range(_UNI_ROUNDS):
-        ps = cands.join(F.broadcast(vocab.select("piece", "lp")), "piece")
-        maps = ps.groupBy("w").agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        (F.col("s") * 8 + F.col("plen")).cast("int").alias("key"),
-                        F.col("lp").alias("value"),
-                    )
-                )
-            ).alias("lpmap")
-        )
-        wdp = words.join(maps, "w").select(
-            "w",
-            "f",
-            _viterbi_pieces(
-                F.col("w"), _viterbi_dp(F.col("lpmap"), F.length("w"))
-            ).alias("pieces"),
-        )
-        word_pieces = wdp.select(
-            "w", "f", F.size("pieces").cast("bigint").alias("n_pieces")
-        )
-        ecnt = (
-            wdp.select(F.explode("pieces").alias("piece"), "f")
-            .groupBy("piece")
-            .agg(F.sum("f").cast("bigint").alias("cnt"))
-        )
-        tot = ecnt.agg(F.sum("cnt").cast("bigint").alias("t"))
-        vocab = reliable_checkpoint(mstep(ecnt, tot))
-    return words, vocab, reliable_checkpoint(word_pieces)
+def _unigram(words: dict[str, int]):
+    """``unigram_train`` at this module's constants: (piece -> (count,
+    lp_micro), word -> final-round piece count)."""
+    return unigram_train(words, _UNI_MAXW, _UNI_MAXP, _UNI_SEED_V, _UNI_ROUNDS)
 
 
 @register(
@@ -6372,28 +5963,22 @@ def _unigram_train(
         f"by weighted count + every character, then {_UNI_ROUNDS} hard-EM "
         "rounds (Viterbi E-step over fixed-point micro-nat log-probs — "
         "exact integer DP, struct-max tiebreak preferring the longer "
-        "piece — and a count/total M-step). The corpus collapses ONCE to "
-        "the word-frequency table (the BPE trainer's vocabulary-bounded "
-        "collapse); each round is one broadcast vocab join, one "
-        "map_from_entries groupBy, the DP+backtrace as per-row "
-        "higher-order functions (no per-position joins, no UDF), one "
-        "explode+count. Oracle unrolls the identical rounds: per-position "
-        "dp CTEs (struct MAX), a recursive backtrace walk, the same "
-        "fixed-point M-step. Emits the trained vocabulary with counts, "
-        "micro-nat log-probs, and frequency rank."
+        "piece — and a count/total M-step). The corpus collapses ONCE in "
+        "Spark to the word-frequency table (the BPE trainer's "
+        "vocabulary-bounded collapse, collected in one bounded action); "
+        "the EM rounds run in memory on the driver. Oracle unrolls the "
+        "identical rounds: per-position dp CTEs (struct MAX), a recursive "
+        "backtrace walk, the same fixed-point M-step. Emits the trained "
+        "vocabulary with counts, micro-nat log-probs, and frequency rank."
     ),
 )
 def docs_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    _, vocab, _ = _unigram_train(spark, sf_dir)
-    w = Window.orderBy(F.col("cnt").desc(), "piece")
-    return vocab.select(
-        "piece",
-        F.length("piece").cast("int").alias("piece_len"),
-        "cnt",
-        F.col("lp").alias("lp_micro"),
-        F.row_number().over(w).alias("vrank"),
+    vocab, _ = _unigram(_word_table(spark, sf_dir))
+    ranked = sorted(vocab.items(), key=lambda kv: (-kv[1][0], kv[0]))
+    return spark.createDataFrame(
+        [(p, len(p), c, lp, i) for i, (p, (c, lp)) in enumerate(ranked, 1)],
+        "piece STRING, piece_len INT, cnt BIGINT, lp_micro BIGINT, "
+        "vrank INT NOT NULL",
     )
 
 
@@ -6421,21 +6006,25 @@ def docs_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Per-document segmentation stats under the trained unigram LM — "
         "the per-doc application leg (the docs_bpe_tokenized_len analog): "
-        "tokenizing is a vocabulary JOIN against the word table's "
-        "materialized final-round Viterbi piece counts, never a "
-        "re-segmentation — one word-keyed equi-join of the token stream "
-        "plus a doc-keyed aggregate. Words longer than the trainer's "
-        "surface cap are reported separately (n_long_words), exactly the "
-        "word-level-cache shape a production tokenizer serves from."
+        "tokenizing is a vocabulary JOIN against the in-memory trainer's "
+        "final-round Viterbi piece counts, shipped as a local (w, "
+        "n_pieces) table, never a re-segmentation — one word-keyed "
+        "equi-join of the token stream plus a doc-keyed aggregate. Words "
+        "longer than the trainer's surface cap are reported separately "
+        "(n_long_words), exactly the word-level-cache shape a production "
+        "tokenizer serves from."
     ),
 )
 def docs_unigram_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, _, word_pieces = _unigram_train(spark, sf_dir)
+    _, n_pieces = _unigram(_word_table(spark, sf_dir))
+    word_pieces = spark.createDataFrame(
+        list(n_pieces.items()), "w STRING, n_pieces BIGINT"
+    )
     docs = load_table(spark, "documents", sf_dir)
     toksd = docs.select(
         "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("w")
     ).filter(F.length("w") >= 1)
-    joined = toksd.join(word_pieces.select("w", "n_pieces"), "w", "left")
+    joined = toksd.join(word_pieces, "w", "left")
     n_words = F.count("n_pieces")
     return joined.groupBy("doc_id").agg(
         n_words.cast("bigint").alias("n_words"),
@@ -6507,65 +6096,40 @@ def docs_unigram_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "on the SAME eligible word multiset (words within the unigram "
         "surface cap): units per word and chars per unit, the numbers a "
         "tokenizer team compares before committing a vocabulary. All "
-        "three legs reuse their trainer chains verbatim (the BPE final "
-        "word state filtered to eligible words; the unigram final-round "
-        "per-word piece counts; the WordPiece greedy longest-match "
-        "counts over the trained vocabulary — the "
+        "three legs reuse the in-memory trainers over ONE collected word "
+        "table (the BPE final segmentation of the eligible words; the "
+        "unigram final-round per-word piece counts; the WordPiece greedy "
+        "longest-match counts over the trained vocabulary — the "
         "docs_wordpiece_tokenized_len word table), so the comparison can "
-        "never drift from the trained tokenizers; the added cost over "
-        "the three trainers is three 1-row aggregates."
+        "never drift from the trained tokenizers; Spark runs one "
+        "word-table collect and rounds the three report rows."
     ),
 )
 def docs_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cupertino_nvr_spark.operators.checkpoint import reliable_checkpoint
-
-    # all three trainers start from the SAME corpus word-frequency
-    # collapse — materialize it once (vocabulary-bounded: one (w, f) row
-    # per distinct word) instead of paying the corpus scan + tokenize +
-    # shuffle three times (r15; guide §2.4)
-    base_words = reliable_checkpoint(_word_freq(spark, sf_dir))
-    _, _, bpe_state = _bpe_train(spark, sf_dir, words=base_words)
-    words, _, word_pieces = _unigram_train(spark, sf_dir, words=base_words)
-    _, wp_state = _wp_train(spark, sf_dir, words=base_words)
-    wptok = _wp_word_tokens(wp_state.select("w"), _wp_vocab(wp_state))
-    bpe = (
-        bpe_state.filter(F.length("w").between(1, _UNI_MAXW))
-        .agg(
-            F.sum("f").cast("bigint").alias("n_words"),
-            F.sum(F.col("f") * F.length("w")).cast("bigint").alias("n_chars"),
-            F.sum(
-                F.col("f") * (F.size(F.split(F.col("enc"), _BPE_SS)) - 2)
+    words = _word_table(spark, sf_dir)
+    eligible = {w: f for w, f in words.items() if 1 <= len(w) <= _UNI_MAXW}
+    _, bpe = merge_train(words, _BPE_MERGES, pair_count)
+    _, wp = merge_train(words, _WP_MERGES, likelihood_micro)
+    init, cont = wordpiece_vocab(wp)
+    units = {
+        "bpe": {w: len(bpe[w]) for w in eligible},
+        "unigram": _unigram(words)[1],
+        "wordpiece": {w: wordpiece_tokens(w, init, cont)[0] for w in eligible},
+    }
+    report = spark.createDataFrame(
+        [
+            (
+                name,
+                sum(eligible[w] for w in n),
+                sum(eligible[w] * len(w) for w in n),
+                sum(eligible[w] * k for w, k in n.items()),
             )
-            .cast("bigint")
-            .alias("n_units"),
-        )
-        .select(F.lit("bpe").alias("tokenizer"), "n_words", "n_chars", "n_units")
+            for name, n in units.items()
+        ],
+        "tokenizer STRING NOT NULL, n_words BIGINT, n_chars BIGINT, "
+        "n_units BIGINT",
     )
-    uni = (
-        words.join(word_pieces.select("w", "n_pieces"), "w")
-        .agg(
-            F.sum("f").cast("bigint").alias("n_words"),
-            F.sum(F.col("f") * F.length("w")).cast("bigint").alias("n_chars"),
-            F.sum(F.col("f") * F.col("n_pieces")).cast("bigint").alias("n_units"),
-        )
-        .select(
-            F.lit("unigram").alias("tokenizer"), "n_words", "n_chars", "n_units"
-        )
-    )
-    wp = (
-        wp_state.filter(F.length("w").between(1, _UNI_MAXW))
-        .join(wptok.select("w", "n_wp"), "w")
-        .agg(
-            F.sum("f").cast("bigint").alias("n_words"),
-            F.sum(F.col("f") * F.length("w")).cast("bigint").alias("n_chars"),
-            F.sum(F.col("f") * F.col("n_wp")).cast("bigint").alias("n_units"),
-        )
-        .select(
-            F.lit("wordpiece").alias("tokenizer"), "n_words", "n_chars", "n_units"
-        )
-    )
-    both = bpe.unionByName(uni).unionByName(wp)
-    return both.select(
+    return report.select(
         "tokenizer",
         "n_words",
         "n_chars",

@@ -1,17 +1,23 @@
-"""Golden test for the distributed BPE trainer: the Spark 6-round result
-must equal a straightforward in-memory reference implementation of
+"""Golden test for the BPE trainer: the query's 6-round result must
+equal a straightforward in-memory reference implementation of
 Sennrich-style BPE (weighted overlapping pair counts over the word-freq
 table, lexicographic tie-break, greedy left-to-right merge application)
 on a corpus that includes the overlapping-run trap ("aaaa" must merge to
-[aa, aa], not [aa, a, a] — the case the doubled-boundary string-replace
-encoding exists to get right)."""
+[aa, aa], not [aa, a, a] — the case the oracle's doubled-boundary
+string-replace encoding exists to get right). Also pins the trainers'
+cost shape: the merge count costs no build job, and a word table over
+the cap fails by name."""
 
 from __future__ import annotations
 
 from collections import Counter
 
-from cupertino_nvr_spark.plans import REGISTRY
+import pytest
+
+from cupertino_nvr_spark.plans import REGISTRY, llm
 from cupertino_nvr_spark.plans.llm import _BPE_MERGES
+from tests.conftest import SF_SMOKE
+from tests.job_count import jobs_run
 
 TOY_TEXT = (
     "low low low low low lower lower "
@@ -73,3 +79,38 @@ def test_bpe_trainer_matches_reference(spark, tmp_path):
     # ...and greedy application leaves [aa, aa], so round 2's (aa, aa)
     # count is 7 — a fold that merged [aa, a, a] would report (aa, a)
     assert ("aa", "aa", "aaaa", 7) in got
+
+
+@pytest.mark.parametrize(
+    "name, merges_const",
+    [
+        ("docs_bpe_train_merges", "_BPE_MERGES"),
+        ("docs_wordpiece_train_merges", "_WP_MERGES"),
+    ],
+)
+def test_merge_count_adds_no_build_jobs(spark, monkeypatch, name, merges_const):
+    """Merge rounds run in memory on the collected word table, so 30
+    merges build with no more Spark jobs than 6."""
+
+    def build(k):
+        monkeypatch.setattr(llm, merges_const, k)
+        return jobs_run(spark, lambda: REGISTRY[name].spark(spark, SF_SMOKE))
+
+    _, jobs_6 = build(6)
+    df, jobs_30 = build(30)
+    assert df.count() > 6  # the larger constant took effect
+    assert jobs_30 <= jobs_6
+
+
+def test_word_table_over_the_cap_raises(spark, tmp_path, monkeypatch):
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(
+        [(1, TOY_TEXT, "en", "toy", len(TOY_TEXT))],
+        "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    ).write.parquet(f"{sf_dir}/documents.parquet")
+    n_words = len(set(TOY_TEXT.split()))
+    monkeypatch.setattr(llm, "_TOKENIZER_MAX_WORDS", n_words - 1)
+    with pytest.raises(ValueError, match=f"_TOKENIZER_MAX_WORDS={n_words - 1}"):
+        REGISTRY["docs_bpe_train_merges"].spark(spark, sf_dir)
+    monkeypatch.setattr(llm, "_TOKENIZER_MAX_WORDS", n_words)
+    assert REGISTRY["docs_bpe_train_merges"].spark(spark, sf_dir).count() == _BPE_MERGES

@@ -133,20 +133,6 @@ ALLOWED_BNLJ = {
     # broadcast-tiny side is the right physical shape for the
     # unordered-pair enumeration
     "event_type_user_overlap_sketch",
-    # two 1-row aggregates (before/after token totals) cross-joined into
-    # the report row; the trainer rounds inside are checkpointed word
-    # tables + 1-row argmax attaches (the same bounded shape)
-    "docs_bpe_compression",
-    # 1-row max-piece-length attach onto the vocabulary-bounded word
-    # table (candidate generation cap); the longest-match table itself
-    # is a broadcast vocabulary equi-join + groupBy-max, and the per-doc
-    # application is a word-keyed equi-join
-    "docs_wordpiece_tokenized_len",
-    # three trainer chains: BPE/WP rounds are checkpointed word tables +
-    # 1-row argmax attaches, plus the WordPiece leg's 1-row
-    # max-piece-length attach above; the three per-tokenizer report rows
-    # are 1-row aggregates unioned
-    "docs_tokenizer_fertility",
     # one extra all-centroids pass by definition: corpus x
     # broadcast(centroids) distances for a/b, centroid count bounded by
     # the IVF stride cap — the eval scales wherever embedding_kmeans does

@@ -25,7 +25,8 @@ ROWS_ONLY_SPECS = sorted(name for name, s in REGISTRY.items() if s.oracle is Non
 # event chain, the touched-this-round dedup/clustering/curation chains,
 # one simhash, one embedding blocking chain, one IVF ANN, the exact
 # brute-force top-k (the block-matmul kernel every brute-force consumer
-# runs), one rollup, one media row.
+# runs), one rollup, one media row, and the tokenizer fertility report
+# (all three trainers plus the WordPiece application).
 SMOKE_SPECS = [
     "asof_ttl_overlay",
     "pricing_summary",
@@ -42,6 +43,7 @@ SMOKE_SPECS = [
     "embedding_ivf_ann",
     "embedding_cosine_topk",
     "media_features",
+    "docs_tokenizer_fertility",
 ]
 
 

@@ -1,5 +1,5 @@
-"""Golden test for the distributed unigram-LM (SentencePiece-style)
-trainer: the Spark 2-round hard-EM result must equal a straightforward
+"""Golden test for the unigram-LM (SentencePiece-style) trainer: the
+query's 2-round hard-EM result must equal a straightforward
 in-memory reference (seed = top-V substrings + all chars, Viterbi E-step
 over fixed-point micro-nat log-probs with the longer-piece tiebreak,
 count/total M-step) on a corpus that exercises the edges: a word longer
@@ -173,7 +173,7 @@ def _brute_best(w: str, vocab: dict[str, int]):
 def test_viterbi_matches_bruteforce_enumeration():
     """Property: on every word up to 7 chars over a small alphabet with a
     randomized-but-deterministic vocab, the reference Viterbi (which the
-    Spark DP is golden-pinned to) must return a maximum-score
+    trainer's DP is golden-pinned to) must return a maximum-score
     segmentation, and its score must equal the brute-force max."""
     import itertools
     import random

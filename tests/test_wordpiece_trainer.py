@@ -1,5 +1,5 @@
-"""Golden test for the distributed WordPiece trainer: the Spark 6-round
-result must equal an in-memory reference of the published objective —
+"""Golden test for the WordPiece trainer: the query's 6-round result
+must equal an in-memory reference of the published objective —
 merge the adjacent pair maximizing count(xy)/(count(x)count(y)), with the
 ratio as fixed-point micro-nats and (l, r) tiebreak — on a corpus where
 the likelihood winner DIFFERS from the raw-frequency (BPE) winner, so the
@@ -134,61 +134,39 @@ def _greedy_wp(w, vinit, vcont):
     return n, False
 
 
-def test_wordpiece_application_matches_reference(spark, tmp_path):
-    from cupertino_nvr_spark.plans.llm import (
-        _wp_train,
-        _wp_vocab,
-        _wp_word_tokens,
+def test_wordpiece_application_matches_reference():
+    from cupertino_nvr_spark.llm.tokenizers import (
+        likelihood_micro,
+        merge_train,
+        wordpiece_tokens,
+        wordpiece_vocab,
     )
 
-    sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        [(1, TOY_TEXT, "en", "toy", len(TOY_TEXT))],
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    ).write.parquet(f"{sf_dir}/documents.parquet")
-
-    _, state = _wp_train(spark, sf_dir)
-    vocab = _wp_vocab(state)
-    got = {
-        r["w"]: (r["n_wp"], r["unk"])
-        for r in _wp_word_tokens(state.select("w"), vocab).collect()
-    }
-
     words = Counter(TOY_TEXT.split())
+    _, segs = merge_train(dict(words), _WP_MERGES, likelihood_micro)
+    init, cont = wordpiece_vocab(segs)
+    got = {w: wordpiece_tokens(w, init, cont) for w in segs}
+
     merges = _reference_wordpiece(dict(words), _WP_MERGES)
     ref_state = _apply_merges(set(words), merges)
     vinit, vcont = _mk_vocab(ref_state)
-    expected = {
-        w: (lambda t: (t[0], int(t[1])))(_greedy_wp(w, vinit, vcont))
-        for w in words
-    }
-    assert got == expected
+    assert got == {w: _greedy_wp(w, vinit, vcont) for w in words}
     # training-corpus words never hit UNK (alphabet in both classes)
-    assert all(u == 0 for _, u in got.values())
+    assert not any(unk for _, unk in got.values())
 
 
-def test_wordpiece_application_unk_path(spark, tmp_path):
+def test_wordpiece_application_unk_path():
     """A word with an out-of-alphabet character takes the whole-word
-    [UNK] path (n_wp = 1, unk = 1) — the published BERT rule."""
-    from cupertino_nvr_spark.plans.llm import (
-        _wp_train,
-        _wp_vocab,
-        _wp_word_tokens,
+    [UNK] path (one token, flagged) — the published BERT rule."""
+    from cupertino_nvr_spark.llm.tokenizers import (
+        likelihood_micro,
+        merge_train,
+        wordpiece_tokens,
+        wordpiece_vocab,
     )
 
-    sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        [(1, TOY_TEXT, "en", "toy", len(TOY_TEXT))],
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    ).write.parquet(f"{sf_dir}/documents.parquet")
-
-    _, state = _wp_train(spark, sf_dir)
-    vocab = _wp_vocab(state)
-    out = {
-        r["w"]: (r["n_wp"], r["unk"])
-        for r in _wp_word_tokens(
-            spark.createDataFrame([("ban0na",), ("banana",)], "w string"), vocab
-        ).collect()
-    }
-    assert out["ban0na"] == (1, 1)  # '0' is outside the toy alphabet
-    assert out["banana"][1] == 0
+    words = dict(Counter(TOY_TEXT.split()))
+    init, cont = wordpiece_vocab(merge_train(words, _WP_MERGES, likelihood_micro)[1])
+    # '0' is outside the toy alphabet
+    assert wordpiece_tokens("ban0na", init, cont) == (1, True)
+    assert wordpiece_tokens("banana", init, cont)[1] is False
